@@ -13,7 +13,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rle_array_spark.chooser import DEFAULT_THRESHOLD, choose_codec_batch
@@ -284,6 +284,20 @@ def salted_repartition(
     partitions left a 4.4×-median straggler partition; 8×num_partitions
     brings max/median under ~1.6).
     """
+    return df.repartition(num_partitions, *_salted_keys(df, num_partitions, salt_buckets))
+
+
+def salted_partition_id(df: DataFrame, num_partitions: int) -> Column:
+    """The partition :func:`salted_repartition` sends each row of ``df``
+    to, as a column: Spark's hash partitioner is ``pmod(hash(keys), P)``
+    (Murmur3, seed 42 — the same function as SQL ``hash``), so this needs
+    no shuffle."""
+    return F.pmod(F.hash(*_salted_keys(df, num_partitions)), F.lit(num_partitions))
+
+
+def _salted_keys(
+    df: DataFrame, num_partitions: int, salt_buckets: int | None = None
+) -> list[Column]:
     if salt_buckets is None:
         salt_buckets = num_partitions * 8
     length_col = "n_tok" if "n_tok" in df.columns else "n_values"
@@ -294,7 +308,7 @@ def salted_repartition(
         [F.col("chunk_idx")] if "chunk_idx" in df.columns else []
     )
     salt = F.pmod(F.xxhash64(*salt_cols), F.lit(salt_buckets))
-    return df.repartition(num_partitions, F.col("source"), length_bucket, salt)
+    return [F.col("source"), length_bucket, salt]
 
 
 # ---------------------------------------------------------------------------

@@ -435,6 +435,8 @@ def main(argv: list[str] | None = None) -> int:
         s.add_argument("--cores", default="*")
 
     args = p.parse_args(argv)
+    if args.cmd == "stream" and args.state_partitions is not None and args.op in ("encode", "dedup"):
+        p.error(f"--state-partitions applies to --op stats, quantiles or pack, not {args.op}")
     return {
         "encode": cmd_encode,
         "decode": cmd_decode,

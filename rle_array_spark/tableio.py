@@ -8,15 +8,24 @@ on a cluster with an Iceberg catalog this module is the only seam to swap
 - **Immutable data files** named ``part-{pid}-{fingerprint16}.parquet``
   where the fingerprint covers the partition's input rows AND the encode
   parameters — changing codec/threshold/chunking produces new files and
-  never rewrites old ones;
+  never rewrites old ones. Only row metadata enters the fingerprint:
+  doc_id, value count and chunk index, never the values;
 - **Snapshot manifests** ``snapshots/v{N}.json`` list the exact data files
   of a committed version; ``_manifest.json`` is the atomic latest pointer.
   Readers only ever see complete snapshots (a crashed job leaves data files
-  but no snapshot — invisible);
+  but no snapshot — invisible). A committer owns version N by creating
+  ``snapshots/v{N}.claim`` exclusively (``O_EXCL``) and renames the
+  snapshot into place, so concurrent committers take distinct versions and
+  the pointer ends on the newest;
 - **Checkpointed resume** (north_rule): each partition commits atomically
-  (tmp → rename) with a lineage sidecar; a restarted job recomputes each
-  partition's fingerprint, finds the sidecar committed, and skips the
-  encode + write. Partition contents are deterministic (salted hash
+  (tmp → rename) with a lineage sidecar. A rerun of the configuration the
+  latest snapshot was written with first fingerprints every partition
+  from row metadata alone — no encode, no payload shuffle — and checks
+  each against its committed record (:func:`committed_record`). When
+  every partition hits, the rerun commits a new snapshot from those
+  records and stops. Otherwise the full write runs: rows are encoded and shuffled, and
+  the write kernel skips each partition already committed (the encode of
+  those rows is spent). Partition contents are deterministic (salted hash
   repartition + doc_id/chunk sort), so reruns are byte-identical;
 - **Time travel**: ``read_blocks(spark, dir, snapshot=N)``;
 - **Vacuum**: delete data files referenced by no snapshot.
@@ -28,18 +37,21 @@ import glob
 import hashlib
 import json
 import os
+import threading
 import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
 from rle_array_spark.engine import (
     _encode_batch,
     encode_df,
     pack_tokens_df,
+    salted_partition_id,
     salted_repartition,
 )
 
@@ -70,6 +82,15 @@ LINEAGE_SCHEMA = (
 )
 
 
+def _params_hash(params_key: str) -> int:
+    return int.from_bytes(hashlib.sha256(params_key.encode()).digest()[:16], "little")
+
+
+def _row_hash(doc_id: str, chunk_idx: int, n: int, params_key: str) -> int:
+    h = hashlib.sha256(f"{doc_id}:{chunk_idx}:{n}:{params_key}".encode()).digest()[:16]
+    return int.from_bytes(h, "little")
+
+
 def _fingerprint(
     doc_ids: list[str], n_toks: list[int], chunk_idxs: list[int], params_key: str
 ) -> str:
@@ -77,11 +98,47 @@ def _fingerprint(
     params (chunk_idx included so two equal-length chunks of one doc don't
     XOR-cancel; params included so a codec/threshold change produces new
     immutable files instead of silently reusing stale ones)."""
-    acc = int.from_bytes(hashlib.sha256(params_key.encode()).digest()[:16], "little")
+    acc = _params_hash(params_key)
     for d, n, c in zip(doc_ids, n_toks, chunk_idxs):
-        h = hashlib.sha256(f"{d}:{c}:{n}:{params_key}".encode()).digest()[:16]
-        acc ^= int.from_bytes(h, "little")
+        acc ^= _row_hash(d, c, n, params_key)
     return f"{acc:032x}"
+
+
+def _block_fingerprint(batches: list[pa.RecordBatch], params_key: str, length_field: str) -> str:
+    """Token-writer partition fingerprint: (doc_id, ``length_field``,
+    chunk_idx) of every row."""
+    doc_ids: list[str] = []
+    lengths: list[int] = []
+    chunk_idxs: list[int] = []
+    for b in batches:
+        doc_ids.extend(b.column("doc_id").to_pylist())
+        lengths.extend(b.column(length_field).to_pylist())
+        chunk_idxs.extend(b.column("chunk_idx").to_pylist())
+    return _fingerprint(doc_ids, lengths, chunk_idxs, params_key)
+
+
+def _table_fingerprint(batches: list[pa.RecordBatch], params_key: str, n_value_cols: list[str]) -> str:
+    """Table-writer partition fingerprint over rows in their sorted order:
+    doc_id, the value count summed over ``n_value_cols``, and the row
+    ordinal in the chunk slot (with a constant there, two rows with equal
+    (doc_id, count) would XOR-cancel and adding or removing such a pair
+    would reuse a stale data file)."""
+    doc_ids: list[str] = []
+    lengths: list[int] = []
+    for b in batches:
+        doc_ids.extend(b.column("doc_id").to_pylist())
+        total = sum(b.column(c).to_numpy(zero_copy_only=False).astype("int64") for c in n_value_cols)
+        lengths.extend(int(x) for x in total)
+    return _fingerprint(doc_ids, lengths, list(range(len(doc_ids))), params_key)
+
+
+# Lineage totals a writer's data file can carry; a writer's ``stats`` maps
+# each (and "codec", for the histogram) to the columns that hold it.
+_TOTALS = ("n_tokens", "raw_bytes", "encoded_bytes", "ref_rle_bytes", "tok_sum")
+_BLOCK_STATS = {
+    "codec": ["codec"], "n_tokens": ["n_values"], "raw_bytes": ["raw_bytes"],
+    "encoded_bytes": ["encoded_bytes"], "ref_rle_bytes": ["ref_rle_bytes"], "tok_sum": ["tok_sum"],
+}
 
 
 def _data_path(out_dir: str, part_id: int, fp: str) -> str:
@@ -111,8 +168,6 @@ def auto_chunk_tokens(df: DataFrame, num_partitions: int) -> int | None:
     1 Mi-token chunks left max/ideal at 7.6 on a giant-dominated corpus,
     256 Ki brought it to 2.8). Returns None when no row would ever split —
     keeps the fingerprint/params identity of plain unchunked runs."""
-    from pyspark.sql import functions as F
-
     row = df.agg(
         F.sum(F.col("n_tok").cast("long")).alias("total"),
         F.max("n_tok").alias("longest"),
@@ -138,8 +193,18 @@ def encode_to_dir(
 ) -> list[dict]:
     """Encode a sequences DataFrame into ``out_dir`` (one immutable parquet
     file + lineage sidecar per partition), commit a new snapshot, and return
-    the lineage records. Safe to re-run after a failure; re-running an
-    already-committed configuration is a full checkpoint hit.
+    the lineage records. Safe to re-run after a failure.
+
+    Re-running an already-committed configuration is a full checkpoint hit
+    and costs one JVM aggregate over the row metadata: when the latest
+    snapshot in ``out_dir`` was written with these parameters, every
+    partition is fingerprinted from doc_id, token count and chunk index
+    alone (:func:`_salted_fingerprints`), and if each one matches its
+    committed record the run commits a new snapshot of those records (all
+    ``skipped``) without encoding. Any other run — the first write, a rerun
+    after a crashed first write, new parameters, a changed input — runs the
+    full write below; its kernel skips the partitions already committed,
+    after their rows were encoded and shuffled.
 
     ``chunk_tokens="auto"`` sizes chunks from the corpus shape (see
     :func:`auto_chunk_tokens`); the resolved value enters the params
@@ -172,70 +237,36 @@ def encode_to_dir(
       names). Both modes produce byte-identical data files and can resume
       each other's partial runs (sidecar-mode reruns re-encode
       manifest-written partitions at worst — never corrupt them)."""
-    if commit_mode not in ("sidecar", "manifest"):
-        raise ValueError(f"commit_mode must be 'sidecar' or 'manifest', got {commit_mode!r}")
+    _prepare_dir(out_dir, commit_mode)
     if chunk_tokens == "auto":
         chunk_tokens = auto_chunk_tokens(df, num_partitions)
-    os.makedirs(os.path.join(out_dir, "blocks"), exist_ok=True)
-    os.makedirs(os.path.join(out_dir, "lineage"), exist_ok=True)
-    os.makedirs(os.path.join(out_dir, "snapshots"), exist_ok=True)
     params_key = (
         f"{codec}|{threshold}|{num_partitions}|{chunk_tokens}|ef={int(encode_first)}"
     )
+    meta = {"codec": codec, "threshold": threshold,
+            "num_partitions": num_partitions, "chunk_tokens": chunk_tokens}
+    # the length column each path shuffles: encoded blocks carry n_values,
+    # packed tokens n_tok (both the chunk's value count)
+    length_field = "n_values" if encode_first else "n_tok"
 
+    snap = _latest_snapshot_of(out_dir, params_key)
+    if snap is not None:
+        rows = _chunk_rows(df, chunk_tokens, length_field)
+        fps = _salted_fingerprints(rows, length_field, num_partitions, params_key)
+        hits = _committed_records(out_dir, fps, commit_mode, _BLOCK_STATS, params_key)
+        if hits is not None:
+            return _commit_snapshot(out_dir, meta, params_key, hits)
+
+    src = df.select("doc_id", "tokens", "n_tok", "source")
     if encode_first:
         parted = salted_repartition(
-            encode_df(
-                df.select("doc_id", "tokens", "n_tok", "source"),
-                codec=codec,
-                threshold=threshold,
-                chunk_tokens=chunk_tokens,
-            ),
+            encode_df(src, codec=codec, threshold=threshold, chunk_tokens=chunk_tokens),
             num_partitions,
         )
     else:
-        parted = salted_repartition(
-            pack_tokens_df(
-                df.select("doc_id", "tokens", "n_tok", "source"),
-                chunk_tokens=chunk_tokens,
-            ),
-            num_partitions,
-        )
+        parted = salted_repartition(pack_tokens_df(src, chunk_tokens=chunk_tokens), num_partitions)
 
-    def kernel(batches):
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else 0
-        t0 = time.monotonic()
-        in_batches = [b for b in batches if b.num_rows]
-        length_field = "n_values" if encode_first else "n_tok"
-        doc_ids: list[str] = []
-        n_toks: list[int] = []
-        chunk_idxs: list[int] = []
-        for b in in_batches:
-            doc_ids.extend(b.column("doc_id").to_pylist())
-            n_toks.extend(b.column(length_field).to_pylist())
-            chunk_idxs.extend(b.column("chunk_idx").to_pylist())
-        fp = _fingerprint(doc_ids, n_toks, chunk_idxs, params_key)
-        data_path = _data_path(out_dir, part_id, fp)
-        lineage_path = _lineage_path(out_dir, part_id, fp)
-
-        if commit_mode == "sidecar":
-            if os.path.exists(lineage_path) and os.path.exists(data_path):
-                with open(lineage_path) as f:
-                    rec = json.load(f)
-                if rec.get("fingerprint") == fp:
-                    rec["status"] = "skipped"  # checkpoint hit: no re-encode
-                    yield _lineage_batch(rec)
-                    return
-        else:  # manifest mode: the self-certifying data file IS the checkpoint
-            rec = _stats_from_data_file(data_path, part_id, fp)
-            if rec is not None:
-                yield _lineage_batch(rec)
-                return
-
-        if fail_at_partition is not None and part_id == fail_at_partition:
-            raise InjectedFailure(f"injected failure at partition {part_id}")
-
+    def build(in_batches: list[pa.RecordBatch]) -> pa.Table:
         if not in_batches:
             table = BLOCKS_ARROW_SCHEMA.empty_table()
         elif encode_first:  # rows arrive already encoded — just assemble
@@ -251,81 +282,259 @@ def encode_to_dir(
             )
         # Deterministic file bytes: sort by (doc_id, chunk_idx) so reruns
         # are byte-identical.
-        table = table.sort_by([("doc_id", "ascending"), ("chunk_idx", "ascending")])
+        return table.sort_by([("doc_id", "ascending"), ("chunk_idx", "ascending")])
+
+    kernel = _write_kernel(
+        out_dir, commit_mode, fail_at_partition,
+        lambda batches: _block_fingerprint(batches, params_key, length_field), _BLOCK_STATS, build,
+    )
+    lineage_rows = [r.asDict() for r in parted.mapInArrow(kernel, LINEAGE_SCHEMA).collect()]
+    return _commit_snapshot(out_dir, meta, params_key, lineage_rows)
+
+
+def _chunk_rows(df: DataFrame, chunk_tokens: int | None, length_field: str) -> DataFrame:
+    """(doc_id, source, ``length_field``, chunk_idx): the rows the write path
+    shuffles, from metadata alone — the value count is ``F.size(tokens)``
+    and chunks follow :func:`pack_tokens_df` (n ≤ k → one chunk, else
+    ⌈n/k⌉ chunks of k with the remainder last). Columns are int, as there."""
+    n = F.size("tokens")
+    if not chunk_tokens:
+        return df.select("doc_id", "source", n.alias(length_field), F.lit(0).alias("chunk_idx"))
+    k = F.lit(chunk_tokens)
+    n_chunks = F.greatest(F.lit(1), F.ceil(n / k).cast("int"))
+    return df.select(
+        "doc_id", "source", n.alias("n"),
+        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
+    ).select(
+        "doc_id", "source",
+        F.least(k, F.col("n") - F.col("chunk_idx") * k).alias(length_field),
+        "chunk_idx",
+    )
+
+
+def _salted_fingerprints(
+    rows: DataFrame, length_field: str, num_partitions: int, params_key: str
+) -> list[str]:
+    """Each partition's fingerprint over :func:`_chunk_rows` ``rows`` as
+    :func:`salted_repartition` would place them, in one JVM aggregate that
+    moves no rows: the fingerprint is an XOR over :func:`_row_hash`, so the
+    rows are grouped by their target partition id and XOR ``sha2`` of the
+    same string, the 16 hash bytes as two 8-byte halves (``conv`` to base
+    -10 reads 16 hex digits as a signed long; XOR is bytewise, so the byte
+    order is fixed up once, here)."""
+    row = F.concat_ws(
+        ":", F.coalesce(F.col("doc_id"), F.lit("None")), F.col("chunk_idx").cast("string"),
+        F.col(length_field).cast("string"), F.lit(params_key),
+    )
+    h = F.sha2(row, 256)
+    parts = rows.groupBy(salted_partition_id(rows, num_partitions).alias("part_id")).agg(*[
+        F.bit_xor(F.conv(F.substring(h, 1 + 16 * j, 16), 16, -10).cast("long")).alias(f"x{j}")
+        for j in (0, 1)
+    ])
+    acc = [_params_hash(params_key)] * num_partitions
+    for r in parts.collect():
+        acc[r["part_id"]] ^= int.from_bytes(
+            b"".join((r[f"x{j}"] & (2**64 - 1)).to_bytes(8, "big") for j in (0, 1)), "little"
+        )
+    return [f"{x:032x}" for x in acc]
+
+
+def _write_kernel(out_dir, commit_mode, fail_at_partition, fingerprint, stats, build):
+    """The mapInArrow body both writers share: ``fingerprint`` the
+    partition, return its committed record on a hit, else ``build`` the
+    data table (None: nothing to write) and commit it. ``stats`` names the
+    writer's lineage columns (see :data:`_BLOCK_STATS`)."""
+
+    def kernel(batches):
+        ctx = TaskContext.get()
+        part_id = ctx.partitionId() if ctx is not None else 0
+        t0 = time.monotonic()
+        in_batches = [b for b in batches if b.num_rows]
+        fp = fingerprint(in_batches)
+        rec = committed_record(out_dir, part_id, fp, commit_mode, stats, empty=not in_batches)
+        if rec is not None:
+            yield _lineage_batch(rec)  # checkpoint hit: no re-encode
+            return
+        if part_id == fail_at_partition:
+            raise InjectedFailure(f"injected failure at partition {part_id}")
+        table = build(in_batches)
+        if table is None:
+            yield _lineage_batch(_lineage_record(pa.table({}), part_id, fp, "encoded", stats, t0))
+            return
+        data_path = _data_path(out_dir, part_id, fp)
         tmp_path = data_path + f".tmp-{os.getpid()}"
         pq.write_table(table, tmp_path)
         os.replace(tmp_path, data_path)
-
-        hist: dict[str, int] = {}
-        for c in table.column("codec").to_pylist():
-            hist[c] = hist.get(c, 0) + 1
-        rec = {
-            "part_id": part_id,
-            "status": "encoded",
-            "fingerprint": fp,
-            "n_rows": table.num_rows,
-            "n_tokens": int(_col_sum(table, "n_values")),
-            "raw_bytes": int(_col_sum(table, "raw_bytes")),
-            "encoded_bytes": int(_col_sum(table, "encoded_bytes")),
-            "ref_rle_bytes": int(_col_sum(table, "ref_rle_bytes")),
-            "tok_sum": int(_col_sum(table, "tok_sum")),
-            "codec_histogram": json.dumps(hist, sort_keys=True),
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-        }
+        rec = _lineage_record(table, part_id, fp, "encoded", stats, t0)
         if commit_mode == "sidecar":
-            tmp_lineage = lineage_path + f".tmp-{os.getpid()}"
-            with open(tmp_lineage, "w") as f:
-                json.dump(rec, f)
-            os.replace(tmp_lineage, lineage_path)
+            _write_json(_lineage_path(out_dir, part_id, fp), rec)
         yield _lineage_batch(rec)
 
-    lineage_rows = [r.asDict() for r in parted.mapInArrow(kernel, LINEAGE_SCHEMA).collect()]
-    lineage_rows.sort(key=lambda r: r["part_id"])
+    return kernel
 
-    # Commit: write the next snapshot, then atomically bump the pointer.
-    existing = sorted(glob.glob(os.path.join(out_dir, "snapshots", "v*.json")))
-    version = 1 + max(
-        (int(os.path.basename(p)[1:-5]) for p in existing), default=0
-    )
+
+def committed_record(
+    out_dir: str, part_id: int, fp: str, commit_mode: str, stats: dict, empty: bool = False
+) -> dict | None:
+    """The committed lineage record of partition ``part_id`` at fingerprint
+    ``fp``, with status ``skipped``, or None when it must be encoded.
+
+    Sidecar mode trusts a sidecar next to its data file; manifest mode
+    rebuilds the record from the data file's ``stats`` columns. Either way
+    an ``empty`` partition that wrote no file (the table writer's) is a hit
+    when the latest snapshot recorded it with this fingerprint."""
+    data_path = _data_path(out_dir, part_id, fp)
+    if commit_mode == "sidecar":
+        lineage_path = _lineage_path(out_dir, part_id, fp)
+        if os.path.exists(lineage_path) and os.path.exists(data_path):
+            with open(lineage_path) as f:
+                rec = json.load(f)
+            if rec.get("fingerprint") == fp:
+                return {**rec, "status": "skipped"}
+    else:  # manifest mode: the self-certifying data file IS the checkpoint
+        rec = _stats_from_data_file(data_path, part_id, fp, stats)
+        if rec is not None:
+            return rec
+    if not empty:
+        return None
+    try:
+        latest = read_manifest(out_dir)["partitions"]
+    except FileNotFoundError:
+        return None
+    for rec in latest:
+        if rec["part_id"] == part_id and rec["fingerprint"] == fp:
+            return {**rec, "status": "skipped"}
+    return None
+
+
+def _committed_records(
+    out_dir: str, fingerprints: list[str], commit_mode: str, stats: dict, params_key: str
+) -> list[dict] | None:
+    """Every partition's committed record, or None at the first miss."""
+    empty_fp = _fingerprint([], [], [], params_key)
+    recs = []
+    for part_id, fp in enumerate(fingerprints):
+        rec = committed_record(out_dir, part_id, fp, commit_mode, stats, empty=fp == empty_fp)
+        if rec is None:
+            return None
+        recs.append(rec)
+    return recs
+
+
+def _prepare_dir(out_dir: str, commit_mode: str) -> None:
+    if commit_mode not in ("sidecar", "manifest"):
+        raise ValueError(f"commit_mode must be 'sidecar' or 'manifest', got {commit_mode!r}")
+    for sub in ("blocks", "lineage", "snapshots"):
+        os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
+
+
+def _latest_snapshot_of(out_dir: str, params_key: str) -> dict | None:
+    """The latest snapshot when it was written with ``params_key``, else
+    None. A full hit reruns the committed configuration, so without one the
+    metadata checks are skipped: a rerun after a crashed first write, or
+    with new parameters, pays nothing for them."""
+    try:
+        snap = read_snapshot(out_dir)
+    except FileNotFoundError:
+        return None
+    return snap if snap.get("params_key") == params_key else None
+
+
+def _write_json(path: str, obj, indent: int | None = None) -> None:
+    """Replace ``path`` with ``obj`` through a tmp file private to this
+    process and thread, so readers never see a partial file."""
+    tmp = f"{path}.tmp-{os.getpid()}-{threading.get_ident()}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=indent)
+    os.replace(tmp, path)
+
+
+def _claim(path: str) -> bool:
+    """Create ``path`` empty if absent (O_EXCL); False when it exists."""
+    try:
+        os.close(os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        return True
+    except FileExistsError:
+        return False
+
+
+def _latest_version(out_dir: str) -> int:
+    paths = glob.glob(os.path.join(out_dir, "snapshots", "v*.json"))
+    return max((int(os.path.basename(p)[1:-5]) for p in paths), default=0)
+
+
+def _commit_snapshot(out_dir: str, meta: dict, params_key: str, lineage_rows: list[dict]) -> list[dict]:
+    """Commit ``lineage_rows`` as the next snapshot, then point
+    ``_manifest.json`` at the newest one. Returns the rows by part_id.
+
+    A committer owns version N once it creates ``v{N}.claim`` exclusively;
+    one that loses the race for N tries N+1, so concurrent commits never
+    overwrite each other. The snapshot then replaces into ``v{N}.json``
+    (rename only — no hard links, which fuse mounts of HDFS or object
+    stores lack). Each committer re-checks the newest version after
+    replacing the pointer and repeats until they agree; the last pointer
+    write is thus always the newest snapshot's."""
+    lineage_rows = sorted(lineage_rows, key=lambda r: r["part_id"])
+    files = []
+    for r in lineage_rows:
+        path = _data_path(out_dir, r["part_id"], r["fingerprint"])
+        if r["n_rows"] > 0 or os.path.exists(path):  # an empty table-writer partition has none
+            files.append(os.path.basename(path))
+    snapshots = os.path.join(out_dir, "snapshots")
+    version = 1 + _latest_version(out_dir)
+    while not _claim(os.path.join(snapshots, f"v{version}.claim")):
+        version += 1
     snapshot = {
         "version": version,
-        "parent": version - 1 if existing else None,
-        "codec": codec,
-        "threshold": threshold,
-        "num_partitions": num_partitions,
-        "chunk_tokens": chunk_tokens,
+        "parent": version - 1 or None,
+        **meta,
         "params_key": params_key,
-        "files": [
-            os.path.basename(_data_path(out_dir, r["part_id"], r["fingerprint"]))
-            for r in lineage_rows
-        ],
+        "files": files,
         "partitions": lineage_rows,
     }
-    snap_path = os.path.join(out_dir, "snapshots", f"v{version}.json")
-    with open(snap_path + ".tmp", "w") as f:
-        json.dump(snapshot, f, indent=1)
-    os.replace(snap_path + ".tmp", snap_path)
-    pointer = {"latest": version, **{k: snapshot[k] for k in ("codec", "threshold", "num_partitions", "chunk_tokens")}, "partitions": lineage_rows}
-    tmp_manifest = os.path.join(out_dir, "_manifest.json.tmp")
-    with open(tmp_manifest, "w") as f:
-        json.dump(pointer, f, indent=1)
-    os.replace(tmp_manifest, os.path.join(out_dir, "_manifest.json"))
-    return lineage_rows
+    _write_json(os.path.join(snapshots, f"v{version}.json"), snapshot, indent=1)
+    while True:
+        version = _latest_version(out_dir)
+        snapshot = read_snapshot(out_dir, version)
+        pointer = {"latest": version, **{
+            k: v for k, v in snapshot.items() if k not in ("version", "parent", "params_key", "files")
+        }}
+        _write_json(os.path.join(out_dir, "_manifest.json"), pointer, indent=1)
+        if _latest_version(out_dir) == version:
+            return lineage_rows
 
 
-_STATS_COLUMNS = ["codec", "n_values", "raw_bytes", "encoded_bytes", "ref_rle_bytes", "tok_sum"]
+def _lineage_record(table: pa.Table, part_id: int, fp: str, status: str, stats: dict,
+                    t0: float | None = None) -> dict:
+    """Lineage totals of a partition's data table, summed over the columns
+    ``stats`` names (a total it does not name is 0); ``wall_ms`` since
+    ``t0`` (0 when the record is rebuilt from a committed file)."""
+    hist: dict[str, int] = {}
+    for n in stats["codec"] if table.num_rows else ():
+        for c in table.column(n).to_pylist():
+            hist[c] = hist.get(c, 0) + 1
+    return {
+        "part_id": part_id,
+        "status": status,
+        "fingerprint": fp,
+        "n_rows": table.num_rows,
+        **{t: int(sum(_col_sum(table, n) for n in stats.get(t, ()))) for t in _TOTALS},
+        "codec_histogram": json.dumps(hist, sort_keys=True),
+        "wall_ms": 0 if t0 is None else int((time.monotonic() - t0) * 1000),
+    }
 
 
-def _stats_from_data_file(data_path: str, part_id: int, fp: str) -> dict | None:
+def _stats_from_data_file(data_path: str, part_id: int, fp: str,
+                          stats: dict = _BLOCK_STATS) -> dict | None:
     """Manifest-mode skip-check: rebuild the lineage record from a committed
-    data file's own metadata columns (a bounded, partition-local read —
-    never the payloads). Returns None when the file is absent or unreadable
+    data file's ``stats`` columns (a bounded, partition-local read — never
+    the payloads). Returns None when the file is absent or unreadable
     (torn mid-write crash on a filesystem without atomic rename) — the torn
-    file is removed so the caller's re-encode rewrites it cleanly."""
+    file is moved aside so the caller's re-encode rewrites it cleanly."""
     if not os.path.exists(data_path):
         return None
     try:
-        t = pq.read_table(data_path, columns=_STATS_COLUMNS)
+        t = pq.read_table(data_path, columns=[n for cols in stats.values() for n in cols])
     except pa.lib.ArrowInvalid:
         # Genuinely corrupt parquet (torn mid-write on a filesystem without
         # atomic rename): quarantine under .corrupt rather than delete, so
@@ -338,22 +547,7 @@ def _stats_from_data_file(data_path: str, part_id: int, fp: str) -> dict | None:
         # the file may be perfectly valid — leave it in place; re-encode
         # overwrites it atomically.
         return None
-    hist: dict[str, int] = {}
-    for c in t.column("codec").to_pylist():
-        hist[c] = hist.get(c, 0) + 1
-    return {
-        "part_id": part_id,
-        "status": "skipped",
-        "fingerprint": fp,
-        "n_rows": t.num_rows,
-        "n_tokens": int(_col_sum(t, "n_values")),
-        "raw_bytes": int(_col_sum(t, "raw_bytes")),
-        "encoded_bytes": int(_col_sum(t, "encoded_bytes")),
-        "ref_rle_bytes": int(_col_sum(t, "ref_rle_bytes")),
-        "tok_sum": int(_col_sum(t, "tok_sum")),
-        "codec_histogram": json.dumps(hist, sort_keys=True),
-        "wall_ms": 0,
-    }
+    return _lineage_record(t, part_id, fp, "skipped", stats)
 
 
 def _col_sum(table: pa.Table, name: str) -> int:
@@ -420,6 +614,8 @@ def vacuum(out_dir: str, keep_snapshots: int | None = None) -> list[str]:
     if keep_snapshots is not None and len(snaps) > keep_snapshots:
         for p in snaps[:-keep_snapshots]:
             os.remove(p)
+            if os.path.exists(p[:-5] + ".claim"):
+                os.remove(p[:-5] + ".claim")
         snaps = snaps[-keep_snapshots:]
     referenced: set[str] = set()
     for p in snaps:
@@ -455,191 +651,92 @@ def encode_table_to_dir(
     (tableframe.encode_table_df): every array column under its codec
     family, one wide row per input row, written as one immutable parquet
     file per partition with the same snapshot/lineage/resume discipline as
-    :func:`encode_to_dir`.
+    :func:`encode_to_dir`, including the metadata-only full-hit check
+    (here the doc_id rows go through the same hash repartition and sort,
+    because the fingerprint numbers rows in sorted order).
 
     Encode-first by construction: columns are encoded at scan parallelism
     and the shuffle moves encoded wide rows (binary payloads), keyed by a
     deterministic hash repartition on doc_id. Frame rows are assumed
     bounded (no chunking — chunk upstream or use the single-column path
     for giant-sequence corpora). Lineage totals aggregate across all
-    encoded columns."""
-    from pyspark.sql import functions as F
-
+    encoded columns (values and encoded bytes; the raw-side totals stay 0).
+    An empty partition writes no file."""
     from rle_array_spark.tableframe import encode_table_df, table_schema
 
-    if commit_mode not in ("sidecar", "manifest"):
-        raise ValueError(f"commit_mode must be 'sidecar' or 'manifest', got {commit_mode!r}")
-    os.makedirs(os.path.join(out_dir, "blocks"), exist_ok=True)
-    os.makedirs(os.path.join(out_dir, "lineage"), exist_ok=True)
-    os.makedirs(os.path.join(out_dir, "snapshots"), exist_ok=True)
+    _prepare_dir(out_dir, commit_mode)
     wide_ddl, kinds = table_schema(df, cols)
     params_key = (
         f"table|{codec}|{num_partitions}|{','.join(f'{c}:{kinds[c]}' for c in cols)}"
     )
-
-    blocks = encode_table_df(df, cols, codec=codec)
-    parted = blocks.repartition(num_partitions, "doc_id").sortWithinPartitions("doc_id")
-
+    meta = {"codec": codec, "table_cols": {c: kinds[c] for c in cols},
+            "table_schema": wide_ddl, "num_partitions": num_partitions}
     n_value_cols = [f"{c}__n_values" for c in cols]
-    enc_cols = [f"{c}__encoded_bytes" for c in cols]
+    stats = {"codec": [f"{c}__codec" for c in cols], "n_tokens": n_value_cols,
+             "encoded_bytes": [f"{c}__encoded_bytes" for c in cols]}
+
+    snap = _latest_snapshot_of(out_dir, params_key)
+    if snap is not None:
+        sizes = df.select("doc_id", *[F.size(c).alias(n) for c, n in zip(cols, n_value_cols)])
+        if _totals_match(snap, sizes, n_value_cols):
+            fps = _doc_fingerprints(sizes, n_value_cols, num_partitions, params_key)
+            hits = _committed_records(out_dir, fps, commit_mode, stats, params_key)
+            if hits is not None:
+                return _commit_snapshot(out_dir, meta, params_key, hits)
+
+    def build(in_batches: list[pa.RecordBatch]) -> pa.Table | None:
+        if not in_batches:
+            return None
+        return pa.Table.from_batches(in_batches).sort_by([("doc_id", "ascending")])
+
+    kernel = _write_kernel(
+        out_dir, commit_mode, fail_at_partition,
+        lambda batches: _table_fingerprint(batches, params_key, n_value_cols), stats, build,
+    )
+    parted = _by_doc(encode_table_df(df, cols, codec=codec), num_partitions)
+    lineage_rows = [r.asDict() for r in parted.mapInArrow(kernel, LINEAGE_SCHEMA).collect()]
+    return _commit_snapshot(out_dir, meta, params_key, lineage_rows)
+
+
+def _by_doc(rows: DataFrame, num_partitions: int) -> DataFrame:
+    return rows.repartition(num_partitions, "doc_id").sortWithinPartitions("doc_id")
+
+
+def _totals_match(snap: dict, sizes: DataFrame, n_value_cols: list[str]) -> bool:
+    """Whether the input has the snapshot's row and value totals, observed
+    on a no-op write (one scan stage in the JVM, no shuffle, no Python
+    worker): the table writer's check before its fingerprint pass, which
+    needs a shuffle because its row hashes number rows in sorted order."""
+    obs = Observation()
+    sizes.observe(
+        obs, F.count(F.lit(1)).alias("rows"),
+        F.sum(sum(F.col(c).cast("long") for c in n_value_cols)).alias("values"),
+    ).write.format("noop").mode("overwrite").save()
+    parts = snap["partitions"]
+    return (obs.get["rows"], obs.get["values"] or 0) == (
+        sum(r["n_rows"] for r in parts), sum(r["n_tokens"] for r in parts))
+
+
+def _doc_fingerprints(
+    sizes: DataFrame, n_value_cols: list[str], num_partitions: int, params_key: str
+) -> list[str]:
+    """Each partition's table-writer fingerprint from the (doc_id,
+    ``n_value_cols``) ``sizes`` rows, routed like the encoded rows: the
+    fingerprint numbers rows in their sorted order, so it needs the same
+    shuffle and sort."""
 
     def kernel(batches):
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else 0
-        t0 = time.monotonic()
-        in_batches = [b for b in batches if b.num_rows]
-        doc_ids: list[str] = []
-        n_vals: list[int] = []
-        for b in in_batches:
-            doc_ids.extend(b.column("doc_id").to_pylist())
-            totals = None
-            for nc in n_value_cols:
-                col = b.column(nc).to_numpy(zero_copy_only=False)
-                totals = col.astype("int64") if totals is None else totals + col
-            n_vals.extend(int(x) for x in totals)
-        # Row ordinals (not a constant) in the chunk slot: with a constant,
-        # two rows with identical (doc_id, n_values) XOR-cancel and adding/
-        # removing such a pair would leave the fingerprint unchanged,
-        # silently reusing a stale data file on resume.
-        fp = _fingerprint(doc_ids, n_vals, list(range(len(doc_ids))), params_key)
-        data_path = _data_path(out_dir, part_id, fp)
-        lineage_path = _lineage_path(out_dir, part_id, fp)
+        fp = _table_fingerprint([b for b in batches if b.num_rows], params_key, n_value_cols)
+        yield pa.RecordBatch.from_pydict(
+            {"part_id": [TaskContext.get().partitionId()], "fingerprint": [fp]},
+            schema=pa.schema([("part_id", pa.int32()), ("fingerprint", pa.string())]),
+        )
 
-        if commit_mode == "sidecar":
-            if os.path.exists(lineage_path) and os.path.exists(data_path):
-                with open(lineage_path) as f:
-                    rec = json.load(f)
-                if rec.get("fingerprint") == fp:
-                    rec["status"] = "skipped"
-                    yield _lineage_batch(rec)
-                    return
-        else:
-            rec = _table_stats_from_file(
-                data_path, part_id, fp, n_value_cols, enc_cols,
-                [f"{c}__codec" for c in cols],
-            )
-            if rec is not None:
-                yield _lineage_batch(rec)
-                return
-
-        if fail_at_partition is not None and part_id == fail_at_partition:
-            raise InjectedFailure(f"injected failure at partition {part_id}")
-
-        if in_batches:
-            table = pa.Table.from_batches(in_batches)
-        else:
-            # empty partition: schema comes from the plan via an empty select
-            yield _lineage_batch({
-                "part_id": part_id, "status": "encoded", "fingerprint": fp,
-                "n_rows": 0, "n_tokens": 0, "raw_bytes": 0, "encoded_bytes": 0,
-                "ref_rle_bytes": 0, "tok_sum": 0, "codec_histogram": "{}",
-                "wall_ms": int((time.monotonic() - t0) * 1000),
-            })
-            return
-        table = table.sort_by([("doc_id", "ascending")])
-        tmp_path = data_path + f".tmp-{os.getpid()}"
-        pq.write_table(table, tmp_path)
-        os.replace(tmp_path, data_path)
-
-        hist: dict[str, int] = {}
-        for c in cols:
-            for name in table.column(f"{c}__codec").to_pylist():
-                hist[name] = hist.get(name, 0) + 1
-        rec = {
-            "part_id": part_id,
-            "status": "encoded",
-            "fingerprint": fp,
-            "n_rows": table.num_rows,
-            "n_tokens": sum(_col_sum(table, nc) for nc in n_value_cols),
-            # per-column raw accounting lives in the blocks themselves
-            # (field sets differ per family); lineage totals track values+bytes
-            "raw_bytes": 0,
-            "encoded_bytes": sum(_col_sum(table, ec) for ec in enc_cols),
-            "ref_rle_bytes": 0,
-            "tok_sum": 0,
-            "codec_histogram": json.dumps(hist, sort_keys=True),
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-        }
-        if commit_mode == "sidecar":
-            tmp_lineage = lineage_path + f".tmp-{os.getpid()}"
-            with open(tmp_lineage, "w") as f:
-                json.dump(rec, f)
-            os.replace(tmp_lineage, lineage_path)
-        yield _lineage_batch(rec)
-
-    lineage_rows = [r.asDict() for r in parted.mapInArrow(kernel, LINEAGE_SCHEMA).collect()]
-    lineage_rows.sort(key=lambda r: r["part_id"])
-
-    existing = sorted(glob.glob(os.path.join(out_dir, "snapshots", "v*.json")))
-    version = 1 + max((int(os.path.basename(p)[1:-5]) for p in existing), default=0)
-    snapshot = {
-        "version": version,
-        "parent": version - 1 if existing else None,
-        "codec": codec,
-        "table_cols": {c: kinds[c] for c in cols},
-        "table_schema": wide_ddl,
-        "num_partitions": num_partitions,
-        "params_key": params_key,
-        "files": [
-            os.path.basename(_data_path(out_dir, r["part_id"], r["fingerprint"]))
-            for r in lineage_rows
-            if r["n_rows"] > 0 or os.path.exists(
-                _data_path(out_dir, r["part_id"], r["fingerprint"])
-            )
-        ],
-        "partitions": lineage_rows,
-    }
-    snap_path = os.path.join(out_dir, "snapshots", f"v{version}.json")
-    with open(snap_path + ".tmp", "w") as f:
-        json.dump(snapshot, f, indent=1)
-    os.replace(snap_path + ".tmp", snap_path)
-    pointer = {"latest": version, "codec": codec, "num_partitions": num_partitions,
-               "table_cols": snapshot["table_cols"], "partitions": lineage_rows}
-    tmp_manifest = os.path.join(out_dir, "_manifest.json.tmp")
-    with open(tmp_manifest, "w") as f:
-        json.dump(pointer, f, indent=1)
-    os.replace(tmp_manifest, os.path.join(out_dir, "_manifest.json"))
-    return lineage_rows
-
-
-def _table_stats_from_file(
-    data_path: str,
-    part_id: int,
-    fp: str,
-    n_value_cols: list[str],
-    enc_cols: list[str],
-    codec_cols: list[str],
-) -> dict | None:
-    """Manifest-mode skip-check for table-writer files (wide schema)."""
-    if not os.path.exists(data_path):
-        return None
-    try:
-        t = pq.read_table(data_path, columns=n_value_cols + enc_cols + codec_cols)
-    except pa.lib.ArrowInvalid:
-        # Corrupt file: quarantine, never os.remove (see _stats_from_data_file).
-        os.replace(data_path, data_path + ".corrupt")
-        return None
-    except Exception:
-        # Transient read error: leave the possibly-valid file; re-encode
-        # replaces it atomically.
-        return None
-    hist: dict[str, int] = {}
-    for cc in codec_cols:
-        for name in t.column(cc).to_pylist():
-            hist[name] = hist.get(name, 0) + 1
-    return {
-        "part_id": part_id,
-        "status": "skipped",
-        "fingerprint": fp,
-        "n_rows": t.num_rows,
-        "n_tokens": sum(_col_sum(t, nc) for nc in n_value_cols),
-        "raw_bytes": 0,
-        "encoded_bytes": sum(_col_sum(t, ec) for ec in enc_cols),
-        "ref_rle_bytes": 0,
-        "tok_sum": 0,
-        "codec_histogram": json.dumps(hist, sort_keys=True),
-        "wall_ms": 0,
-    }
+    fps = [_fingerprint([], [], [], params_key)] * num_partitions
+    rows = _by_doc(sizes, num_partitions)
+    for r in rows.mapInArrow(kernel, "part_id int, fingerprint string").collect():
+        fps[r["part_id"]] = r["fingerprint"]
+    return fps
 
 
 def read_table_blocks(spark: SparkSession, out_dir: str, snapshot: int | None = None) -> DataFrame:

@@ -119,7 +119,7 @@ def test_skip_check_transient_error_preserves_file(tmp_path, monkeypatch):
     assert tio._stats_from_data_file(path, 0, "fp") is None
     assert open(path, "rb").read() == data  # untouched
 
-    assert tio._table_stats_from_file(path, 0, "fp", [], [], []) is None
+    assert tio._stats_from_data_file(path, 0, "fp", {"codec": [], "n_tokens": []}) is None
     assert open(path, "rb").read() == data
 
 

@@ -270,3 +270,21 @@ def test_cli_stream_pack(tmp_path):
         ids = sorted(packed.loc[packed["shard"] == sh, "example_id"])
         assert len(ids) == tot // L, (sh, len(ids), tot)
         assert ids == list(range(len(ids)))
+
+
+@pytest.mark.parametrize("op", ["encode", "dedup"])
+def test_cli_stream_rejects_state_partitions(op, capsys):
+    """--state-partitions sizes a state store the encode and dedup streams
+    do not take: the parser rejects it instead of dropping it. No session
+    starts — the error is raised while parsing."""
+    from rle_array_spark.jobs import main
+
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "stream", "--op", op, "--input", "in", "--output", "out",
+            "--checkpoint", "ckpt", "--state-partitions", "4",
+        ])
+    assert exc.value.code == 2
+    assert f"--state-partitions applies to --op stats, quantiles or pack, not {op}" in (
+        capsys.readouterr().err
+    )

@@ -117,6 +117,12 @@ def test_table_writer_empty_input(spark, tmp_path):
     blocks = read_table_blocks(spark, out)
     assert blocks.count() == 0
     assert "toks__payload" in blocks.columns and "tags__card" in blocks.columns
+    # a rerun resumes: an empty partition writes no file, yet its
+    # committed record makes it a hit (an all-empty input may run no
+    # partition at all, so every record there is checked, not counted)
+    again = encode_table_to_dir(df, ["toks", "tags"], out, num_partitions=3)
+    assert all(r["status"] == "skipped" for r in again)
+    assert read_table_blocks(spark, out).count() == 0
 
 
 def test_table_writer_manifest_histogram_survives_resume(spark, mixed, tmp_path):
