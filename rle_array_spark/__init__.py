@@ -16,6 +16,9 @@ __version__ = "0.1.0"
 
 from rle_array_spark.codecs import CODECS, decode_block, encode_block  # noqa: F401
 from rle_array_spark.chooser import choose_codec, choose_codec_batch  # noqa: F401
+from rle_array_spark import _zipcache
+
+_zipcache.install_in_worker()  # a Spark worker imports the package to unpickle a kernel
 
 __all__ = [
     "CODECS",

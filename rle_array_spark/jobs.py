@@ -435,8 +435,14 @@ def main(argv: list[str] | None = None) -> int:
         s.add_argument("--cores", default="*")
 
     args = p.parse_args(argv)
+    if args.cmd == "encode" and args.shuffle_first and not args.salted:
+        p.error("--shuffle-first applies only with --salted")
     if args.cmd == "stream" and args.state_partitions is not None and args.op in ("encode", "dedup"):
         p.error(f"--state-partitions applies to --op stats, quantiles or pack, not {args.op}")
+    if args.cmd == "stream" and args.max_files_per_trigger is not None and args.op not in (
+        "quantiles", "pack"
+    ):
+        p.error(f"--max-files-per-trigger applies to --op quantiles or pack, not {args.op}")
     return {
         "encode": cmd_encode,
         "decode": cmd_decode,

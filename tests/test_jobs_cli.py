@@ -288,3 +288,33 @@ def test_cli_stream_rejects_state_partitions(op, capsys):
     assert f"--state-partitions applies to --op stats, quantiles or pack, not {op}" in (
         capsys.readouterr().err
     )
+
+
+@pytest.mark.parametrize(
+    "argv, message",
+    [
+        (
+            ["encode", "--input", "in", "--output", "out", "--shuffle-first"],
+            "--shuffle-first applies only with --salted",
+        ),
+    ]
+    + [
+        (
+            [
+                "stream", "--op", op, "--input", "in", "--output", "out",
+                "--checkpoint", "ckpt", "--max-files-per-trigger", "1",
+            ],
+            f"--max-files-per-trigger applies to --op quantiles or pack, not {op}",
+        )
+        for op in ("encode", "stats", "dedup")
+    ],
+)
+def test_cli_rejects_ignored_flags(argv, message, capsys):
+    """Flags the chosen job would not read exit 2 at parse time instead of
+    being dropped. No session starts."""
+    from rle_array_spark.jobs import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(argv)
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err

@@ -346,3 +346,32 @@ def test_slow_committer_does_not_roll_back_pointer(tmp_path, monkeypatch):
     assert stalled == [1]
     pointer = tableio.read_manifest(out)
     assert pointer["latest"] == 2 and pointer["codec"] == "new"
+
+
+def test_crash_between_snapshot_and_pointer(tmp_path, monkeypatch):
+    """A commit that dies after writing ``v{N}.json`` but before replacing
+    ``_manifest.json`` leaves readers on version N-1; the next commit
+    lands at N+1 and the pointer names it."""
+    out = str(tmp_path / "torn")
+    os.makedirs(os.path.join(out, "snapshots"))
+    row = {"part_id": 0, "fingerprint": "0" * 32, "n_rows": 0}
+    tableio._commit_snapshot(out, {"codec": "v1"}, "k", [row])
+    write_json = tableio._write_json
+
+    def crash_on_pointer(path, obj, indent=None):
+        if os.path.basename(path) == "_manifest.json":
+            raise OSError("crash before the pointer update")
+        write_json(path, obj, indent)
+
+    monkeypatch.setattr(tableio, "_write_json", crash_on_pointer)
+    with pytest.raises(OSError, match="crash before the pointer update"):
+        tableio._commit_snapshot(out, {"codec": "v2"}, "k", [row])
+    monkeypatch.setattr(tableio, "_write_json", write_json)
+    assert os.path.exists(os.path.join(out, "snapshots", "v2.json"))
+    assert tableio.read_manifest(out)["latest"] == 1
+    assert read_snapshot(out)["codec"] == "v1"
+
+    tableio._commit_snapshot(out, {"codec": "v3"}, "k", [row])
+    pointer = tableio.read_manifest(out)
+    assert pointer["latest"] == 3 and pointer["codec"] == "v3"
+    assert read_snapshot(out)["version"] == 3
