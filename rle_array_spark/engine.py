@@ -142,110 +142,71 @@ PACKED_SCHEMA = (
 )
 
 
+def _chunk_split(batch: pa.RecordBatch, chunk_tokens: int | None):
+    """A batch's rows cut into chunks of at most ``chunk_tokens`` values:
+    ``(flat, offsets, doc_id, source, chunk_idx, n_chunks, chunk_offset)``.
+
+    A row of n > k values becomes ⌈n/k⌉ rows of k with the remainder last;
+    shorter rows stay whole. With no ``chunk_tokens`` nothing is cut and a
+    packed batch keeps the chunk columns it carries (:func:`_chunk_cols`).
+    Chunks of a row are contiguous and in order, so the flat values buffer
+    is shared unchanged and only the offsets are re-cut. The per-batch body
+    of both :func:`pack_tokens_df` and the chunked :func:`encode_df`."""
+    flat, offsets = _tokens_from_batch(batch)
+    doc_id, source = batch.column("doc_id"), batch.column("source")
+    lengths = offsets[1:] - offsets[:-1]
+    if not chunk_tokens or not lengths.size or int(lengths.max()) <= chunk_tokens:
+        return (flat, offsets, doc_id, source, *_chunk_cols(batch))
+    n_chunks = np.maximum(1, -(-lengths // chunk_tokens))
+    rows = np.repeat(np.arange(lengths.size), n_chunks)
+    chunk_idx = np.arange(rows.size) - np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks)
+    chunk_offset = chunk_idx * chunk_tokens
+    offsets = np.append(offsets[:-1][rows] + chunk_offset, offsets[-1])
+    return (flat, offsets, doc_id.take(rows), source.take(rows),
+            pa.array(chunk_idx.astype(np.int32)), pa.array(n_chunks[rows].astype(np.int32)),
+            pa.array(chunk_offset.astype(np.int64)))
+
+
 def pack_tokens_df(df: DataFrame, chunk_tokens: int | None = None) -> DataFrame:
     """Re-encode the tokens column as packed int32-LE binary, optionally
     splitting sequences longer than ``chunk_tokens`` into multiple rows.
 
     Spark's row shuffle serializes ``array<int>`` element-by-element
     (UnsafeArrayData), which measured 3-5× slower than shuffling the same
-    bytes as a single binary value (one memcpy). Any encode path that must
-    shuffle raw tokens converts to this transport form first — the scale
-    lever: never shuffle a token array as an array.
+    bytes as a single binary value (one memcpy). The paths that shuffle
+    raw tokens — :func:`encode_df` with ``num_partitions`` and the
+    checkpointed writer with ``encode_first=False`` — convert to this
+    transport form first: never shuffle a token array as an array.
 
     Chunking happens here, BEFORE the salted repartition, so a giant
     sequence's chunks spread across partitions instead of pinning one task.
+    A chunked encode that shuffles no raw tokens does not come here: it
+    cuts the chunks inside its own kernel (:func:`_chunk_split`), so each
+    token crosses into Python once.
     """
 
     def kernel(batches):
         for batch in batches:
             if not batch.num_rows:
                 continue
-            flat, offsets = _list_to_numpy(batch.column("tokens"))
-            n = batch.num_rows
-            if chunk_tokens is None or int((offsets[1:] - offsets[:-1]).max()) <= chunk_tokens:
-                # Fast path — nothing to split: zero per-row Python, the
-                # packed binary column is built straight from the flat
-                # values buffer + scaled offsets.
-                binarr = pa.LargeBinaryArray.from_buffers(
-                    pa.large_binary(),
-                    n,
-                    [None, pa.py_buffer((offsets * 4).astype(np.int64)),
-                     pa.py_buffer(flat.view(np.uint8))],
-                ).cast(pa.binary())
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column("doc_id"),
-                        batch.column("source"),
-                        pa.array((offsets[1:] - offsets[:-1]).astype(np.int32)),
-                        binarr,
-                        pa.array(np.zeros(n, dtype=np.int32)),
-                        pa.array(np.ones(n, dtype=np.int32)),
-                        pa.array(np.zeros(n, dtype=np.int64)),
-                    ],
-                    names=[
-                        "doc_id", "source", "n_tok", "tok_bin",
-                        "chunk_idx", "n_chunks", "chunk_offset",
-                    ],
-                )
-                continue
-            doc_ids = batch.column("doc_id").to_pylist()
-            sources = batch.column("source").to_pylist()
-
-            out_doc, out_src = [], []
-            out_lo, out_hi, out_idx, out_nch, out_off = [], [], [], [], []
-            for i in range(batch.num_rows):
-                lo, hi = int(offsets[i]), int(offsets[i + 1])
-                n = hi - lo
-                if chunk_tokens is None or n <= chunk_tokens:
-                    out_doc.append(doc_ids[i])
-                    out_src.append(sources[i])
-                    out_lo.append(lo)
-                    out_hi.append(hi)
-                    out_idx.append(0)
-                    out_nch.append(1)
-                    out_off.append(0)
-                else:
-                    n_chunks = -(-n // chunk_tokens)
-                    for c in range(n_chunks):
-                        s = lo + c * chunk_tokens
-                        e = min(lo + (c + 1) * chunk_tokens, hi)
-                        out_doc.append(doc_ids[i])
-                        out_src.append(sources[i])
-                        out_lo.append(s)
-                        out_hi.append(e)
-                        out_idx.append(c)
-                        out_nch.append(n_chunks)
-                        out_off.append(c * chunk_tokens)
-
-            lo_arr = np.array(out_lo, dtype=np.int64)
-            hi_arr = np.array(out_hi, dtype=np.int64)
-            lengths = hi_arr - lo_arr
-            # contiguous value buffer for the (possibly re-sliced) rows
-            new_flat = (
-                flat
-                if chunk_tokens is None
-                else np.concatenate([flat[s:e] for s, e in zip(out_lo, out_hi)])
-                if out_lo
-                else flat[:0]
+            flat, offsets, doc_id, source, chunk_idx, n_chunks, chunk_offset = _chunk_split(
+                batch, chunk_tokens
             )
-            if chunk_tokens is None:
-                byte_offsets = (offsets * 4).astype(np.int64)
-            else:
-                byte_offsets = np.concatenate(([0], np.cumsum(lengths))) * 4
             binarr = pa.LargeBinaryArray.from_buffers(
                 pa.large_binary(),
-                len(out_doc),
-                [None, pa.py_buffer(byte_offsets), pa.py_buffer(new_flat.view(np.uint8))],
+                offsets.size - 1,
+                [None, pa.py_buffer((offsets * 4).astype(np.int64)),
+                 pa.py_buffer(flat.view(np.uint8))],
             ).cast(pa.binary())
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(out_doc, type=pa.string()),
-                    pa.array(out_src, type=pa.string()),
-                    pa.array(lengths.astype(np.int32)),
+                    doc_id,
+                    source,
+                    pa.array((offsets[1:] - offsets[:-1]).astype(np.int32)),
                     binarr,
-                    pa.array(np.array(out_idx, dtype=np.int32)),
-                    pa.array(np.array(out_nch, dtype=np.int32)),
-                    pa.array(np.array(out_off, dtype=np.int64)),
+                    chunk_idx,
+                    n_chunks,
+                    chunk_offset,
                 ],
                 names=[
                     "doc_id", "source", "n_tok", "tok_bin",
@@ -470,10 +431,12 @@ def _encode_column(
     }
 
 
-def _encode_batch(batch: pa.RecordBatch, codec: str, threshold: float) -> pa.RecordBatch:
-    doc_id = batch.column("doc_id")
-    source = batch.column("source")
-    flat, offsets = _tokens_from_batch(batch)
+def _encode_batch(
+    batch: pa.RecordBatch, codec: str, threshold: float, chunk_tokens: int | None = None
+) -> pa.RecordBatch:
+    """Encode a batch of token rows (``tokens`` or packed ``tok_bin``), cut
+    into chunks of ``chunk_tokens`` first (:func:`_chunk_split`)."""
+    flat, offsets, doc_id, source, *chunk_cols = _chunk_split(batch, chunk_tokens)
     c = _encode_column(flat, offsets, codec, threshold)
     codecs_out = c["codec"]
     payloads = c["payload"]
@@ -499,7 +462,7 @@ def _encode_batch(batch: pa.RecordBatch, codec: str, threshold: float) -> pa.Rec
             pa.array((n_values.astype(np.int64)) * 4),
             pa.array(enc_bytes),
             pa.array(ref_bytes),
-            *_chunk_cols(batch),
+            *chunk_cols,
         ],
         names=[
             "doc_id", "source", "codec", "payload", "n_values", "n_runs",
@@ -531,17 +494,18 @@ def encode_df(
 
     ``chunk_tokens`` splits sequences longer than the limit into multiple
     blocks (decode with ``decode_df(..., reassemble_chunks=True)``) —
-    the skew defense for individual giant sequences.
+    the skew defense for individual giant sequences. Without
+    ``num_partitions`` the encode kernel cuts the chunks itself, so the
+    plan has one Python map node and each token crosses into Python once.
     """
-    if num_partitions or chunk_tokens:
-        df = pack_tokens_df(df, chunk_tokens=chunk_tokens)
-        if num_partitions:
-            df = salted_repartition(df, num_partitions)
+    if num_partitions:
+        df = salted_repartition(pack_tokens_df(df, chunk_tokens=chunk_tokens), num_partitions)
+    cut = None if num_partitions else chunk_tokens  # packed rows arrive already cut
 
     def kernel(batches):
         for batch in batches:
             if batch.num_rows:
-                yield _encode_batch(batch, codec, threshold)
+                yield _encode_batch(batch, codec, threshold, cut)
 
     return df.mapInArrow(kernel, BLOCK_SCHEMA)
 

@@ -94,12 +94,23 @@ def _read_blocks_any(spark: SparkSession, path: str):
     return spark.read.parquet(path)
 
 
+def _has_chunks(blocks) -> bool:
+    """Whether any block holds a chunk of a longer sequence (what an encode
+    with ``--chunk-tokens`` writes, checkpointed or plain): such blocks
+    decode to whole documents only with ``reassemble_chunks``."""
+    import pyspark.sql.functions as F
+
+    return not blocks.filter(F.col("n_chunks") > 1).isEmpty()
+
+
 def cmd_decode(args) -> int:
     from rle_array_spark.engine import decode_df
 
     spark = _session(args)
     blocks = _read_blocks_any(spark, args.blocks)
-    decode_df(blocks).write.mode(args.mode).parquet(args.output)
+    decode_df(blocks, reassemble_chunks=_has_chunks(blocks)).write.mode(args.mode).parquet(
+        args.output
+    )
     n = spark.read.parquet(args.output).count()
     print(json.dumps({"job": "decode", "rows": int(n)}))
     spark.stop()
@@ -114,7 +125,7 @@ def cmd_verify(args) -> int:
         "doc_id string, tokens array<int>, n_tok int, source string"
     ).parquet(args.input)
     blocks = _read_blocks_any(spark, args.blocks)
-    mismatches = verify_roundtrip(df, blocks)
+    mismatches = verify_roundtrip(df, blocks, reassemble_chunks=_has_chunks(blocks))
     print(json.dumps({"job": "verify", "mismatches": int(mismatches)}))
     spark.stop()
     return 0 if mismatches == 0 else 1
@@ -330,16 +341,17 @@ def main(argv: list[str] | None = None) -> int:
         type=lambda v: v if v == "auto" else int(v),
         default=None,
         help="tokens per chunk for giant-sequence splitting; 'auto' sizes "
-        "from corpus shape (salted mode only)",
+        "from corpus shape",
     )
     enc.add_argument("--mode", default="overwrite")
     enc.add_argument(
         "--commit-mode",
-        default="sidecar",
+        default=None,
         choices=("sidecar", "manifest"),
-        help="resume protocol: per-partition rename-committed sidecars "
-        "(shared POSIX/HDFS) or manifest-only with self-certifying data "
-        "files (object stores, no atomic rename)",
+        help="salted mode only — resume protocol: per-partition "
+        "rename-committed sidecars (shared POSIX/HDFS; the default) or "
+        "manifest-only with self-certifying data files (object stores, "
+        "no atomic rename)",
     )
     enc.add_argument(
         "--shuffle-first",
@@ -361,7 +373,10 @@ def main(argv: list[str] | None = None) -> int:
     st.add_argument("--input", required=True)
     st.add_argument("--output", required=True)
     st.add_argument("--checkpoint", required=True)
-    st.add_argument("--codec", default="auto")
+    st.add_argument(
+        "--codec", default=None,
+        help="codec of the encode, stats and quantiles ops (default auto)",
+    )
     st.add_argument(
         "--op",
         choices=("encode", "stats", "quantiles", "dedup", "pack"),
@@ -418,16 +433,27 @@ def main(argv: list[str] | None = None) -> int:
     pk.add_argument("--output", required=True)
     pk.add_argument("--seq-len", type=int, default=512)
     pk.add_argument("--shards", type=int, default=256)
-    pk.add_argument("--seed", type=int, default=1, help="epoch number")
+    pk.add_argument(
+        "--seed", type=int, default=1,
+        help="epoch number. The same corpus and seed always give the same "
+        "examples in the same order; another seed shuffles the documents "
+        "into a different order. Examples run across document boundaries, "
+        "so epochs hold the same examples (in a different order) only when "
+        "every document's length is a multiple of --seq-len; each shard "
+        "drops its last partial example",
+    )
     pk.add_argument(
         "--encode", action="store_true",
         help="write compressed blocks via the checkpointed salted writer "
         "(resumable) instead of plain packed parquet",
     )
-    pk.add_argument("--codec", default="auto")
-    pk.add_argument("--partitions", type=int, default=128)
+    pk.add_argument("--codec", default=None, help="with --encode (default auto)")
     pk.add_argument(
-        "--commit-mode", default="sidecar", choices=("sidecar", "manifest")
+        "--partitions", type=int, default=None, help="with --encode (default 128)"
+    )
+    pk.add_argument(
+        "--commit-mode", default=None, choices=("sidecar", "manifest"),
+        help="with --encode (default sidecar)",
     )
     pk.add_argument("--mode", default="overwrite")
 
@@ -437,12 +463,24 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
     if args.cmd == "encode" and args.shuffle_first and not args.salted:
         p.error("--shuffle-first applies only with --salted")
+    if args.cmd == "encode" and args.commit_mode is not None and not args.salted:
+        p.error("--commit-mode applies only with --salted")
+    if args.cmd == "stream" and args.codec is not None and args.op in ("dedup", "pack"):
+        p.error(f"--codec applies to --op encode, stats or quantiles, not {args.op}")
+    if args.cmd == "pack" and not args.encode:
+        for flag in ("codec", "partitions", "commit_mode"):
+            if getattr(args, flag) is not None:
+                p.error(f"--{flag.replace('_', '-')} applies only with --encode")
     if args.cmd == "stream" and args.state_partitions is not None and args.op in ("encode", "dedup"):
         p.error(f"--state-partitions applies to --op stats, quantiles or pack, not {args.op}")
     if args.cmd == "stream" and args.max_files_per_trigger is not None and args.op not in (
         "quantiles", "pack"
     ):
         p.error(f"--max-files-per-trigger applies to --op quantiles or pack, not {args.op}")
+    # flags that default to None only so that explicit use shows above
+    for flag, default in (("codec", "auto"), ("commit_mode", "sidecar"), ("partitions", 128)):
+        if hasattr(args, flag) and getattr(args, flag) is None:
+            setattr(args, flag, default)
     return {
         "encode": cmd_encode,
         "decode": cmd_decode,

@@ -41,9 +41,10 @@ import threading
 import time
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
@@ -118,18 +119,27 @@ def _block_fingerprint(batches: list[pa.RecordBatch], params_key: str, length_fi
 
 
 def _table_fingerprint(batches: list[pa.RecordBatch], params_key: str, n_value_cols: list[str]) -> str:
-    """Table-writer partition fingerprint over rows in their sorted order:
-    doc_id, the value count summed over ``n_value_cols``, and the row
-    ordinal in the chunk slot (with a constant there, two rows with equal
-    (doc_id, count) would XOR-cancel and adding or removing such a pair
-    would reuse a stale data file)."""
+    """Table-writer partition fingerprint: doc_id, the value count summed
+    over ``n_value_cols`` (a null array counts 0), and in the chunk slot
+    the row's rank among the rows with the same (doc_id, count) — with a
+    constant there, two equal rows would XOR-cancel and adding or removing
+    such a pair would reuse a stale data file. The rank makes it
+    independent of the order of the rows, like :func:`_table_rows`."""
     doc_ids: list[str] = []
     lengths: list[int] = []
     for b in batches:
         doc_ids.extend(b.column("doc_id").to_pylist())
-        total = sum(b.column(c).to_numpy(zero_copy_only=False).astype("int64") for c in n_value_cols)
+        total = sum(
+            pc.fill_null(b.column(c), 0).to_numpy(zero_copy_only=False).astype("int64")
+            for c in n_value_cols
+        )
         lengths.extend(int(x) for x in total)
-    return _fingerprint(doc_ids, lengths, list(range(len(doc_ids))), params_key)
+    seen: dict[tuple, int] = {}
+    slots = []
+    for key in zip(doc_ids, lengths):
+        slots.append(seen.get(key, 0))
+        seen[key] = slots[-1] + 1
+    return _fingerprint(doc_ids, lengths, slots, params_key)
 
 
 # Lineage totals a writer's data file can carry; a writer's ``stats`` maps
@@ -159,7 +169,18 @@ AUTO_CHUNK_PER_PARTITION = 8
 
 
 def auto_chunk_tokens(df: DataFrame, num_partitions: int) -> int | None:
-    """Pick a chunk size from corpus shape (one metadata-only aggregate).
+    """Pick a chunk size from corpus shape (one metadata-only aggregate over
+    the stored ``n_tok`` column; see :func:`_auto_chunk_size`)."""
+    row = df.agg(
+        F.sum(F.col("n_tok").cast("long")).alias("total"),
+        F.max("n_tok").alias("longest"),
+    ).collect()[0]
+    return _auto_chunk_size(row["total"], row["longest"], num_partitions)
+
+
+def _auto_chunk_size(total: int | None, longest: int | None, num_partitions: int) -> int | None:
+    """The chunk size for a corpus of ``total`` tokens whose longest row
+    has ``longest``.
 
     Partition balance after the salted shuffle is a balls-into-bins
     problem: k chunks into P partitions has relative imbalance
@@ -168,11 +189,7 @@ def auto_chunk_tokens(df: DataFrame, num_partitions: int) -> int | None:
     1 Mi-token chunks left max/ideal at 7.6 on a giant-dominated corpus,
     256 Ki brought it to 2.8). Returns None when no row would ever split —
     keeps the fingerprint/params identity of plain unchunked runs."""
-    row = df.agg(
-        F.sum(F.col("n_tok").cast("long")).alias("total"),
-        F.max("n_tok").alias("longest"),
-    ).collect()[0]
-    total, longest = int(row["total"] or 0), int(row["longest"] or 0)
+    total, longest = int(total or 0), int(longest or 0)
     chunk = int(
         min(AUTO_CHUNK_MAX,
             max(AUTO_CHUNK_MIN, total // (AUTO_CHUNK_PER_PARTITION * num_partitions)))
@@ -196,11 +213,12 @@ def encode_to_dir(
     the lineage records. Safe to re-run after a failure.
 
     Re-running an already-committed configuration is a full checkpoint hit
-    and costs one JVM aggregate over the row metadata: when the latest
-    snapshot in ``out_dir`` was written with these parameters, every
-    partition is fingerprinted from doc_id, token count and chunk index
-    alone (:func:`_salted_fingerprints`), and if each one matches its
-    committed record the run commits a new snapshot of those records (all
+    and costs one SQL execution, a JVM aggregate over the row metadata
+    with no Python task: when the latest snapshot in ``out_dir`` was
+    written with these parameters, every partition is fingerprinted from
+    doc_id, token count and chunk index alone
+    (:func:`_salted_fingerprints`), and if each one matches its committed
+    record the run commits a new snapshot of those records (all
     ``skipped``) without encoding. Any other run — the first write, a rerun
     after a crashed first write, new parameters, a changed input — runs the
     full write below; its kernel skips the partitions already committed,
@@ -209,7 +227,11 @@ def encode_to_dir(
     ``chunk_tokens="auto"`` sizes chunks from the corpus shape (see
     :func:`auto_chunk_tokens`); the resolved value enters the params
     fingerprint, so auto-runs checkpoint/resume exactly like explicit ones
-    as long as the corpus shape is unchanged.
+    as long as the corpus shape is unchanged. A rerun whose latest
+    snapshot was written with the size it recorded sizes its chunks in the
+    fingerprint aggregate itself, from the same stored ``n_tok`` column:
+    when the size is unchanged it checks the hits, otherwise it writes
+    with the new size; neither runs a separate sizing job.
 
     ``encode_first=True`` (default) encodes at scan parallelism and
     shuffles the ENCODED blocks into deterministic partitions — the
@@ -238,24 +260,39 @@ def encode_to_dir(
       each other's partial runs (sidecar-mode reruns re-encode
       manifest-written partitions at worst — never corrupt them)."""
     _prepare_dir(out_dir, commit_mode)
-    if chunk_tokens == "auto":
-        chunk_tokens = auto_chunk_tokens(df, num_partitions)
-    params_key = (
-        f"{codec}|{threshold}|{num_partitions}|{chunk_tokens}|ef={int(encode_first)}"
-    )
-    meta = {"codec": codec, "threshold": threshold,
-            "num_partitions": num_partitions, "chunk_tokens": chunk_tokens}
+
+    def key(k: int | None) -> str:
+        return f"{codec}|{threshold}|{num_partitions}|{k}|ef={int(encode_first)}"
+
     # the length column each path shuffles: encoded blocks carry n_values,
     # packed tokens n_tok (both the chunk's value count)
     length_field = "n_values" if encode_first else "n_tok"
-
-    snap = _latest_snapshot_of(out_dir, params_key)
-    if snap is not None:
-        rows = _chunk_rows(df, chunk_tokens, length_field)
-        fps = _salted_fingerprints(rows, length_field, num_partitions, params_key)
-        hits = _committed_records(out_dir, fps, commit_mode, _BLOCK_STATS, params_key)
-        if hits is not None:
-            return _commit_snapshot(out_dir, meta, params_key, hits)
+    auto = chunk_tokens == "auto"
+    snap = _latest_snapshot(out_dir)
+    # the chunk size a full hit would have: an auto run's is the one the
+    # latest snapshot recorded, confirmed below from the same aggregate
+    k = snap.get("chunk_tokens") if auto and snap else chunk_tokens
+    hits = None
+    if snap is not None and snap.get("params_key") == key(k):
+        rows = _chunk_rows(df, k, length_field)
+        fps, sizes = _salted_fingerprints(
+            rows, salted_partition_id(rows, num_partitions), length_field, num_partitions,
+            key(k), *(_sizing_aggs() if auto else ()),
+        )
+        if auto:
+            chunk_tokens = _auto_chunk_size(
+                sum(r["total"] or 0 for r in sizes),
+                max((r["longest"] or 0 for r in sizes), default=0), num_partitions,
+            )
+        if chunk_tokens == k:
+            hits = _committed_records(out_dir, fps, commit_mode, _BLOCK_STATS, key(k))
+    elif auto:
+        chunk_tokens = auto_chunk_tokens(df, num_partitions)
+    params_key = key(chunk_tokens)
+    meta = {"codec": codec, "threshold": threshold,
+            "num_partitions": num_partitions, "chunk_tokens": chunk_tokens}
+    if hits is not None:
+        return _commit_snapshot(out_dir, meta, params_key, hits)
 
     src = df.select("doc_id", "tokens", "n_tok", "source")
     if encode_first:
@@ -293,50 +330,69 @@ def encode_to_dir(
 
 
 def _chunk_rows(df: DataFrame, chunk_tokens: int | None, length_field: str) -> DataFrame:
-    """(doc_id, source, ``length_field``, chunk_idx): the rows the write path
-    shuffles, from metadata alone — the value count is ``F.size(tokens)``
-    and chunks follow :func:`pack_tokens_df` (n ≤ k → one chunk, else
-    ⌈n/k⌉ chunks of k with the remainder last). Columns are int, as there."""
+    """(doc_id, source, ``length_field``, chunk_idx, n_tok_stored): the rows
+    the write path shuffles, from metadata alone — the value count is
+    ``F.size(tokens)`` and chunks follow :func:`pack_tokens_df` (n ≤ k → one
+    chunk, else ⌈n/k⌉ chunks of k with the remainder last). Columns are
+    int, as there. ``n_tok_stored`` carries the input's ``n_tok`` column for
+    chunk sizing (:func:`_sizing_aggs`); it never enters a fingerprint."""
     n = F.size("tokens")
+    stored = F.col("n_tok").alias("n_tok_stored")
     if not chunk_tokens:
-        return df.select("doc_id", "source", n.alias(length_field), F.lit(0).alias("chunk_idx"))
+        return df.select(
+            "doc_id", "source", n.alias(length_field), F.lit(0).alias("chunk_idx"), stored
+        )
     k = F.lit(chunk_tokens)
     n_chunks = F.greatest(F.lit(1), F.ceil(n / k).cast("int"))
     return df.select(
-        "doc_id", "source", n.alias("n"),
+        "doc_id", "source", n.alias("n"), stored,
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
     ).select(
         "doc_id", "source",
         F.least(k, F.col("n") - F.col("chunk_idx") * k).alias(length_field),
-        "chunk_idx",
+        "chunk_idx", "n_tok_stored",
+    )
+
+
+def _sizing_aggs() -> tuple[Column, Column]:
+    """:func:`auto_chunk_tokens`'s figures over :func:`_chunk_rows` rows,
+    per group: the stored ``n_tok`` summed over documents (each counted on
+    its first chunk) and its maximum."""
+    n_tok = F.col("n_tok_stored")
+    return (
+        F.sum(F.when(F.col("chunk_idx") == 0, n_tok.cast("long"))).alias("total"),
+        F.max(n_tok).alias("longest"),
     )
 
 
 def _salted_fingerprints(
-    rows: DataFrame, length_field: str, num_partitions: int, params_key: str
-) -> list[str]:
-    """Each partition's fingerprint over :func:`_chunk_rows` ``rows`` as
-    :func:`salted_repartition` would place them, in one JVM aggregate that
-    moves no rows: the fingerprint is an XOR over :func:`_row_hash`, so the
-    rows are grouped by their target partition id and XOR ``sha2`` of the
-    same string, the 16 hash bytes as two 8-byte halves (``conv`` to base
-    -10 reads 16 hex digits as a signed long; XOR is bytewise, so the byte
-    order is fixed up once, here)."""
+    rows: DataFrame, part_id: Column, length_field: str, num_partitions: int, params_key: str,
+    *aggs: Column,
+) -> tuple[list[str], list]:
+    """Each partition's fingerprint over (doc_id, ``length_field``,
+    chunk_idx) ``rows``, where the column ``part_id`` is the partition the
+    writer's repartition sends a row to, in one JVM aggregate that moves no
+    rows: the fingerprint is an XOR over :func:`_row_hash`, so the rows are
+    grouped by partition id and XOR ``sha2`` of the same string, the 16
+    hash bytes as two 8-byte halves (``conv`` to base -10 reads 16 hex
+    digits as a signed long; XOR is bytewise, so the byte order is fixed up
+    once, here). ``aggs`` ride along in the same aggregate; their per-group
+    rows are returned next to the fingerprints."""
     row = F.concat_ws(
         ":", F.coalesce(F.col("doc_id"), F.lit("None")), F.col("chunk_idx").cast("string"),
         F.col(length_field).cast("string"), F.lit(params_key),
     )
     h = F.sha2(row, 256)
-    parts = rows.groupBy(salted_partition_id(rows, num_partitions).alias("part_id")).agg(*[
+    parts = rows.groupBy(part_id.alias("part_id")).agg(*[
         F.bit_xor(F.conv(F.substring(h, 1 + 16 * j, 16), 16, -10).cast("long")).alias(f"x{j}")
         for j in (0, 1)
-    ])
+    ], *aggs).collect()
     acc = [_params_hash(params_key)] * num_partitions
-    for r in parts.collect():
+    for r in parts:
         acc[r["part_id"]] ^= int.from_bytes(
             b"".join((r[f"x{j}"] & (2**64 - 1)).to_bytes(8, "big") for j in (0, 1)), "little"
         )
-    return [f"{x:032x}" for x in acc]
+    return [f"{x:032x}" for x in acc], parts
 
 
 def _write_kernel(out_dir, commit_mode, fail_at_partition, fingerprint, stats, build):
@@ -428,16 +484,15 @@ def _prepare_dir(out_dir: str, commit_mode: str) -> None:
         os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
 
 
-def _latest_snapshot_of(out_dir: str, params_key: str) -> dict | None:
-    """The latest snapshot when it was written with ``params_key``, else
-    None. A full hit reruns the committed configuration, so without one the
-    metadata checks are skipped: a rerun after a crashed first write, or
-    with new parameters, pays nothing for them."""
+def _latest_snapshot(out_dir: str) -> dict | None:
+    """The latest snapshot, or None when nothing is committed. A full hit
+    reruns the committed configuration, so a writer runs its metadata check
+    only when this snapshot has the run's ``params_key``: a rerun after a
+    crashed first write, or with new parameters, pays nothing for it."""
     try:
-        snap = read_snapshot(out_dir)
+        return read_snapshot(out_dir)
     except FileNotFoundError:
         return None
-    return snap if snap.get("params_key") == params_key else None
 
 
 def _write_json(path: str, obj, indent: int | None = None) -> None:
@@ -551,8 +606,6 @@ def _stats_from_data_file(data_path: str, part_id: int, fp: str,
 
 
 def _col_sum(table: pa.Table, name: str) -> int:
-    import pyarrow.compute as pc
-
     if table.num_rows == 0:
         return 0
     return pc.sum(table.column(name)).as_py() or 0
@@ -651,9 +704,10 @@ def encode_table_to_dir(
     (tableframe.encode_table_df): every array column under its codec
     family, one wide row per input row, written as one immutable parquet
     file per partition with the same snapshot/lineage/resume discipline as
-    :func:`encode_to_dir`, including the metadata-only full-hit check
-    (here the doc_id rows go through the same hash repartition and sort,
-    because the fingerprint numbers rows in sorted order).
+    :func:`encode_to_dir`, including the metadata-only full-hit check:
+    one SQL execution with no Python task, where only the (doc_id, value
+    count) rows shuffle, once, to rank duplicate rows
+    (:func:`_table_rows`) before the fingerprint aggregate.
 
     Encode-first by construction: columns are encoded at scan parallelism
     and the shuffle moves encoded wide rows (binary payloads), keyed by a
@@ -675,14 +729,13 @@ def encode_table_to_dir(
     stats = {"codec": [f"{c}__codec" for c in cols], "n_tokens": n_value_cols,
              "encoded_bytes": [f"{c}__encoded_bytes" for c in cols]}
 
-    snap = _latest_snapshot_of(out_dir, params_key)
-    if snap is not None:
-        sizes = df.select("doc_id", *[F.size(c).alias(n) for c, n in zip(cols, n_value_cols)])
-        if _totals_match(snap, sizes, n_value_cols):
-            fps = _doc_fingerprints(sizes, n_value_cols, num_partitions, params_key)
-            hits = _committed_records(out_dir, fps, commit_mode, stats, params_key)
-            if hits is not None:
-                return _commit_snapshot(out_dir, meta, params_key, hits)
+    snap = _latest_snapshot(out_dir)
+    if snap is not None and snap.get("params_key") == params_key:
+        rows = _table_rows(df, cols, num_partitions)
+        fps, _ = _salted_fingerprints(rows, F.col("part_id"), "n", num_partitions, params_key)
+        hits = _committed_records(out_dir, fps, commit_mode, stats, params_key)
+        if hits is not None:
+            return _commit_snapshot(out_dir, meta, params_key, hits)
 
     def build(in_batches: list[pa.RecordBatch]) -> pa.Table | None:
         if not in_batches:
@@ -702,41 +755,20 @@ def _by_doc(rows: DataFrame, num_partitions: int) -> DataFrame:
     return rows.repartition(num_partitions, "doc_id").sortWithinPartitions("doc_id")
 
 
-def _totals_match(snap: dict, sizes: DataFrame, n_value_cols: list[str]) -> bool:
-    """Whether the input has the snapshot's row and value totals, observed
-    on a no-op write (one scan stage in the JVM, no shuffle, no Python
-    worker): the table writer's check before its fingerprint pass, which
-    needs a shuffle because its row hashes number rows in sorted order."""
-    obs = Observation()
-    sizes.observe(
-        obs, F.count(F.lit(1)).alias("rows"),
-        F.sum(sum(F.col(c).cast("long") for c in n_value_cols)).alias("values"),
-    ).write.format("noop").mode("overwrite").save()
-    parts = snap["partitions"]
-    return (obs.get["rows"], obs.get["values"] or 0) == (
-        sum(r["n_rows"] for r in parts), sum(r["n_tokens"] for r in parts))
-
-
-def _doc_fingerprints(
-    sizes: DataFrame, n_value_cols: list[str], num_partitions: int, params_key: str
-) -> list[str]:
-    """Each partition's table-writer fingerprint from the (doc_id,
-    ``n_value_cols``) ``sizes`` rows, routed like the encoded rows: the
-    fingerprint numbers rows in their sorted order, so it needs the same
-    shuffle and sort."""
-
-    def kernel(batches):
-        fp = _table_fingerprint([b for b in batches if b.num_rows], params_key, n_value_cols)
-        yield pa.RecordBatch.from_pydict(
-            {"part_id": [TaskContext.get().partitionId()], "fingerprint": [fp]},
-            schema=pa.schema([("part_id", pa.int32()), ("fingerprint", pa.string())]),
-        )
-
-    fps = [_fingerprint([], [], [], params_key)] * num_partitions
-    rows = _by_doc(sizes, num_partitions)
-    for r in rows.mapInArrow(kernel, "part_id int, fingerprint string").collect():
-        fps[r["part_id"]] = r["fingerprint"]
-    return fps
+def _table_rows(df: DataFrame, cols: list[str], num_partitions: int) -> DataFrame:
+    """(part_id, doc_id, n, chunk_idx) per input row, as the table writer's
+    kernel fingerprints it (:func:`_table_fingerprint`): ``part_id`` is the
+    hash partitioner of :func:`_by_doc`, ``n`` the value count summed over
+    ``cols`` (a null array counts 0) and ``chunk_idx`` the row's rank
+    among the rows with the same (doc_id, n). The repartition on
+    ``part_id`` is the only shuffle: it already clusters the rank's window
+    and the fingerprint aggregate, so neither adds an exchange."""
+    n = sum(F.coalesce(F.array_size(c), F.lit(0)).cast("long") for c in cols)
+    rows = df.select(
+        F.pmod(F.hash("doc_id"), F.lit(num_partitions)).alias("part_id"), "doc_id", n.alias("n")
+    ).repartition("part_id")
+    same = Window.partitionBy("part_id", "doc_id", "n").orderBy("doc_id")
+    return rows.withColumn("chunk_idx", F.row_number().over(same) - 1)
 
 
 def read_table_blocks(spark: SparkSession, out_dir: str, snapshot: int | None = None) -> DataFrame:

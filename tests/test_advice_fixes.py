@@ -142,8 +142,8 @@ def test_skip_check_corrupt_file_quarantined(tmp_path):
 def test_table_fingerprint_duplicate_pair_no_xor_cancel():
     """With chunk slots pinned to a constant, two identical (doc_id, n)
     rows XOR-cancel and the fingerprint equals the empty partition's —
-    resume would silently reuse a stale file. Row ordinals break the
-    cancellation (the table writer passes range(len(doc_ids)))."""
+    resume would silently reuse a stale file. Distinct slots break the
+    cancellation (the table writer numbers equal (doc_id, n) rows 0, 1, …)."""
     from rle_array_spark.tableio import _fingerprint
 
     empty = _fingerprint([], [], [], "k")

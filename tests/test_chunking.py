@@ -155,3 +155,81 @@ def test_auto_chunk_none_when_no_row_splits(spark):
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
     assert auto_chunk_tokens(small, num_partitions=4) is None
+
+
+def _python_nodes(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln.strip() for ln in plan.splitlines() if "MapInArrow" in ln or "Python" in ln]
+
+
+def test_chunked_encode_is_one_python_node(giant_df):
+    """A chunked encode without a shuffle cuts its chunks inside the
+    encode kernel: one Python map node, and the rows equal those of the
+    packed two-node path the salted shuffle still takes."""
+    from rle_array_spark.engine import pack_tokens_df
+
+    fused = encode_df(giant_df, chunk_tokens=CHUNK)
+    assert len(_python_nodes(fused)) == 1, _python_nodes(fused)
+    assert len(_python_nodes(encode_df(giant_df, chunk_tokens=CHUNK, num_partitions=4))) == 2
+    packed = encode_df(pack_tokens_df(giant_df, chunk_tokens=CHUNK))
+    key = ["doc_id", "chunk_idx"]
+    assert fused.sort(key).collect() == packed.select(*fused.columns).sort(key).collect()
+
+
+def _auto_df(spark, tmp_path, name, rows):
+    """rows: (doc_id, n, stored n_tok); tokens in runs of 4."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / f"{name}.parquet")
+    pq.write_table(pa.table({
+        "doc_id": [d for d, _, _ in rows],
+        "tokens": pa.array([(np.arange(n) // 4 % 97).tolist() for _, n, _ in rows],
+                           type=pa.list_(pa.int32())),
+        "n_tok": pa.array([t for _, _, t in rows], type=pa.int32()),
+        "source": ["s"] * len(rows),
+    }), path)
+    return spark.read.parquet(path)
+
+
+def test_auto_rerun_resizes_from_its_aggregate(spark, tmp_path, monkeypatch):
+    """An auto rerun takes its chunk size from the fingerprint aggregate:
+    when growth changes the size it writes with the new size (no sizing
+    job, no stale hit), and a stale stored n_tok gives the size
+    auto_chunk_tokens gives."""
+    from rle_array_spark import tableio
+    from rle_array_spark.tableio import AUTO_CHUNK_MIN, auto_chunk_tokens, read_snapshot
+
+    parts, big = 3, AUTO_CHUNK_MIN + 500
+    small = [(f"d{i}", 40 + i, 40 + i) for i in range(8)]
+    out = str(tmp_path / "auto")
+    before = _auto_df(spark, tmp_path, "before", small + [("g", AUTO_CHUNK_MIN - 1, AUTO_CHUNK_MIN - 1)])
+    assert {r["status"] for r in encode_to_dir(before, out, num_partitions=parts, chunk_tokens="auto")} == {"encoded"}
+    assert read_snapshot(out)["chunk_tokens"] is None
+
+    sizing = []
+    real = tableio.auto_chunk_tokens
+    monkeypatch.setattr(tableio, "auto_chunk_tokens", lambda *a: sizing.append(a) or real(*a))
+    grown = _auto_df(spark, tmp_path, "grown", small + [("g", big, big)])
+    lineage = encode_to_dir(grown, out, num_partitions=parts, chunk_tokens="auto")
+    assert sizing == []
+    assert {r["status"] for r in lineage} == {"encoded"}
+    assert read_snapshot(out)["chunk_tokens"] == AUTO_CHUNK_MIN == real(grown, parts)
+    assert sum(r["n_rows"] for r in lineage) == len(small) + 2
+    assert verify_roundtrip(grown, read_blocks(spark, out), reassemble_chunks=True) == 0
+
+    # the same tokens with g's stored n_tok stale below the floor: sizing
+    # reads n_tok like auto_chunk_tokens (never the array size), so the
+    # run is unchunked; only partitions whose rows the unchunked first
+    # write committed come back skipped
+    stale = _auto_df(spark, tmp_path, "stale", small + [("g", big, AUTO_CHUNK_MIN - 1)])
+    assert auto_chunk_tokens(stale, parts) is None
+    lineage = encode_to_dir(stale, out, num_partitions=parts, chunk_tokens="auto")
+    assert sizing == []
+    assert read_snapshot(out)["chunk_tokens"] is None
+    first = {r["fingerprint"] for r in read_snapshot(out, 1)["partitions"]}
+    assert "encoded" in {r["status"] for r in lineage}
+    assert all(r["fingerprint"] in first for r in lineage if r["status"] == "skipped")
+    assert sum(r["n_rows"] for r in lineage) == len(small) + 1
+    again = encode_to_dir(stale, out, num_partitions=parts, chunk_tokens="auto")
+    assert {r["status"] for r in again} == {"skipped"} and sizing == []

@@ -307,6 +307,29 @@ def test_cli_stream_rejects_state_partitions(op, capsys):
             f"--max-files-per-trigger applies to --op quantiles or pack, not {op}",
         )
         for op in ("encode", "stats", "dedup")
+    ]
+    + [
+        (
+            ["encode", "--input", "in", "--output", "out", "--commit-mode", "manifest"],
+            "--commit-mode applies only with --salted",
+        ),
+    ]
+    + [
+        (
+            [
+                "stream", "--op", op, "--input", "in", "--output", "out",
+                "--checkpoint", "ckpt", "--codec", "rle",
+            ],
+            f"--codec applies to --op encode, stats or quantiles, not {op}",
+        )
+        for op in ("dedup", "pack")
+    ]
+    + [
+        (
+            ["pack", "--input", "in", "--output", "out", *flag],
+            f"{flag[0]} applies only with --encode",
+        )
+        for flag in (["--codec", "rle"], ["--partitions", "8"], ["--commit-mode", "manifest"])
     ],
 )
 def test_cli_rejects_ignored_flags(argv, message, capsys):
@@ -318,3 +341,77 @@ def test_cli_rejects_ignored_flags(argv, message, capsys):
         main(argv)
     assert exc.value.code == 2
     assert message in capsys.readouterr().err
+
+
+def test_cli_flag_defaults_resolve_without_spark(monkeypatch):
+    """The flags above default to None only to detect explicit use; a job
+    that reads them gets the documented defaults."""
+    from rle_array_spark import jobs
+
+    seen = {}
+    for argv, want in (
+        (["encode", "--input", "i", "--output", "o", "--salted"],
+         {"codec": "auto", "commit_mode": "sidecar", "partitions": 128}),
+        (["pack", "--input", "i", "--output", "o", "--encode"],
+         {"codec": "auto", "commit_mode": "sidecar", "partitions": 128}),
+        (["stream", "--input", "i", "--output", "o", "--checkpoint", "c"], {"codec": "auto"}),
+    ):
+        monkeypatch.setattr(jobs, f"cmd_{argv[0]}", lambda args: seen.update(args=args) or 0)
+        assert jobs.main(argv) == 0
+        assert {k: getattr(seen["args"], k) for k in want} == want
+
+
+def _chunked_input(tmp_path):
+    """Three docs of 50, 3 and 30 tokens: two split at --chunk-tokens 8."""
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    docs = {"a": list(range(50)), "b": [7, 7, 7], "c": [i % 4 for i in range(30)]}
+    pq.write_table(
+        pa.table({
+            "doc_id": list(docs),
+            "tokens": pa.array(list(docs.values()), type=pa.list_(pa.int32())),
+            "n_tok": pa.array([len(t) for t in docs.values()], type=pa.int32()),
+            "source": ["s"] * 3,
+        }),
+        os.path.join(input_dir, "p.parquet"),
+    )
+    return input_dir, docs
+
+
+def _run_in_session(spark, monkeypatch, capsys, argv: list[str]) -> tuple[int, dict]:
+    """A job's exit code and JSON line, run in the test session (a job
+    stops its session at the end; this one must survive)."""
+    from rle_array_spark import jobs
+
+    monkeypatch.setattr(jobs, "_session", lambda args: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    code = jobs.main(argv)
+    return code, json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+@pytest.mark.parametrize("salted", [True, False])
+@pytest.mark.parametrize("cmd", ["verify", "decode"])
+def test_cli_decode_verify_chunked(spark, tmp_path, monkeypatch, capsys, cmd, salted):
+    """``verify`` and ``decode`` reassemble blocks that hold chunks, both
+    in a checkpointed dir and in a plain ``encode --chunk-tokens`` dir:
+    no false mismatches, one decoded row per document in token order."""
+    input_dir, docs = _chunked_input(tmp_path)
+    enc_dir = str(tmp_path / "enc")
+    salted_args = ["--salted", "--partitions", "4"] if salted else []
+    _, enc = _run_in_session(spark, monkeypatch, capsys, [
+        "encode", "--input", input_dir, "--output", enc_dir, "--chunk-tokens", "8", *salted_args,
+    ])
+    assert enc["rows"] == 7 + 1 + 4  # 50 and 30 tokens split into 7 and 4 chunks
+    if cmd == "verify":
+        code, ver = _run_in_session(
+            spark, monkeypatch, capsys, ["verify", "--input", input_dir, "--blocks", enc_dir]
+        )
+        assert (code, ver["mismatches"]) == (0, 0)
+    else:
+        dec_dir = str(tmp_path / "dec")
+        _, dec = _run_in_session(
+            spark, monkeypatch, capsys, ["decode", "--blocks", enc_dir, "--output", dec_dir]
+        )
+        assert dec["rows"] == 3
+        got = pq.ParquetDataset(dec_dir).read().to_pydict()
+        assert dict(zip(got["doc_id"], got["tokens"])) == docs

@@ -110,6 +110,28 @@ def test_epoch_seed_changes_order_not_content(corpus):
         assert 0 < len(r) * L <= tot
 
 
+def test_epoch_contract_of_pack_examples(spark):
+    """The ``jobs pack --seed`` contract on the production path: over docs
+    whose lengths are multiples of seq_len, three seeds give three
+    distinct example orders of one example multiset, and a seed repeats
+    its order exactly."""
+    rows = [
+        (f"e{i:02d}", [i * 10 + j % 3 for j in range((1 + i % 2) * 8)], (1 + i % 2) * 8, "s")
+        for i in range(24)
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
+
+    def epoch(seed):
+        packed = PK.pack_examples(df, seq_len=8, n_shards=2, seed=seed).collect()
+        return [tuple(r["tokens"]) for r in sorted(packed, key=lambda r: (r["shard"], r["example_id"]))]
+
+    orders = [epoch(seed) for seed in (1, 2, 3)]
+    assert len({tuple(o) for o in orders}) == 3
+    assert sorted(orders[0]) == sorted(orders[1]) == sorted(orders[2])
+    assert len(orders[0]) == 36
+    assert epoch(2) == orders[1]
+
+
 def test_packed_feeds_encoder_bit_identical(corpus):
     packed = PK.pack_examples_kernel(corpus, seq_len=L, n_shards=4)
     as_seq = packed.select(

@@ -67,7 +67,8 @@ def _prepass(df, out, encode_first, parts):
     snap = read_snapshot(out)
     length_field = "n_values" if encode_first else "n_tok"
     rows = tableio._chunk_rows(df, snap["chunk_tokens"], length_field)
-    return tableio._salted_fingerprints(rows, length_field, parts, snap["params_key"])
+    part_id = tableio.salted_partition_id(rows, parts)
+    return tableio._salted_fingerprints(rows, part_id, length_field, parts, snap["params_key"])[0]
 
 
 @pytest.mark.parametrize("encode_first,commit_mode", [(True, "sidecar"), (False, "manifest")])
@@ -110,6 +111,12 @@ def test_prepass_fingerprints_match_write_kernel(spark, tmp_path, encode_first, 
 TABLE_COLS = ["toks", "vals", "tags"]
 
 
+def _table_prepass(df, out, parts):
+    rows = tableio._table_rows(df, TABLE_COLS, parts)
+    key = read_snapshot(out)["params_key"]
+    return tableio._salted_fingerprints(rows, F.col("part_id"), "n", parts, key)[0]
+
+
 def _table_df(spark, grow=None, shrink=None):
     rows = []
     for i, d in enumerate(["a", "b", "dup", "dup", "e", "f", "g", "h", "dup"]):
@@ -132,10 +139,7 @@ def test_table_prepass_fingerprints_match_write_kernel(spark, tmp_path, commit_m
     out = str(tmp_path / "t")
     first = encode_table_to_dir(df, TABLE_COLS, out, num_partitions=parts, commit_mode=commit_mode)
     assert any(r["n_rows"] == 0 for r in first)  # an empty partition is covered
-    n_value_cols = [f"{c}__n_values" for c in TABLE_COLS]
-    sizes = df.select("doc_id", *[F.size(c).alias(n) for c, n in zip(TABLE_COLS, n_value_cols)])
-    fps = tableio._doc_fingerprints(sizes, n_value_cols, parts, read_snapshot(out)["params_key"])
-    assert fps == [r["fingerprint"] for r in first]
+    assert _table_prepass(df, out, parts) == [r["fingerprint"] for r in first]
     again = encode_table_to_dir(df, TABLE_COLS, out, num_partitions=parts, commit_mode=commit_mode)
     assert {r["status"] for r in again} == {"skipped"}
 
@@ -156,24 +160,105 @@ def test_table_prepass_fingerprints_match_write_kernel(spark, tmp_path, commit_m
     assert 1 <= statuses.count("encoded") <= 2 and statuses.count("skipped") >= parts - 2
 
 
+def test_table_prepass_null_arrays_and_row_order(spark, tmp_path):
+    """A null array counts 0 values on both sides, and the kernel's rank
+    slot does not depend on the order of duplicate rows."""
+    rows = [
+        ("a", "s", [1, 2], [1.0, None], ["x", None]), ("b", "s", [3], None, None),
+        ("c", "s", [4, 4], [2.0], ["y"]), ("b", "s", [3], None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id string, source string, toks array<int>, vals array<double>, tags array<string>"
+    )
+    out = str(tmp_path / "nulls")
+    first = encode_table_to_dir(df, TABLE_COLS, out, num_partitions=3)
+    assert _table_prepass(df, out, 3) == [r["fingerprint"] for r in first]
+    assert {r["status"] for r in encode_table_to_dir(df, TABLE_COLS, out, num_partitions=3)} == {
+        "skipped"
+    }
+
+    import pyarrow as pa
+
+    key = read_snapshot(out)["params_key"]
+    cols = [f"{c}__n_values" for c in TABLE_COLS]
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": ["b", "a", "b", "b"], **{c: [1, 2, None, 1] for c in cols},
+    })
+    fp = tableio._table_fingerprint([batch], key, cols)
+    assert fp == tableio._table_fingerprint([batch.take([3, 2, 1, 0])], key, cols)
+    assert fp == tableio._fingerprint(["b", "a", "b", "b"], [3, 6, 0, 3], [0, 0, 0, 1], key)
+
+
+# SHA-256 of the data files both writers commit for the inputs of
+# test_data_file_bytes_pinned (P = 4, the session of conftest.py). The
+# token writer's files are named by partition and fingerprint; the table
+# writer's by partition here, since its fingerprints changed when the row
+# slot became a rank (MIGRATION.md) while its bytes did not.
+TOKEN_FILES = {
+    "part-00000-6352c5c5550c9d46.parquet": "d10c3faa93c72635dc624fc73f69a4c2cf799c6ae6bd823e38547cf9f898793a",
+    "part-00001-0c0c0906a0e3073b.parquet": "0412203a8e1f7c45c0282dda52f78589ce925141d4edb496fb0f07ff68b613e0",
+    "part-00002-f1d3020de505ee2c.parquet": "42fc3a81e7d8e40132a5ecf3eadf2318a929392ee0607a9718938c611335db4c",
+    "part-00003-a80793bc09d79401.parquet": "ec13d3d6cac7f820c9818abe1323dc930c1dfef7ba0746908f5633f046e15b7a",
+}
+TABLE_FILES = {
+    "00000": "65ed11db912f4f4c5c50b5a47a499a0fa3d9307eb0170fd1a83dfd5bde0e4192",
+    "00001": "fc602c04c89fae765faf764c540c0c8145a6d804e4cfdcd3576e7b79a2495e7a",
+    "00002": "65294e43373d3e9d4fa4ee7179e3937c3fc61e40fcaaa94d6002616f48944b6f",
+}
+
+
+def test_data_file_bytes_pinned(spark, tmp_path):
+    """The committed bytes of both writers do not move: a giant split by
+    ``chunk_tokens="auto"`` (encoded in either order) and the table
+    writer's duplicate doc_ids, against digests of an earlier commit."""
+    import pyarrow.parquet as pq
+
+    from rle_array_spark.datagen import generate_table
+
+    src = str(tmp_path / "seq.parquet")
+    pq.write_table(generate_table(1, 6, include_edges=True), src)
+    df = spark.read.parquet(src)
+    for encode_first in (True, False):
+        out = str(tmp_path / f"tok{int(encode_first)}")
+        encode_to_dir(df, out, num_partitions=4, chunk_tokens="auto", encode_first=encode_first)
+        assert read_snapshot(out)["chunk_tokens"] == tableio.AUTO_CHUNK_MIN
+        got = _file_hashes(out)
+        assert sorted(got.values()) == sorted(TOKEN_FILES.values())
+        if encode_first:  # the other order has its own params, so names
+            assert got == TOKEN_FILES
+    out = str(tmp_path / "table")
+    encode_table_to_dir(_table_df(spark), TABLE_COLS, out, num_partitions=4)
+    assert {k.split("-")[1]: v for k, v in _file_hashes(out).items()} == TABLE_FILES
+
+
+def _rest(sc, path):
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    with urllib.request.urlopen(base + path, timeout=30) as r:
+        return json.load(r)
+
+
 def _stage_totals(sc, group):
     """(executed stages, shuffle write bytes) of a job group, from the
     status REST endpoint once its jobs have left RUNNING."""
-    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-
-    def get(path):
-        with urllib.request.urlopen(base + path, timeout=30) as r:
-            return json.load(r)
-
     deadline = time.monotonic() + 30
     while True:
-        jobs = [j for j in get("/jobs") if j.get("jobGroup") == group]
+        jobs = [j for j in _rest(sc, "/jobs") if j.get("jobGroup") == group]
         if jobs and all(j["status"] != "RUNNING" for j in jobs) or time.monotonic() > deadline:
             break
         time.sleep(0.2)
     ids = {s for j in jobs for s in j["stageIds"]}
-    ran = [s for s in get("/stages") if s["stageId"] in ids and s["numCompleteTasks"] > 0]
+    ran = [s for s in _rest(sc, "/stages") if s["stageId"] in ids and s["numCompleteTasks"] > 0]
     return len(ran), sum(s["shuffleWriteBytes"] for s in ran)
+
+
+def _sql_executions(sc, after=-1):
+    """The SQL executions with an id above ``after``, once none is running."""
+    deadline = time.monotonic() + 30
+    while True:
+        runs = [e for e in _rest(sc, "/sql?details=true&offset=0&length=100000") if e["id"] > after]
+        if all(e["status"] == "COMPLETED" for e in runs) or time.monotonic() > deadline:
+            return runs
+        time.sleep(0.2)
 
 
 def _grouped(sc, group, fn):
@@ -184,13 +269,15 @@ def _grouped(sc, group, fn):
         sc.setJobGroup("", "")
 
 
-@pytest.mark.parametrize("writer", ["tokens", "table"])
+@pytest.mark.parametrize("writer", ["tokens", "tokens-auto", "table"])
 def test_full_hit_runs_no_encode(spark, sequences, tmp_path, writer):
     sc = spark.sparkContext
     out = str(tmp_path / writer)
-    if writer == "tokens":
+    if writer != "table":
+        chunk_tokens = "auto" if writer == "tokens-auto" else None
+
         def write():
-            return encode_to_dir(sequences, out, num_partitions=6)
+            return encode_to_dir(sequences, out, num_partitions=6, chunk_tokens=chunk_tokens)
     else:
         df = _table_df(spark)
 
@@ -200,18 +287,27 @@ def test_full_hit_runs_no_encode(spark, sequences, tmp_path, writer):
     tag = f"{writer}-{os.getpid()}"
     first = _grouped(sc, f"write-{tag}", write)
     files = _file_hashes(out)
-    again = _grouped(sc, f"rerun-{tag}", write)
-
     stages_w, shuffle_w = _stage_totals(sc, f"write-{tag}")
+    before = max((e["id"] for e in _sql_executions(sc)), default=-1)
+    again = _grouped(sc, f"rerun-{tag}", write)
     stages_r, shuffle_r = _stage_totals(sc, f"rerun-{tag}")
+    runs = _sql_executions(sc, before)
+
     # write: the encode at scan, then the payload shuffle into the kernel
-    assert stages_w == 2 and shuffle_w > 0
-    if writer == "tokens":
+    # (after the two stages of the sizing aggregate on an auto first write)
+    assert stages_w == (4 if writer == "tokens-auto" else 2) and shuffle_w > 0
+    # the rerun is one JVM aggregate: one SQL execution, no Python node
+    # (an auto rerun sizes its chunks in the same aggregate)
+    assert len(runs) == 1, [e["description"] for e in runs]
+    nodes = [n["nodeName"] for n in runs[0]["nodes"]]
+    assert not [n for n in nodes if "Python" in n or "Arrow" in n or "Pandas" in n], nodes
+    if writer != "table":
         # the fingerprint aggregate: per-partition XORs shuffle, no rows
         assert stages_r == 2 and 0 < shuffle_r < shuffle_w / 10, (stages_r, shuffle_r, shuffle_w)
     else:
-        # the totals scan, then doc_id rows shuffle in place of payloads
-        assert stages_r == 3 and 0 < shuffle_r < shuffle_w
+        # doc_id rows shuffle once, in place of payloads, into the rank
+        # window and the fingerprint aggregate
+        assert stages_r == 2 and 0 < shuffle_r < shuffle_w, (stages_r, shuffle_r, shuffle_w)
     assert _file_hashes(out) == files
     # manifest mode rebuilds records from the files, where wall time is 0
     drop = {"status"} | ({"wall_ms"} if writer == "table" else set())
@@ -226,8 +322,7 @@ def test_full_hit_runs_no_encode(spark, sequences, tmp_path, writer):
 def test_no_fingerprint_pass_when_a_hit_is_ruled_out(spark, sequences, tmp_path, monkeypatch, writer):
     """The fingerprint pass runs only when the latest snapshot was written
     with the run's parameters: a rerun after a crashed first write or with
-    new parameters takes the full write path without paying for it. The
-    table writer also skips its pass when the input's totals changed."""
+    new parameters takes the full write path without paying for it."""
     out = str(tmp_path / writer)
     inputs = {
         "tokens": (sequences, sequences.withColumn(
@@ -244,10 +339,9 @@ def test_no_fingerprint_pass_when_a_hit_is_ruled_out(spark, sequences, tmp_path,
 
     with pytest.raises(Exception, match="injected failure"):
         write(4, fail_at_partition=3)
-    prepass = "_salted_fingerprints" if writer == "tokens" else "_doc_fingerprints"
     calls = []
-    real = getattr(tableio, prepass)
-    monkeypatch.setattr(tableio, prepass, lambda *a: calls.append(a) or real(*a))
+    real = tableio._salted_fingerprints
+    monkeypatch.setattr(tableio, "_salted_fingerprints", lambda *a: calls.append(a) or real(*a))
     assert "encoded" in {r["status"] for r in write(4)}  # crashed first write: no snapshot
     assert calls == []
     write(5)  # new parameters
@@ -255,7 +349,7 @@ def test_no_fingerprint_pass_when_a_hit_is_ruled_out(spark, sequences, tmp_path,
     assert {r["status"] for r in write(5)} == {"skipped"}
     assert len(calls) == 1
     assert "encoded" in {r["status"] for r in write(5, grown=True)}
-    assert len(calls) == (2 if writer == "tokens" else 1)
+    assert len(calls) == 2
 
 
 def test_commit_without_hard_links(tmp_path, monkeypatch):
