@@ -362,7 +362,8 @@ def main() -> None:
 
         # sequence packing: epoch-shuffle + fixed-length example assembly
         # over the whole corpus (packing.py; r5). Relational path — the
-        # interleaved A/B winner over the mapInArrow kernel (ab_pack.py)
+        # interleaved A/B winner over the mapInArrow kernel (BASELINE.md
+        # "Round-5 sequence packing: relational vs kernel A/B")
         from rle_array_spark import packing as PK
 
         queries["pack_examples_seq512"] = timed(

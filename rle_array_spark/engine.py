@@ -16,18 +16,25 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from rle_array_spark.blocks import (
+    TOKENS,
+    carried,
+    decode_df as _decode_cols,
+    emit,
+    pair_blocks,
+    payload_cols,
+    rewrite_blocks,
+    rewrite_column,
+    value_counts_df,
+    wide_arrays,
+)
 from rle_array_spark.chooser import DEFAULT_THRESHOLD, choose_codec_batch
 from rle_array_spark.codecs import CODECS, compute_stats
 from rle_array_spark.codecs.rle import reference_rle_nbytes
 
 TOKENS_FIELD = pa.field("tokens", pa.list_(pa.int32()))
 
-BLOCK_SCHEMA = (
-    "doc_id string, source string, codec string, payload binary, "
-    "n_values int, n_runs int, tok_sum long, tok_min int, tok_max int, "
-    "raw_bytes long, encoded_bytes long, ref_rle_bytes long, "
-    "chunk_idx int, n_chunks int, chunk_offset long"
-)
+BLOCK_SCHEMA = TOKENS.ddl()
 
 # A single sequence longer than this is split into multiple blocks before
 # the shuffle — the skew floor otherwise is one row (a 1-billion-token
@@ -102,7 +109,10 @@ def _list_to_numpy(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     Uses list_value_length + list_flatten, which are offset/slice-safe
     (ListArray.offsets is not, after Arrow-level slicing).
     """
-    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False).astype(np.int64)
+    lengths = pc.list_value_length(col)
+    if col.null_count:  # a null list holds no values (list_flatten emits none)
+        lengths = pc.fill_null(lengths, 0)
+    lengths = lengths.to_numpy(zero_copy_only=False).astype(np.int64)
     flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
     if flat.dtype != np.int32:
         flat = flat.astype(np.int32)
@@ -148,7 +158,7 @@ def _chunk_split(batch: pa.RecordBatch, chunk_tokens: int | None):
 
     A row of n > k values becomes ⌈n/k⌉ rows of k with the remainder last;
     shorter rows stay whole. With no ``chunk_tokens`` nothing is cut and a
-    packed batch keeps the chunk columns it carries (:func:`_chunk_cols`).
+    packed batch keeps the chunk columns it carries (``blocks.carried``).
     Chunks of a row are contiguous and in order, so the flat values buffer
     is shared unchanged and only the offsets are re-cut. The per-batch body
     of both :func:`pack_tokens_df` and the chunked :func:`encode_df`."""
@@ -156,7 +166,7 @@ def _chunk_split(batch: pa.RecordBatch, chunk_tokens: int | None):
     doc_id, source = batch.column("doc_id"), batch.column("source")
     lengths = offsets[1:] - offsets[:-1]
     if not chunk_tokens or not lengths.size or int(lengths.max()) <= chunk_tokens:
-        return (flat, offsets, doc_id, source, *_chunk_cols(batch))
+        return (flat, offsets, doc_id, source, *carried(TOKENS, batch))
     n_chunks = np.maximum(1, -(-lengths // chunk_tokens))
     rows = np.repeat(np.arange(lengths.size), n_chunks)
     chunk_idx = np.arange(rows.size) - np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks)
@@ -275,22 +285,6 @@ def _salted_keys(
 # ---------------------------------------------------------------------------
 # Encode
 # ---------------------------------------------------------------------------
-
-def _chunk_cols(batch: pa.RecordBatch) -> tuple[pa.Array, pa.Array, pa.Array]:
-    names = batch.schema.names
-    if "chunk_idx" in names:
-        return (
-            batch.column("chunk_idx"),
-            batch.column("n_chunks"),
-            batch.column("chunk_offset"),
-        )
-    n = batch.num_rows
-    return (
-        pa.array(np.zeros(n, dtype=np.int32)),
-        pa.array(np.ones(n, dtype=np.int32)),
-        pa.array(np.zeros(n, dtype=np.int64)),
-    )
-
 
 def _row_stats(
     flat: np.ndarray,
@@ -438,38 +432,9 @@ def _encode_batch(
     into chunks of ``chunk_tokens`` first (:func:`_chunk_split`)."""
     flat, offsets, doc_id, source, *chunk_cols = _chunk_split(batch, chunk_tokens)
     c = _encode_column(flat, offsets, codec, threshold)
-    codecs_out = c["codec"]
-    payloads = c["payload"]
-    n_values = c["n_values"]
-    n_runs = c["n_runs"]
-    tok_sum = c["tok_sum"]
-    tok_min = c["tok_min"]
-    tok_max = c["tok_max"]
-    enc_bytes = c["encoded_bytes"]
-    ref_bytes = c["ref_rle_bytes"]
-
-    return pa.RecordBatch.from_arrays(
-        [
-            doc_id,
-            source,
-            pa.array(codecs_out, type=pa.string()),
-            pa.array(payloads, type=pa.binary()),
-            pa.array(n_values),
-            pa.array(n_runs),
-            pa.array(tok_sum),
-            pa.array(tok_min),
-            pa.array(tok_max),
-            pa.array((n_values.astype(np.int64)) * 4),
-            pa.array(enc_bytes),
-            pa.array(ref_bytes),
-            *chunk_cols,
-        ],
-        names=[
-            "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-            "tok_sum", "tok_min", "tok_max", "raw_bytes", "encoded_bytes",
-            "ref_rle_bytes", "chunk_idx", "n_chunks", "chunk_offset",
-        ],
-    )
+    c.update(zip(("chunk_idx", "n_chunks", "chunk_offset"), chunk_cols))
+    c.update(doc_id=doc_id, source=source, raw_bytes=c["n_values"].astype(np.int64) * 4)
+    return emit(TOKENS, c)
 
 
 def encode_df(
@@ -618,77 +583,18 @@ TRANSFORM_OPS = {
 }
 
 
-def _transform_column_arrays(codecs_col, payload_col, n_col, fn):
-    """Apply transform_block_stats to one (codec, payload, n_values)
-    column triple of an Arrow batch → (codecs list, payloads list,
-    n_runs, tok_sum, tok_min, tok_max arrays) — the per-row stats loop
-    shared by ``_transform_kernel`` (token blocks) and
-    ``transform_frame_df`` (one column of a wide frame row)."""
+def _transform_row(fn):
+    """Row function for :func:`rewrite_blocks` applying value-map ``fn``
+    through transform_block_stats (compressed-domain where the codec
+    allows, decode+re-choose fallback otherwise); its one-parse exact
+    stats are the block's metadata core, so no payload is parsed twice."""
     from rle_array_spark.codecs.transform import transform_block_stats
 
-    n_rows = len(codecs_col)
-    new_codecs: list[str] = []
-    new_payloads: list[bytes] = []
-    n_runs = np.empty(n_rows, dtype=np.int32)
-    tok_sum = np.empty(n_rows, dtype=np.int64)
-    tok_min = np.empty(n_rows, dtype=np.int32)
-    tok_max = np.empty(n_rows, dtype=np.int32)
-    for i in range(n_rows):
-        c, p, r, s, lo, hi = transform_block_stats(
-            codecs_col[i],
-            memoryview(payload_col[i].as_buffer()),
-            int(n_col[i]),
-            fn,
-        )
-        new_codecs.append(c)
-        new_payloads.append(p)
-        n_runs[i], tok_sum[i], tok_min[i], tok_max[i] = r, s, lo, hi
-    return new_codecs, new_payloads, n_runs, tok_sum, tok_min, tok_max
+    def row(codec, payload, n):
+        c, p, *core = transform_block_stats(codec, payload, n, fn)
+        return c, p, n, core
 
-
-def _transform_kernel(fn):
-    """Build the mapInArrow kernel applying value-map ``fn`` to every block
-    via transform_block_stats (compressed-domain where the codec allows,
-    decode+re-choose fallback otherwise) with exact metadata recompute."""
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            (
-                new_codecs, new_payloads, n_runs, tok_sum, tok_min, tok_max
-            ) = _transform_column_arrays(
-                batch.column("codec").to_pylist(),
-                batch.column("payload"),
-                batch.column("n_values").to_numpy(zero_copy_only=False),
-                fn,
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    batch.column("n_values"),
-                    pa.array(n_runs),
-                    pa.array(tok_sum),
-                    pa.array(tok_min),
-                    pa.array(tok_max),
-                    batch.column("raw_bytes"),
-                    pa.array(np.array([len(p) for p in new_payloads], dtype=np.int64)),
-                    pa.array(np.array(
-                        [reference_rle_nbytes(int(r)) for r in n_runs], dtype=np.int64
-                    )),
-                    *_chunk_cols(batch),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-                    "tok_sum", "tok_min", "tok_max", "raw_bytes", "encoded_bytes",
-                    "ref_rle_bytes", "chunk_idx", "n_chunks", "chunk_offset",
-                ],
-            )
-
-    return kernel
+    return row
 
 
 def transform_blocks(blocks: DataFrame, op: str, operand: int) -> DataFrame:
@@ -701,16 +607,7 @@ def transform_blocks(blocks: DataFrame, op: str, operand: int) -> DataFrame:
     encoded_bytes, ref_rle_bytes) is recomputed EXACTLY inside the kernel
     from the codec structure — non-monotonic ops (mod, bitand, sub_floor)
     and run-merging ops (mul 0) keep the zone maps truthful."""
-    if op not in TRANSFORM_OPS:
-        raise ValueError(f"unsupported op {op!r}; one of {sorted(TRANSFORM_OPS)}")
-    base_fn, valid = TRANSFORM_OPS[op]
-    if not valid(operand):
-        raise ValueError(f"invalid operand {operand} for op {op!r}")
-
-    def fn(v: np.ndarray) -> np.ndarray:
-        return base_fn(v.astype(np.int64), operand)
-
-    return blocks.mapInArrow(_transform_kernel(fn), BLOCK_SCHEMA)
+    return transform_blocks_chain(blocks, [(op, operand)])
 
 
 def transform_blocks_chain(blocks: DataFrame, steps) -> DataFrame:
@@ -733,7 +630,7 @@ def transform_blocks_chain(blocks: DataFrame, steps) -> DataFrame:
     once from the original — both choices are valid encodings of the
     same values; differential-tested on decode + metadata)."""
     fn = _resolve_token_chain(steps)
-    return blocks.mapInArrow(_transform_kernel(fn), BLOCK_SCHEMA)
+    return rewrite_blocks(blocks, TOKENS, _transform_row(fn))
 
 
 def _resolve_token_chain(steps):
@@ -765,19 +662,24 @@ def _resolve_token_chain(steps):
     return fn
 
 
-def _fuse_post(op: str, post):
-    """→ the zip callable for ``op`` with an optional ``TRANSFORM_OPS``
-    post chain composed onto its output — shared by ``zip_blocks_df`` and
-    ``zip_frame_df`` so chain semantics can't drift between the two."""
-    base = ZIP_OPS[op]
-    if post is None:
-        return base
-    chain = _resolve_token_chain(post)
+def _zip_row(op: str, post):
+    """→ the pair row function zipping two payloads with ``op`` and an
+    optional ``TRANSFORM_OPS`` post chain composed onto its output —
+    shared by ``zip_blocks_df`` and ``zip_frame_df`` so chain semantics
+    can't drift between the two."""
+    from rle_array_spark.codecs.zip_ops import zip_blocks
 
-    def fused(a_, b_):
-        return chain(base(a_, b_))
+    if op not in ZIP_OPS:
+        raise ValueError(f"unsupported zip op {op!r}; one of {sorted(ZIP_OPS)}")
+    fn = ZIP_OPS[op]
+    if post is not None:
+        chain, base = _resolve_token_chain(post), fn
+        fn = lambda a_, b_: chain(base(a_, b_))  # noqa: E731
 
-    return fused
+    def row(ca, pa_, cb, pb, n):
+        return zip_blocks(ca, pa_, cb, pb, n, fn)
+
+    return row
 
 
 def transform_blocks_fn(blocks: DataFrame, fn) -> DataFrame:
@@ -795,7 +697,7 @@ def transform_blocks_fn(blocks: DataFrame, fn) -> DataFrame:
     def wrapped(v: np.ndarray) -> np.ndarray:
         return np.asarray(fn(v.astype(np.int64)))
 
-    return blocks.mapInArrow(_transform_kernel(wrapped), BLOCK_SCHEMA)
+    return rewrite_blocks(blocks, TOKENS, _transform_row(wrapped))
 
 
 def reverse_blocks(blocks: DataFrame) -> DataFrame:
@@ -851,6 +753,32 @@ def reverse_blocks(blocks: DataFrame) -> DataFrame:
     return blocks.mapInArrow(kernel, BLOCK_SCHEMA)
 
 
+def _runs_core(rv: np.ndarray, rl: np.ndarray) -> tuple[int, int, int, int]:
+    """(n_runs, sum, min, max) of a block given as runs."""
+    if not rv.size:
+        return 0, 0, 0, 0
+    return rv.size, int(np.dot(rv.astype(np.int64), rl)), int(rv.min()), int(rv.max())
+
+
+def take_positions(stride: int | None, offset: int, indices) -> np.ndarray | None:
+    """Validate a positional gather's arguments (a ``stride``/``offset``
+    grid, or sorted non-negative ``indices`` with repeats allowed — the
+    reference ``_take_kernel`` supports repeated positions) → the indices
+    as int64, or None for the grid."""
+    if (stride is None) == (indices is None):
+        raise ValueError("exactly one of stride / indices is required")
+    if stride is not None and (stride < 1 or offset < 0):
+        raise ValueError(f"need stride >= 1 and offset >= 0, got {stride}/{offset}")
+    if indices is None:
+        return None
+    idx = np.asarray(indices, dtype=np.int64)
+    if idx.size and idx[0] < 0:
+        raise ValueError("indices must be non-negative")
+    if np.any(np.diff(idx) < 0):
+        raise ValueError("indices must be sorted non-decreasing")
+    return idx
+
+
 def take_blocks(
     blocks: DataFrame,
     stride: int | None = None,
@@ -873,21 +801,7 @@ def take_blocks(
     For RLE input the gathered sequence is never materialized (one
     searchsorted into run ends); metadata is recomputed exactly from the
     output runs."""
-    if (stride is None) == (indices is None):
-        raise ValueError("exactly one of stride / indices is required")
-    if stride is not None and (stride < 1 or offset < 0):
-        raise ValueError(f"need stride >= 1 and offset >= 0, got {stride}/{offset}")
-    if indices is not None:
-        # sorted, repeats ALLOWED (reference _take_kernel supports repeated
-        # positions; run-reuse handles them for free)
-        idx_global = np.asarray(indices, dtype=np.int64)
-        if idx_global.size:
-            if idx_global[0] < 0:
-                raise ValueError("indices must be non-negative")
-            if np.any(np.diff(idx_global) < 0):
-                raise ValueError("indices must be sorted non-decreasing")
-    else:
-        idx_global = None
+    idx_global = take_positions(stride, offset, indices)
 
     def kernel(batches):
         from rle_array_spark.codecs.reduce import take_runs
@@ -896,22 +810,12 @@ def take_blocks(
         for batch in batches:
             if not batch.num_rows:
                 continue
-            codecs_col = batch.column("codec").to_pylist()
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            payload_col = batch.column("payload")
-            _, _, chunk_off_arr = _chunk_cols(batch)
-            chunk_off = np.asarray(chunk_off_arr)
-            n_rows = batch.num_rows
-            new_payloads: list[bytes] = []
-            n_values = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            tok_sum = np.empty(n_rows, dtype=np.int64)
-            tok_min = np.empty(n_rows, dtype=np.int32)
-            tok_max = np.empty(n_rows, dtype=np.int32)
-            new_chunk_off = np.empty(n_rows, dtype=np.int64)
-            for i in range(n_rows):
+            codecs_col, payload_col, n_col = payload_cols(batch)
+            codecs_col, n_col = codecs_col.to_pylist(), n_col.to_numpy(zero_copy_only=False)
+            idx_col, n_chunks_col, chunk_off = carried(TOKENS, batch)
+            cols = {f: [] for f in ("codec", "payload", "n_values", *TOKENS.meta, "chunk_offset")}
+            for i, coff in enumerate(np.asarray(chunk_off).tolist()):
                 n = int(n_col[i])
-                coff = int(chunk_off[i])
                 if stride is not None:
                     start_local = max(offset - coff, (offset - coff) % stride)
                     idx = np.arange(start_local, n, stride, dtype=np.int64)
@@ -924,44 +828,15 @@ def take_blocks(
                 rv, rl = take_runs(
                     codecs_col[i], memoryview(payload_col[i].as_buffer()), n, idx
                 )
-                new_payloads.append(encode_runs(rv, rl))
-                n_values[i] = idx.size
-                n_runs[i] = rv.size
-                tok_sum[i] = int(np.dot(rv.astype(np.int64), rl)) if rv.size else 0
-                tok_min[i] = int(rv.min()) if rv.size else 0
-                tok_max[i] = int(rv.max()) if rv.size else 0
-                new_chunk_off[i] = taken_before
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(["rle"] * n_rows, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    pa.array(n_values),
-                    pa.array(n_runs),
-                    pa.array(tok_sum),
-                    pa.array(tok_min),
-                    pa.array(tok_max),
-                    pa.array(n_values.astype(np.int64) * 4),
-                    pa.array(
-                        np.array([len(p) for p in new_payloads], dtype=np.int64)
-                    ),
-                    pa.array(
-                        np.array(
-                            [reference_rle_nbytes(int(r)) for r in n_runs],
-                            dtype=np.int64,
-                        )
-                    ),
-                    _chunk_cols(batch)[0],
-                    _chunk_cols(batch)[1],
-                    pa.array(new_chunk_off),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-                    "tok_sum", "tok_min", "tok_max", "raw_bytes", "encoded_bytes",
-                    "ref_rle_bytes", "chunk_idx", "n_chunks", "chunk_offset",
-                ],
-            )
+                p = encode_runs(rv, rl)
+                core = _runs_core(rv, rl)
+                for col, v in zip(cols.values(), (
+                    "rle", p, idx.size, *TOKENS.stats("rle", p, idx.size, core), taken_before
+                )):
+                    col.append(v)
+            cols.update(doc_id=batch.column("doc_id"), source=batch.column("source"),
+                        chunk_idx=idx_col, n_chunks=n_chunks_col)
+            yield emit(TOKENS, cols)
 
     return blocks.mapInArrow(kernel, BLOCK_SCHEMA)
 
@@ -1285,86 +1160,8 @@ def zip_blocks_df(
     plus N transform stages). Decode-identical to composing
     ``transform_blocks`` after the zip; intermediate values run in int64
     and only the final values hit the ``_checked_int32`` contract."""
-    if op not in ZIP_OPS:
-        raise ValueError(f"unsupported zip op {op!r}; one of {sorted(ZIP_OPS)}")
-    zip_fn = _fuse_post(op, post)
-
-    a = blocks_a.select(
-        "doc_id", "source", "chunk_idx", "n_chunks", "chunk_offset",
-        F.col("codec").alias("codec_a"), F.col("payload").alias("payload_a"),
-        "n_values", "raw_bytes",
-    )
-    b = blocks_b.select(
-        "doc_id", "chunk_idx",
-        F.col("codec").alias("codec_b"), F.col("payload").alias("payload_b"),
-        F.col("n_values").alias("n_values_b"),
-    )
-    joined = a.join(b, ["doc_id", "chunk_idx"], "inner")
-
-    def kernel(batches):
-        from rle_array_spark.codecs.reduce import payload_stats
-        from rle_array_spark.codecs.zip_ops import zip_blocks
-
-        base_fn = zip_fn
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ca = batch.column("codec_a").to_pylist()
-            cb = batch.column("codec_b").to_pylist()
-            pa_col = batch.column("payload_a")
-            pb_col = batch.column("payload_b")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            nb_col = batch.column("n_values_b").to_numpy(zero_copy_only=False)
-            n_rows = batch.num_rows
-            new_codecs: list[str] = []
-            new_payloads: list[bytes] = []
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            tok_sum = np.empty(n_rows, dtype=np.int64)
-            tok_min = np.empty(n_rows, dtype=np.int32)
-            tok_max = np.empty(n_rows, dtype=np.int32)
-            for i in range(n_rows):
-                nv = int(n_col[i])
-                if nv != int(nb_col[i]):
-                    raise ValueError(
-                        f"zip length mismatch for a row: {nv} != {int(nb_col[i])}"
-                    )
-                c, p = zip_blocks(
-                    ca[i], memoryview(pa_col[i].as_buffer()),
-                    cb[i], memoryview(pb_col[i].as_buffer()),
-                    nv, base_fn,
-                )
-                new_codecs.append(c)
-                new_payloads.append(p)
-                n_runs[i], tok_sum[i], tok_min[i], tok_max[i] = payload_stats(c, p, nv)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    batch.column("n_values"),
-                    pa.array(n_runs),
-                    pa.array(tok_sum),
-                    pa.array(tok_min),
-                    pa.array(tok_max),
-                    batch.column("raw_bytes"),
-                    pa.array(np.array([len(p) for p in new_payloads], dtype=np.int64)),
-                    pa.array(np.array(
-                        [reference_rle_nbytes(int(r)) for r in n_runs], dtype=np.int64
-                    )),
-                    batch.column("chunk_idx"),
-                    batch.column("n_chunks"),
-                    batch.column("chunk_offset"),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-                    "tok_sum", "tok_min", "tok_max", "raw_bytes", "encoded_bytes",
-                    "ref_rle_bytes", "chunk_idx", "n_chunks", "chunk_offset",
-                ],
-            )
-
-    return joined.mapInArrow(kernel, BLOCK_SCHEMA)
+    return pair_blocks(blocks_a, blocks_b, TOKENS, ["doc_id", "chunk_idx"], _zip_row(op, post),
+                       what="a zip row")
 
 
 def mask_blocks_df(value_blocks: DataFrame, mask_blocks_in: DataFrame) -> DataFrame:
@@ -1378,96 +1175,11 @@ def mask_blocks_df(value_blocks: DataFrame, mask_blocks_in: DataFrame) -> DataFr
     recomputed exactly. Alignment is a shuffle join here (two separate
     DataFrames); in a deployed wide blocks table both columns share a row
     and the gather is join-free."""
-    v = value_blocks.select(
-        "doc_id", "source", "chunk_idx", "n_chunks",
-        F.col("codec").alias("codec_v"), F.col("payload").alias("payload_v"),
-        "n_values",
-    )
-    m = mask_blocks_in.select(
-        "doc_id", "chunk_idx",
-        F.col("codec").alias("codec_m"), F.col("payload").alias("payload_m"),
-        F.col("n_values").alias("n_values_m"),
-    )
-    joined = v.join(m, ["doc_id", "chunk_idx"], "inner")
+    from rle_array_spark.codecs.zip_ops import mask_blocks
 
-    def kernel(batches):
-        from rle_array_spark.codecs.reduce import payload_stats
-        from rle_array_spark.codecs.zip_ops import mask_blocks
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            cv = batch.column("codec_v").to_pylist()
-            cm = batch.column("codec_m").to_pylist()
-            pv_col = batch.column("payload_v")
-            pm_col = batch.column("payload_m")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            nm_col = batch.column("n_values_m").to_numpy(zero_copy_only=False)
-            n_rows = batch.num_rows
-            new_codecs: list[str] = []
-            new_payloads: list[bytes] = []
-            new_n = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            tok_sum = np.empty(n_rows, dtype=np.int64)
-            tok_min = np.empty(n_rows, dtype=np.int32)
-            tok_max = np.empty(n_rows, dtype=np.int32)
-            for i in range(n_rows):
-                nv = int(n_col[i])
-                if nv != int(nm_col[i]):
-                    raise ValueError(
-                        f"mask length mismatch for a row: {nv} != {int(nm_col[i])}"
-                    )
-                c, p, nn = mask_blocks(
-                    cv[i], memoryview(pv_col[i].as_buffer()),
-                    cm[i], memoryview(pm_col[i].as_buffer()),
-                    nv,
-                )
-                new_codecs.append(c)
-                new_payloads.append(p)
-                new_n[i] = nn
-                n_runs[i], tok_sum[i], tok_min[i], tok_max[i] = payload_stats(c, p, nn)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    pa.array(new_n),
-                    pa.array(n_runs),
-                    pa.array(tok_sum),
-                    pa.array(tok_min),
-                    pa.array(tok_max),
-                    pa.array((new_n.astype(np.int64)) * 4),
-                    pa.array(np.array([len(p) for p in new_payloads], dtype=np.int64)),
-                    pa.array(np.array(
-                        [reference_rle_nbytes(int(r)) for r in n_runs], dtype=np.int64
-                    )),
-                    batch.column("chunk_idx"),
-                    batch.column("n_chunks"),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-                    "tok_sum", "tok_min", "tok_max", "raw_bytes", "encoded_bytes",
-                    "ref_rle_bytes", "chunk_idx", "n_chunks",
-                ],
-            )
-
-    schema = (
-        "doc_id string, source string, codec string, payload binary, "
-        "n_values int, n_runs int, tok_sum long, tok_min int, tok_max int, "
-        "raw_bytes long, encoded_bytes long, ref_rle_bytes long, "
-        "chunk_idx int, n_chunks int"
-    )
-    out = joined.mapInArrow(kernel, schema)
-    # chunk offsets shift when positions are dropped: recompute the per-doc
-    # running offset relationally (exact, window over the tiny blocks table)
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("chunk_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return out.withColumn(
-        "chunk_offset", F.coalesce(F.sum("n_values").over(w), F.lit(0)).cast("long")
+    return pair_blocks(
+        value_blocks, mask_blocks_in, TOKENS, ["doc_id", "chunk_idx"], mask_blocks, resize=True,
+        what="a mask row",
     )
 
 
@@ -1486,98 +1198,11 @@ def filter_blocks_df(
     chooser trials elsewhere). The only exchange in the plan is the
     per-doc chunk_offset window at the end, carrying already-filtered
     encoded payloads."""
-    if not predicate_ops:
-        raise ValueError("predicate_ops must be a non-empty [(op, operand), ...]")
-    fns = []
-    for op, k in predicate_ops:
-        if op not in TRANSFORM_OPS:
-            raise ValueError(f"unsupported op {op!r}; one of {sorted(TRANSFORM_OPS)}")
-        base_fn, valid = TRANSFORM_OPS[op]
-        if not valid(k):
-            raise ValueError(f"invalid operand {k} for op {op!r}")
-        fns.append(lambda v, _f=base_fn, _k=k: _f(v.astype(np.int64), _k))
+    from rle_array_spark.codecs.zip_ops import filter_block
 
-    def pred(v: np.ndarray) -> np.ndarray:
-        for fn in fns:
-            v = fn(v)
-        return v
-
-    def kernel(batches):
-        from rle_array_spark.codecs.reduce import payload_stats
-        from rle_array_spark.codecs.zip_ops import filter_block
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            payload_col = batch.column("payload")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            n_rows = batch.num_rows
-            new_codecs: list[str] = []
-            new_payloads: list[bytes] = []
-            new_n = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            tok_sum = np.empty(n_rows, dtype=np.int64)
-            tok_min = np.empty(n_rows, dtype=np.int32)
-            tok_max = np.empty(n_rows, dtype=np.int32)
-            for i in range(n_rows):
-                nv = int(n_col[i])
-                cv = codecs_col[i]
-                pv = memoryview(payload_col[i].as_buffer())
-                c, p, nn = filter_block(cv, pv, nv, pred)
-                new_codecs.append(c)
-                new_payloads.append(p)
-                new_n[i] = nn
-                n_runs[i], tok_sum[i], tok_min[i], tok_max[i] = payload_stats(
-                    c, p, nn
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    pa.array(new_n),
-                    pa.array(n_runs),
-                    pa.array(tok_sum),
-                    pa.array(tok_min),
-                    pa.array(tok_max),
-                    pa.array(new_n.astype(np.int64) * 4),
-                    pa.array(
-                        np.array([len(p) for p in new_payloads], dtype=np.int64)
-                    ),
-                    pa.array(
-                        np.array(
-                            [reference_rle_nbytes(int(r)) for r in n_runs],
-                            dtype=np.int64,
-                        )
-                    ),
-                    batch.column("chunk_idx"),
-                    batch.column("n_chunks"),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-                    "tok_sum", "tok_min", "tok_max", "raw_bytes", "encoded_bytes",
-                    "ref_rle_bytes", "chunk_idx", "n_chunks",
-                ],
-            )
-
-    schema = (
-        "doc_id string, source string, codec string, payload binary, "
-        "n_values int, n_runs int, tok_sum long, tok_min int, tok_max int, "
-        "raw_bytes long, encoded_bytes long, ref_rle_bytes long, "
-        "chunk_idx int, n_chunks int"
-    )
-    out = blocks.select(
-        "doc_id", "source", "codec", "payload", "n_values", "chunk_idx", "n_chunks"
-    ).mapInArrow(kernel, schema)
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("chunk_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return out.withColumn(
-        "chunk_offset", F.coalesce(F.sum("n_values").over(w), F.lit(0)).cast("long")
+    pred = _resolve_token_chain(predicate_ops)
+    return rewrite_blocks(
+        blocks, TOKENS, lambda c, p, n: filter_block(c, p, n, pred), resize=True
     )
 
 
@@ -1592,46 +1217,9 @@ def value_counts_blocks_df(blocks: DataFrame) -> DataFrame:
     scale-up. Returns (doc_id, value, count) per-doc partials merged
     across chunks; aggregate further (groupBy value) for a corpus
     histogram."""
+    from rle_array_spark.codecs.reduce import value_counts_block
 
-    def kernel(batches):
-        from rle_array_spark.codecs.reduce import value_counts_block
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            payload_col = batch.column("payload")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            doc_ids = batch.column("doc_id").to_pylist()
-            out_docs: list[str] = []
-            out_vals: list[np.ndarray] = []
-            out_counts: list[np.ndarray] = []
-            for i in range(batch.num_rows):
-                vals, counts = value_counts_block(
-                    codecs_col[i],
-                    memoryview(payload_col[i].as_buffer()),
-                    int(n_col[i]),
-                )
-                if vals.size:
-                    out_docs.extend([doc_ids[i]] * vals.size)
-                    out_vals.append(vals)
-                    out_counts.append(counts)
-            if out_docs:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_docs, type=pa.string()),
-                        pa.array(np.concatenate(out_vals)),
-                        pa.array(np.concatenate(out_counts)),
-                    ],
-                    names=["doc_id", "value", "count"],
-                )
-
-    partials = blocks.select("doc_id", "codec", "payload", "n_values").mapInArrow(
-        kernel, "doc_id string, value int, count long"
-    )
-    return partials.groupBy("doc_id", "value").agg(
-        F.sum("count").alias("count")
-    )
+    return value_counts_df(blocks, value_counts_block, "int")
 
 
 def source_quantiles_df(
@@ -1873,53 +1461,21 @@ def sort_blocks_df(blocks: DataFrame, descending: bool = False) -> DataFrame:
             child = hist.flatten()
             all_vals = child.field("value").to_numpy(zero_copy_only=False)
             all_counts = child.field("count").to_numpy(zero_copy_only=False)
-            n_rows = batch.num_rows
-            payloads: list[bytes] = []
-            n_values = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            tok_sum = np.empty(n_rows, dtype=np.int64)
-            tok_min = np.empty(n_rows, dtype=np.int32)
-            tok_max = np.empty(n_rows, dtype=np.int32)
-            for i in range(n_rows):
+            cols = {f: [] for f in ("codec", "payload", "n_values", *TOKENS.meta)}
+            for i in range(batch.num_rows):
                 lo, hi = int(offsets[i]), int(offsets[i + 1])
                 vals = all_vals[lo:hi].astype(np.int32)
                 counts = all_counts[lo:hi].astype(np.int64)
-                payloads.append(encode_runs(vals, counts))
-                n_values[i] = int(counts.sum())
-                n_runs[i] = vals.size
-                tok_sum[i] = int(np.dot(vals.astype(np.int64), counts))
-                tok_min[i] = int(vals.min()) if vals.size else 0
-                tok_max[i] = int(vals.max()) if vals.size else 0
-            zeros = np.zeros(n_rows, dtype=np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(["rle"] * n_rows, type=pa.string()),
-                    pa.array(payloads, type=pa.binary()),
-                    pa.array(n_values),
-                    pa.array(n_runs),
-                    pa.array(tok_sum),
-                    pa.array(tok_min),
-                    pa.array(tok_max),
-                    pa.array(n_values.astype(np.int64) * 4),
-                    pa.array(np.array([len(p) for p in payloads], dtype=np.int64)),
-                    pa.array(
-                        np.array(
-                            [reference_rle_nbytes(int(r)) for r in n_runs],
-                            dtype=np.int64,
-                        )
-                    ),
-                    pa.array(zeros),
-                    pa.array(np.ones(n_rows, dtype=np.int32)),
-                    pa.array(np.zeros(n_rows, dtype=np.int64)),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-                    "tok_sum", "tok_min", "tok_max", "raw_bytes", "encoded_bytes",
-                    "ref_rle_bytes", "chunk_idx", "n_chunks", "chunk_offset",
-                ],
-            )
+                p = encode_runs(vals, counts)
+                n = int(counts.sum())
+                for col, v in zip(cols.values(), (
+                    "rle", p, n, *TOKENS.stats("rle", p, n, _runs_core(vals, counts))
+                )):
+                    col.append(v)
+            # one unchunked block per doc
+            cols.update({c: np.full(batch.num_rows, v) for c, v in TOKENS.carried.items()})
+            cols.update(doc_id=batch.column("doc_id"), source=batch.column("source"))
+            yield emit(TOKENS, cols)
 
     return per_doc.mapInArrow(kernel, BLOCK_SCHEMA)
 
@@ -2036,23 +1592,9 @@ def verify_roundtrip(df: DataFrame, blocks: DataFrame, reassemble_chunks: bool =
 # wide-blocks form additionally makes cross-column ops join-free)
 # ---------------------------------------------------------------------------
 
-_FRAME_COL_FIELDS = (
-    ("codec", "string"),
-    ("payload", "binary"),
-    ("n_values", "int"),
-    ("n_runs", "int"),
-    ("tok_sum", "long"),
-    ("tok_min", "int"),
-    ("tok_max", "int"),
-    ("encoded_bytes", "long"),
-)
-
-
 def frame_schema(token_cols: list[str]) -> str:
-    cols = ["doc_id string", "source string"]
-    for c in token_cols:
-        cols.extend(f"{c}__{f} {t}" for f, t in _FRAME_COL_FIELDS)
-    return ", ".join(cols)
+    return ", ".join(["doc_id string, source string"]
+                     + [TOKENS.ddl(TOKENS.wide, prefix=f"{c}__") for c in token_cols])
 
 
 def encode_frame_df(
@@ -2078,21 +1620,10 @@ def encode_frame_df(
             arrays = [batch.column("doc_id"), batch.column("source")]
             names = ["doc_id", "source"]
             for cname in token_cols:
-                flat, offsets = _list_to_numpy(batch.column(cname))
-                c = _encode_column(flat, offsets, codec, threshold)
-                arrays.extend(
-                    [
-                        pa.array(c["codec"], type=pa.string()),
-                        pa.array(c["payload"], type=pa.binary()),
-                        pa.array(c["n_values"]),
-                        pa.array(c["n_runs"]),
-                        pa.array(c["tok_sum"]),
-                        pa.array(c["tok_min"]),
-                        pa.array(c["tok_max"]),
-                        pa.array(c["encoded_bytes"]),
-                    ]
-                )
-                names.extend(f"{cname}__{f}" for f, _ in _FRAME_COL_FIELDS)
+                c = _encode_column(*_list_to_numpy(batch.column(cname)), codec, threshold)
+                col_arrays, col_names = wide_arrays(TOKENS, c, cname)
+                arrays += col_arrays
+                names += col_names
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.select("doc_id", "source", *token_cols).mapInArrow(
@@ -2102,36 +1633,34 @@ def encode_frame_df(
 
 def decode_frame_df(blocks: DataFrame, token_cols: list[str]) -> DataFrame:
     """Wide blocks → (doc_id, source, <col> array<int> per column)."""
+    return _decode_cols(blocks, {c: (TOKENS, "int", f"{c}__") for c in token_cols})
+
+
+def _frame_kernel(blocks: DataFrame, out_names: list[str], columns_fn):
+    """(kernel, schema) of a wide-frame rewrite: ``columns_fn(batch)`` →
+    {column: rewritten TOKENS field dict}; every other output column is
+    the input's."""
+    types = dict(zip(blocks.columns, (f.dataType.simpleString() for f in blocks.schema.fields)))
+    fields = dict(TOKENS.fields)
+    schema = ", ".join(f"`{n}` {types.get(n) or fields[n.rpartition('__')[2]]}" for n in out_names)
 
     def kernel(batches):
         for batch in batches:
             if not batch.num_rows:
                 continue
-            arrays = [batch.column("doc_id"), batch.column("source")]
-            names = ["doc_id", "source"]
-            for cname in token_cols:
-                codecs_col = batch.column(f"{cname}__codec").to_pylist()
-                n_col = batch.column(f"{cname}__n_values").to_numpy(zero_copy_only=False)
-                payload_col = batch.column(f"{cname}__payload")
-                parts = [
-                    CODECS[codecs_col[i]].decode(
-                        memoryview(payload_col[i].as_buffer()), int(n_col[i])
-                    )
-                    for i in range(batch.num_rows)
-                ]
-                flat = np.concatenate(parts) if parts else np.array([], dtype=np.int32)
-                offsets = np.concatenate(([0], np.cumsum(n_col, dtype=np.int64)))
-                arrays.append(_numpy_to_list(flat, offsets))
-                names.append(cname)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            new = {}
+            for cname, cols in columns_fn(batch).items():
+                arrays, names = wide_arrays(TOKENS, cols, cname)
+                new.update(zip(names, arrays))
+            yield pa.RecordBatch.from_arrays(
+                [new[n] if n in new else batch.column(n) for n in out_names], names=out_names
+            )
 
-    schema = "doc_id string, source string, " + ", ".join(
-        f"{c} array<int>" for c in token_cols
-    )
-    need = ["doc_id", "source"] + [
-        f"{c}__{f}" for c in token_cols for f in ("codec", "payload", "n_values")
-    ]
-    return blocks.select(*need).mapInArrow(kernel, schema)
+    return kernel, schema
+
+
+def _enc_cols(blocks: DataFrame) -> list[str]:
+    return sorted(c[: -len("__codec")] for c in blocks.columns if c.endswith("__codec"))
 
 
 def zip_frame_df(
@@ -2144,69 +1673,14 @@ def zip_frame_df(
     appended as a new encoded column ``out_col`` with exact metadata.
     ``post`` fuses a ``TRANSFORM_OPS`` chain into the same pass (see
     ``zip_blocks_df``)."""
-    if op not in ZIP_OPS:
-        raise ValueError(f"unsupported zip op {op!r}; one of {sorted(ZIP_OPS)}")
-    zip_fn = _fuse_post(op, post)
-
-    in_cols = list(blocks.columns)
-    out_schema = ", ".join(
-        [f"`{c}` {t}" for c, t in zip(in_cols, _frame_types(blocks))]
-        + [f"{out_col}__{f} {t}" for f, t in _FRAME_COL_FIELDS]
+    row_op = _zip_row(op, post)
+    kernel, schema = _frame_kernel(
+        blocks, list(blocks.columns) + [f"{out_col}__{f}" for f in TOKENS.wide],
+        lambda b: {out_col: rewrite_column(TOKENS, *payload_cols(b, f"{col_a}__"), row_op,
+                                           other=payload_cols(b, f"{col_b}__"),
+                                           what=f"column {col_a!r} zipped with {col_b!r}")},
     )
-
-    def kernel(batches):
-        from rle_array_spark.codecs.reduce import payload_stats
-        from rle_array_spark.codecs.zip_ops import zip_blocks
-
-        base_fn = zip_fn
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ca = batch.column(f"{col_a}__codec").to_pylist()
-            cb = batch.column(f"{col_b}__codec").to_pylist()
-            pa_col = batch.column(f"{col_a}__payload")
-            pb_col = batch.column(f"{col_b}__payload")
-            na = batch.column(f"{col_a}__n_values").to_numpy(zero_copy_only=False)
-            nb = batch.column(f"{col_b}__n_values").to_numpy(zero_copy_only=False)
-            n_rows = batch.num_rows
-            codecs_out: list[str] = []
-            payloads: list[bytes] = []
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            tok_sum = np.empty(n_rows, dtype=np.int64)
-            tok_min = np.empty(n_rows, dtype=np.int32)
-            tok_max = np.empty(n_rows, dtype=np.int32)
-            for i in range(n_rows):
-                nv = int(na[i])
-                if nv != int(nb[i]):
-                    raise ValueError(f"zip length mismatch: {nv} != {int(nb[i])}")
-                c, p = zip_blocks(
-                    ca[i], memoryview(pa_col[i].as_buffer()),
-                    cb[i], memoryview(pb_col[i].as_buffer()),
-                    nv, base_fn,
-                )
-                codecs_out.append(c)
-                payloads.append(p)
-                n_runs[i], tok_sum[i], tok_min[i], tok_max[i] = payload_stats(c, p, nv)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in in_cols]
-                + [
-                    pa.array(codecs_out, type=pa.string()),
-                    pa.array(payloads, type=pa.binary()),
-                    batch.column(f"{col_a}__n_values"),
-                    pa.array(n_runs),
-                    pa.array(tok_sum),
-                    pa.array(tok_min),
-                    pa.array(tok_max),
-                    pa.array(np.array([len(p) for p in payloads], dtype=np.int64)),
-                ],
-                names=in_cols + [f"{out_col}__{f}" for f, _ in _FRAME_COL_FIELDS],
-            )
-
-    return blocks.mapInArrow(kernel, out_schema)
-
-
-def _frame_types(blocks: DataFrame) -> list[str]:
-    return [f.dataType.simpleString() for f in blocks.schema.fields]
+    return blocks.mapInArrow(kernel, schema)
 
 
 def transform_frame_df(
@@ -2228,7 +1702,7 @@ def transform_frame_df(
       Arrow transfer for the whole batch of columns).
 
     All metadata recomputed exactly; n_values unchanged (value map)."""
-    enc_cols = {c[: -len("__codec")] for c in blocks.columns if c.endswith("__codec")}
+    enc_cols = _enc_cols(blocks)
     if isinstance(col, dict):
         if steps is not None or out_col is not None:
             raise ValueError(
@@ -2236,69 +1710,25 @@ def transform_frame_df(
             )
         if not col:
             raise ValueError("empty column->steps mapping")
-        plans = []  # (source col, target col, fn)
-        for c, s in col.items():
-            if c not in enc_cols:
-                raise ValueError(f"column {c!r} not in frame ({sorted(enc_cols)})")
-            plans.append((c, c, _resolve_token_chain(s)))
-        append_col = None
+        chains = col.items()
     else:
-        if col not in enc_cols:
-            raise ValueError(f"column {col!r} not in frame ({sorted(enc_cols)})")
+        chains = [(col, steps)]
         if out_col is not None and out_col in enc_cols:
             raise ValueError(f"out_col {out_col!r} already in frame")
-        plans = [(col, col if out_col is None else out_col, _resolve_token_chain(steps))]
-        append_col = out_col
+    plans = []  # (source col, target col, row fn)
+    for c, s in chains:
+        if c not in enc_cols:
+            raise ValueError(f"column {c!r} not in frame ({enc_cols})")
+        plans.append((c, out_col or c, _transform_row(_resolve_token_chain(s))))
 
-    in_cols = list(blocks.columns)
-    if append_col is None:
-        out_names = in_cols
-        out_schema = ", ".join(
-            f"`{c}` {t}" for c, t in zip(in_cols, _frame_types(blocks))
-        )
-    else:
-        out_names = in_cols + [f"{append_col}__{f}" for f, _ in _FRAME_COL_FIELDS]
-        out_schema = ", ".join(
-            [f"`{c}` {t}" for c, t in zip(in_cols, _frame_types(blocks))]
-            + [f"{append_col}__{f} {t}" for f, t in _FRAME_COL_FIELDS]
-        )
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            new_by_target: dict[str, dict] = {}
-            for src, target, fn in plans:
-                (
-                    codecs_out, payloads, n_runs, tok_sum, tok_min, tok_max
-                ) = _transform_column_arrays(
-                    batch.column(f"{src}__codec").to_pylist(),
-                    batch.column(f"{src}__payload"),
-                    batch.column(f"{src}__n_values").to_numpy(zero_copy_only=False),
-                    fn,
-                )
-                new_by_target[target] = {
-                    "codec": pa.array(codecs_out, type=pa.string()),
-                    "payload": pa.array(payloads, type=pa.binary()),
-                    "n_values": batch.column(f"{src}__n_values"),
-                    "n_runs": pa.array(n_runs),
-                    "tok_sum": pa.array(tok_sum),
-                    "tok_min": pa.array(tok_min),
-                    "tok_max": pa.array(tok_max),
-                    "encoded_bytes": pa.array(
-                        np.array([len(p) for p in payloads], dtype=np.int64)
-                    ),
-                }
-            arrays = []
-            for name in out_names:
-                cname, _, field = name.rpartition("__")
-                if cname in new_by_target and field in new_by_target[cname]:
-                    arrays.append(new_by_target[cname][field])
-                else:
-                    arrays.append(batch.column(name))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return blocks.mapInArrow(kernel, out_schema)
+    out_names = list(blocks.columns)
+    if out_col is not None:
+        out_names += [f"{out_col}__{f}" for f in TOKENS.wide]
+    kernel, schema = _frame_kernel(
+        blocks, out_names,
+        lambda b: {t: rewrite_column(TOKENS, *payload_cols(b, f"{c}__"), fn) for c, t, fn in plans},
+    )
+    return blocks.mapInArrow(kernel, schema)
 
 
 def filter_frame_df(
@@ -2318,82 +1748,17 @@ def filter_frame_df(
     the shared new n_values is recomputed exactly. The mask's own columns
     are dropped by default (a filtered mask is all-ones — dead weight);
     pass drop_mask=False to keep it."""
-    enc_cols = sorted(
-        {c[: -len("__codec")] for c in blocks.columns if c.endswith("__codec")}
-    )
+    from rle_array_spark.codecs.zip_ops import mask_blocks
+
+    enc_cols = _enc_cols(blocks)
     if mask_col not in enc_cols:
         raise ValueError(f"mask column {mask_col!r} not in frame ({enc_cols})")
     out_cols = [c for c in enc_cols if c != mask_col or not drop_mask]
-
-    in_cols = list(blocks.columns)
-    key_cols = [c for c in in_cols if "__" not in c]
-    dropped = {f"{mask_col}__{f}" for f, _ in _FRAME_COL_FIELDS} if drop_mask else set()
-    out_names = [c for c in in_cols if c not in dropped]
-    types = dict(zip(in_cols, _frame_types(blocks)))
-    out_schema = ", ".join(f"`{c}` {types[c]}" for c in out_names)
-
-    def kernel(batches):
-        from rle_array_spark.codecs.reduce import payload_stats
-        from rle_array_spark.codecs.zip_ops import mask_blocks
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            n_rows = batch.num_rows
-            cm = batch.column(f"{mask_col}__codec").to_pylist()
-            pm_col = batch.column(f"{mask_col}__payload")
-            nm = batch.column(f"{mask_col}__n_values").to_numpy(zero_copy_only=False)
-            per_col: dict[str, dict] = {}
-            for cname in out_cols:
-                cv = batch.column(f"{cname}__codec").to_pylist()
-                pv_col = batch.column(f"{cname}__payload")
-                nv_col = batch.column(f"{cname}__n_values").to_numpy(
-                    zero_copy_only=False
-                )
-                codecs_out: list[str] = []
-                payloads: list[bytes] = []
-                n_values = np.empty(n_rows, dtype=np.int32)
-                n_runs = np.empty(n_rows, dtype=np.int32)
-                tok_sum = np.empty(n_rows, dtype=np.int64)
-                tok_min = np.empty(n_rows, dtype=np.int32)
-                tok_max = np.empty(n_rows, dtype=np.int32)
-                for i in range(n_rows):
-                    nv = int(nv_col[i])
-                    if nv != int(nm[i]):
-                        raise ValueError(
-                            f"frame filter length mismatch on {cname!r}: "
-                            f"{nv} != {int(nm[i])}"
-                        )
-                    c, p, nn = mask_blocks(
-                        cv[i], memoryview(pv_col[i].as_buffer()),
-                        cm[i], memoryview(pm_col[i].as_buffer()),
-                        nv,
-                    )
-                    codecs_out.append(c)
-                    payloads.append(p)
-                    n_values[i] = nn
-                    (
-                        n_runs[i], tok_sum[i], tok_min[i], tok_max[i]
-                    ) = payload_stats(c, p, nn)
-                per_col[cname] = {
-                    "codec": pa.array(codecs_out, type=pa.string()),
-                    "payload": pa.array(payloads, type=pa.binary()),
-                    "n_values": pa.array(n_values),
-                    "n_runs": pa.array(n_runs),
-                    "tok_sum": pa.array(tok_sum),
-                    "tok_min": pa.array(tok_min),
-                    "tok_max": pa.array(tok_max),
-                    "encoded_bytes": pa.array(
-                        np.array([len(p) for p in payloads], dtype=np.int64)
-                    ),
-                }
-            arrays = []
-            for name in out_names:
-                if "__" not in name:
-                    arrays.append(batch.column(name))
-                    continue
-                cname, field = name.rsplit("__", 1)
-                arrays.append(per_col[cname][field])
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return blocks.mapInArrow(kernel, out_schema)
+    dropped = {f"{mask_col}__{f}" for f in TOKENS.wide} if drop_mask else set()
+    kernel, schema = _frame_kernel(
+        blocks, [c for c in blocks.columns if c not in dropped],
+        lambda b: {c: rewrite_column(TOKENS, *payload_cols(b, f"{c}__"), mask_blocks,
+                                     other=payload_cols(b, f"{mask_col}__"),
+                                     what=f"column {c!r} masked by {mask_col!r}") for c in out_cols},
+    )
+    return blocks.mapInArrow(kernel, schema)

@@ -39,7 +39,8 @@ driver gate runs both against one DuckDB oracle). Tail fragments shorter
 than ``seq_len`` are dropped per shard, exactly like a fixed-context
 pretraining loader.
 
-**Measured verdict (scripts/ab_pack.py, 241 M tokens, local[32],
+**Measured verdict (BASELINE.md "Round-5 sequence packing: relational vs
+kernel A/B", 241 M tokens, local[32],
 interleaved pairs): the RELATIONAL path wins** — kernel/relational
 median 0.75× at 64 shards and 0.56× at 512, every pair. The kernel's
 single linear pass does not buy back its ~2× corpus Arrow transfer into

@@ -14,16 +14,18 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from rle_array_spark.codecs.strings import (
-    decode_strings,
-    encode_string_block_stats,
+from rle_array_spark.blocks import (
+    STRINGS,
+    TYPED,
+    decode_df,
+    emit,
+    pair_blocks,
+    rewrite_blocks,
+    value_counts_df,
 )
+from rle_array_spark.codecs.strings import encode_string_block_stats
 
-STRING_BLOCKS_SCHEMA = (
-    "doc_id string, source string, codec string, payload binary, "
-    "n_values int, n_runs int, null_count int, card int, "
-    "val_min string, val_max string, raw_bytes long, encoded_bytes long"
-)
+STRING_BLOCKS_SCHEMA = STRINGS.ddl()
 
 
 def encode_string_rows(child: pa.Array, offsets: np.ndarray, codec: str) -> dict:
@@ -109,6 +111,14 @@ def encode_string_rows(child: pa.Array, offsets: np.ndarray, codec: str) -> dict
     return out
 
 
+def encode_string_column(lists: pa.Array, codec: str = "auto") -> dict:
+    """:func:`encode_string_rows` over an ``array<string>`` column."""
+    if isinstance(lists, pa.ChunkedArray):
+        lists = lists.combine_chunks()
+    offsets = lists.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    return encode_string_rows(lists.flatten(), offsets - offsets[0], codec)
+
+
 def encode_strings_df(df: DataFrame, col: str = "vals", codec: str = "auto") -> DataFrame:
     """(doc_id, source, <col> array<string>) → string encoded blocks."""
 
@@ -116,39 +126,9 @@ def encode_strings_df(df: DataFrame, col: str = "vals", codec: str = "auto") -> 
         for batch in batches:
             if not batch.num_rows:
                 continue
-            lists = batch.column(col)
-            if isinstance(lists, pa.ChunkedArray):
-                lists = lists.combine_chunks()
-            offsets = lists.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            child = lists.flatten()
-            c = encode_string_rows(child, offsets - offsets[0], codec)
-            names_out = c["codec"]
-            payloads = c["payload"]
-            n_values, n_runs = c["n_values"], c["n_runs"]
-            null_count, card = c["null_count"], c["card"]
-            vmin, vmax = c["val_min"], c["val_max"]
-            raw_bytes, enc_bytes = c["raw_bytes"], c["encoded_bytes"]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(names_out, type=pa.string()),
-                    pa.array(payloads, type=pa.binary()),
-                    pa.array(n_values),
-                    pa.array(n_runs),
-                    pa.array(null_count),
-                    pa.array(card),
-                    pa.array(vmin, type=pa.string()),
-                    pa.array(vmax, type=pa.string()),
-                    pa.array(raw_bytes),
-                    pa.array(enc_bytes),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values", "n_runs",
-                    "null_count", "card", "val_min", "val_max", "raw_bytes",
-                    "encoded_bytes",
-                ],
-            )
+            cols = encode_string_column(batch.column(col), codec)
+            cols.update(doc_id=batch.column("doc_id"), source=batch.column("source"))
+            yield emit(STRINGS, cols)
 
     return df.select("doc_id", "source", col).mapInArrow(kernel, STRING_BLOCKS_SCHEMA)
 
@@ -162,104 +142,7 @@ def decode_strings_df(blocks: DataFrame) -> DataFrame:
     nulls via its mask (Arrow-take on the tiny tables measured slower and
     was reverted), so decode stays object-free exactly where objects were
     the cost (5.5× on the sraw text regime; BASELINE.md round 4)."""
-    from rle_array_spark.codecs.strings import decode_strings_arrow
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False).astype(np.int64)
-            payload_col = batch.column("payload")
-            parts = [
-                decode_strings_arrow(
-                    codecs_col[i],
-                    memoryview(payload_col[i].as_buffer()),
-                    int(n_col[i]),
-                )
-                for i in range(batch.num_rows)
-            ]
-            child = (
-                pa.concat_arrays(parts)
-                if parts
-                else pa.array([], type=pa.string())
-            )
-            offsets = np.concatenate(([0], np.cumsum(n_col, dtype=np.int64)))
-            lists = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), batch.column("source"), lists],
-                names=["doc_id", "source", "vals"],
-            )
-
-    schema = "doc_id string, source string, vals array<string>"
-    return blocks.select("doc_id", "source", "codec", "payload", "n_values").mapInArrow(
-        kernel, schema
-    )
-
-
-def _strings_rewrite_df(blocks: DataFrame, row_fn) -> DataFrame:
-    """Per-block payload rewrite for STRING block tables:
-    ``row_fn(codec, payload, n) -> (codec, payload, new_n)``; all metadata
-    (n_runs, null_count, card, val_min/val_max, byte sizes) recomputed
-    exactly from the new payload. Scan-parallel, shuffle-free."""
-    from rle_array_spark.codecs.strings import string_payload_stats, string_value_bytes
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False).astype(np.int64)
-            payload_col = batch.column("payload")
-            n_rows = batch.num_rows
-            new_codecs: list[str] = []
-            new_payloads: list[bytes] = []
-            n_values = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            null_count = np.empty(n_rows, dtype=np.int32)
-            card = np.empty(n_rows, dtype=np.int32)
-            vmin: list[str | None] = []
-            vmax: list[str | None] = []
-            raw_bytes = np.empty(n_rows, dtype=np.int64)
-            for i in range(n_rows):
-                n = int(n_col[i])
-                c, p, nn = row_fn(
-                    codecs_col[i], memoryview(payload_col[i].as_buffer()), n
-                )
-                new_codecs.append(c)
-                new_payloads.append(p)
-                n_values[i] = nn
-                r, nc, k, lo, hi = string_payload_stats(c, p, nn)
-                n_runs[i], null_count[i], card[i] = r, nc, k
-                vmin.append(lo)
-                vmax.append(hi)
-                # same accounting as the encode path (value bytes + offsets)
-                raw_bytes[i] = string_value_bytes(c, p, nn) + 4 * nn
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    pa.array(n_values),
-                    pa.array(n_runs),
-                    pa.array(null_count),
-                    pa.array(card),
-                    pa.array(vmin, type=pa.string()),
-                    pa.array(vmax, type=pa.string()),
-                    pa.array(raw_bytes),
-                    pa.array(np.array([len(p) for p in new_payloads], dtype=np.int64)),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values",
-                    "n_runs", "null_count", "card", "val_min", "val_max",
-                    "raw_bytes", "encoded_bytes",
-                ],
-            )
-
-    return blocks.select(
-        "doc_id", "source", "codec", "payload", "n_values"
-    ).mapInArrow(kernel, STRING_BLOCKS_SCHEMA)
+    return decode_df(blocks, {"vals": (STRINGS, "string", "")})
 
 
 def dropna_strings_df(blocks: DataFrame) -> DataFrame:
@@ -268,7 +151,7 @@ def dropna_strings_df(blocks: DataFrame) -> DataFrame:
     length."""
     from rle_array_spark.codecs.strings import dropna_strings
 
-    return _strings_rewrite_df(blocks, dropna_strings)
+    return rewrite_blocks(blocks, STRINGS, dropna_strings)
 
 
 def fillna_strings_df(
@@ -279,10 +162,9 @@ def fillna_strings_df(
     from rle_array_spark.codecs.strings import fillna_strings
 
     def row_fn(c, p, n):
-        nc, np_ = fillna_strings(c, p, n, value=value, method=method)
-        return nc, np_, n
+        return fillna_strings(c, p, n, value=value, method=method)
 
-    return _strings_rewrite_df(blocks, row_fn)
+    return rewrite_blocks(blocks, STRINGS, row_fn)
 
 
 def mask_strings_df(value_blocks: DataFrame, mask_blocks: DataFrame) -> DataFrame:
@@ -294,88 +176,10 @@ def mask_strings_df(value_blocks: DataFrame, mask_blocks: DataFrame) -> DataFram
     codecs gather in the CODE domain (codecs/strings.mask_strings); null
     mask slots DROP rows (SQL WHERE semantics). All string metadata is
     recomputed from the post-gather payload."""
-    from pyspark.sql import functions as F
+    from rle_array_spark.codecs.strings import mask_strings
 
-    from rle_array_spark.codecs.strings import (
-        mask_strings,
-        string_payload_stats,
-        string_value_bytes,
-    )
-
-    v = value_blocks.select(
-        "doc_id", "source",
-        F.col("codec").alias("codec_v"), F.col("payload").alias("payload_v"),
-        "n_values",
-    )
-    m = mask_blocks.select(
-        "doc_id", "source",
-        F.col("codec").alias("codec_m"), F.col("payload").alias("payload_m"),
-        F.col("n_values").alias("n_values_m"),
-    )
-    joined = v.join(m, ["doc_id", "source"], "inner")
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            cv = batch.column("codec_v").to_pylist()
-            cm = batch.column("codec_m").to_pylist()
-            pv_col = batch.column("payload_v")
-            pm_col = batch.column("payload_m")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            nm_col = batch.column("n_values_m").to_numpy(zero_copy_only=False)
-            n_rows = batch.num_rows
-            new_codecs: list[str] = []
-            new_payloads: list[bytes] = []
-            n_values = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            null_count = np.empty(n_rows, dtype=np.int32)
-            card = np.empty(n_rows, dtype=np.int32)
-            vmin: list[str | None] = []
-            vmax: list[str | None] = []
-            raw_bytes = np.empty(n_rows, dtype=np.int64)
-            for i in range(n_rows):
-                n = int(n_col[i])
-                if n != int(nm_col[i]):
-                    raise ValueError(
-                        f"mask length mismatch: {n} != {int(nm_col[i])}"
-                    )
-                c, p, nn = mask_strings(
-                    cv[i], memoryview(pv_col[i].as_buffer()),
-                    cm[i], memoryview(pm_col[i].as_buffer()),
-                    n,
-                )
-                new_codecs.append(c)
-                new_payloads.append(p)
-                n_values[i] = nn
-                r, nc, k, lo, hi = string_payload_stats(c, p, nn)
-                n_runs[i], null_count[i], card[i] = r, nc, k
-                vmin.append(lo)
-                vmax.append(hi)
-                raw_bytes[i] = string_value_bytes(c, p, nn) + 4 * nn
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    pa.array(n_values),
-                    pa.array(n_runs),
-                    pa.array(null_count),
-                    pa.array(card),
-                    pa.array(vmin, type=pa.string()),
-                    pa.array(vmax, type=pa.string()),
-                    pa.array(raw_bytes),
-                    pa.array(np.array([len(p) for p in new_payloads], dtype=np.int64)),
-                ],
-                names=[
-                    "doc_id", "source", "codec", "payload", "n_values",
-                    "n_runs", "null_count", "card", "val_min", "val_max",
-                    "raw_bytes", "encoded_bytes",
-                ],
-            )
-
-    return joined.mapInArrow(kernel, STRING_BLOCKS_SCHEMA)
+    return pair_blocks(value_blocks, mask_blocks, STRINGS, ["doc_id", "source"], mask_strings,
+                       what="a string mask row")
 
 
 def filter_strings_df(blocks: DataFrame, op: str, value: str, pre=None) -> DataFrame:
@@ -395,7 +199,7 @@ def filter_strings_df(blocks: DataFrame, op: str, value: str, pre=None) -> DataF
     def row_fn(c, p, n):
         return filter_strings(c, p, n, op, value, pre_fn=pre)
 
-    return _strings_rewrite_df(blocks, row_fn)
+    return rewrite_blocks(blocks, STRINGS, row_fn)
 
 
 def transform_strings_df(blocks: DataFrame, fn) -> DataFrame:
@@ -407,10 +211,9 @@ def transform_strings_df(blocks: DataFrame, fn) -> DataFrame:
     from rle_array_spark.codecs.strings import transform_strings
 
     def row_fn(c, p, n):
-        nc, npay = transform_strings(c, p, n, fn)
-        return nc, npay, n  # value-map: length unchanged
+        return transform_strings(c, p, n, fn)
 
-    return _strings_rewrite_df(blocks, row_fn)
+    return rewrite_blocks(blocks, STRINGS, row_fn)
 
 
 def zip_strings_df(blocks_a: DataFrame, blocks_b: DataFrame, op: str = "eq") -> DataFrame:
@@ -420,12 +223,12 @@ def zip_strings_df(blocks_a: DataFrame, blocks_b: DataFrame, op: str = "eq") -> 
     compare in the code domain — one O(cardinality) table remap, value
     bytes untouched."""
     from rle_array_spark.codecs.strings import zip_strings_compare
-    from rle_array_spark.typed import zip_blocks_pairwise_df
 
     def row_op(ca, pa_, cb, pb_, nv):
         return zip_strings_compare(ca, pa_, cb, pb_, nv, op)
 
-    return zip_blocks_pairwise_df(blocks_a, blocks_b, row_op)
+    return pair_blocks(blocks_a, blocks_b, TYPED, ["doc_id", "source"], row_op,
+                       what="a string zip row")
 
 
 def value_counts_strings_df(blocks: DataFrame) -> DataFrame:
@@ -433,42 +236,6 @@ def value_counts_strings_df(blocks: DataFrame) -> DataFrame:
     bincount their CODE stream (string bytes touched once per distinct
     value), merged relationally — nulls excluded. Returns (doc_id,
     value, count)."""
-    from pyspark.sql import functions as F
+    from rle_array_spark.codecs.strings import value_counts_strings
 
-    def kernel(batches):
-        from rle_array_spark.codecs.strings import value_counts_strings
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            payload_col = batch.column("payload")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            doc_ids = batch.column("doc_id").to_pylist()
-            out_docs: list[str] = []
-            out_vals: list[str] = []
-            out_counts: list[int] = []
-            for i in range(batch.num_rows):
-                vals, counts = value_counts_strings(
-                    codecs_col[i],
-                    memoryview(payload_col[i].as_buffer()),
-                    int(n_col[i]),
-                )
-                if vals.size:
-                    out_docs.extend([doc_ids[i]] * vals.size)
-                    out_vals.extend(vals.tolist())
-                    out_counts.extend(counts.tolist())
-            if out_docs:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_docs, type=pa.string()),
-                        pa.array(out_vals, type=pa.string()),
-                        pa.array(out_counts, type=pa.int64()),
-                    ],
-                    names=["doc_id", "value", "count"],
-                )
-
-    partials = blocks.select("doc_id", "codec", "payload", "n_values").mapInArrow(
-        kernel, "doc_id string, value string, count long"
-    )
-    return partials.groupBy("doc_id", "value").agg(F.sum("count").alias("count"))
+    return value_counts_df(blocks, value_counts_strings, "string")

@@ -18,56 +18,53 @@ and zone-map metadata, and decode restores every column bit-identically.
 
 from __future__ import annotations
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from rle_array_spark.codecs import CODECS
-from rle_array_spark.codecs.strings import decode_strings
-from rle_array_spark.codecs.typed import decode_typed, encode_typed
+from rle_array_spark.blocks import FAMILIES, decode_df, wide_arrays
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
+from rle_array_spark.codecs import CODECS
 from rle_array_spark.engine import _encode_column, _list_to_numpy
-from rle_array_spark.typed import _list_child_parts
+from rle_array_spark.strings import encode_string_column
+from rle_array_spark.typed import encode_typed_rows
 
-INT_FIELDS = (
-    ("codec", "string"), ("payload", "binary"), ("n_values", "int"),
-    ("n_runs", "int"), ("tok_sum", "long"), ("tok_min", "int"),
-    ("tok_max", "int"), ("encoded_bytes", "long"),
-)
-TYPED_FIELDS = (
-    ("codec", "string"), ("payload", "binary"), ("n_values", "int"),
-    ("null_count", "int"), ("encoded_bytes", "long"),
-)
-STRING_FIELDS = (
-    ("codec", "string"), ("payload", "binary"), ("n_values", "int"),
-    ("n_runs", "int"), ("null_count", "int"), ("card", "int"),
-    ("encoded_bytes", "long"),
-)
+
+def _int_column(col, codec: str) -> dict:
+    # family-foreign codec names fall back to auto, like the other kinds
+    icodec = codec if codec in CODECS or codec == "auto" else "auto"
+    return _encode_column(*_list_to_numpy(col), icodec, DEFAULT_THRESHOLD)
+
+
+def _typed_column(col, codec: str) -> dict:
+    return encode_typed_rows(col, codec if codec in ("trle", "tdict", "traw") else "auto",
+                             zone_maps=False)
+
+
+def _string_column(col, codec: str) -> dict:
+    return encode_string_column(col, codec if codec in ("srle", "sdict", "sraw", "sfsst") else "auto")
+
+
+# kind → the family's column encoder: an Arrow list column → {field: values}
+_ENCODERS = {"int": _int_column, "typed": _typed_column, "string": _string_column}
+
+
+def _kind(elem: str) -> str:
+    return "int" if elem in ("int", "integer") else "string" if elem == "string" else "typed"
 
 
 def _spark_kind(spark_type: str) -> str:
     inner = spark_type.strip()
     if not inner.startswith("array<"):
         raise ValueError(f"encode_table_df needs array columns, got {spark_type}")
-    elem = inner[6:-1]
-    if elem in ("int", "integer"):
-        return "int"
-    if elem == "string":
-        return "string"
-    return "typed"
+    return _kind(inner[6:-1])
 
 
 def table_schema(df: DataFrame, cols: list[str]) -> tuple[str, dict[str, str]]:
     """(wide output schema DDL, column → kind map) from the input schema."""
-    kinds: dict[str, str] = {}
+    types = dict(df.dtypes)
+    kinds = {c: _spark_kind(types[c]) for c in cols}
     parts = ["doc_id string", "source string"]
-    for c in cols:
-        kind = _spark_kind(dict(df.dtypes)[c])
-        kinds[c] = kind
-        fields = {"int": INT_FIELDS, "typed": TYPED_FIELDS, "string": STRING_FIELDS}[kind]
-        parts.extend(f"{c}__{f} {t}" for f, t in fields)
-        if kind == "typed":
-            parts.append(f"{c}__vtype string")
+    parts += [FAMILIES[kinds[c]].ddl(FAMILIES[kinds[c]].wide, prefix=f"{c}__") for c in cols]
     return ", ".join(parts), kinds
 
 
@@ -81,76 +78,14 @@ def encode_table_df(df: DataFrame, cols: list[str], codec: str = "auto") -> Data
         for batch in batches:
             if not batch.num_rows:
                 continue
-            n_rows = batch.num_rows
             arrays = [batch.column("doc_id"), batch.column("source")]
             names = ["doc_id", "source"]
             for cname in cols:
                 kind = kinds[cname]
-                col = batch.column(cname)
-                if kind == "int":
-                    flat, offsets = _list_to_numpy(col)
-                    # family-foreign codec names fall back to auto, like the
-                    # typed/string branches below
-                    icodec = codec if codec in CODECS or codec == "auto" else "auto"
-                    c = _encode_column(flat, offsets, icodec, DEFAULT_THRESHOLD)
-                    arrays.extend([
-                        pa.array(c["codec"], type=pa.string()),
-                        pa.array(c["payload"], type=pa.binary()),
-                        pa.array(c["n_values"]),
-                        pa.array(c["n_runs"]),
-                        pa.array(c["tok_sum"]),
-                        pa.array(c["tok_min"]),
-                        pa.array(c["tok_max"]),
-                        pa.array(c["encoded_bytes"]),
-                    ])
-                    names.extend(f"{cname}__{f}" for f, _ in INT_FIELDS)
-                elif kind == "typed":
-                    offsets, flat, valid = _list_child_parts(col)
-                    tcodec = codec if codec in ("trle", "tdict", "traw") else "auto"
-                    cnames, payloads = [], []
-                    n_values = np.empty(n_rows, dtype=np.int32)
-                    null_count = np.zeros(n_rows, dtype=np.int32)
-                    enc_bytes = np.empty(n_rows, dtype=np.int64)
-                    for i in range(n_rows):
-                        lo, hi = int(offsets[i]), int(offsets[i + 1])
-                        mask = valid[lo:hi] if valid is not None else None
-                        name, payload = encode_typed(flat[lo:hi], mask, tcodec)
-                        cnames.append(name)
-                        payloads.append(payload)
-                        n_values[i] = hi - lo
-                        if mask is not None:
-                            null_count[i] = int((~mask).sum())
-                        enc_bytes[i] = len(payload)
-                    arrays.extend([
-                        pa.array(cnames, type=pa.string()),
-                        pa.array(payloads, type=pa.binary()),
-                        pa.array(n_values),
-                        pa.array(null_count),
-                        pa.array(enc_bytes),
-                        pa.array([str(flat.dtype)] * n_rows, type=pa.string()),
-                    ])
-                    names.extend(f"{cname}__{f}" for f, _ in TYPED_FIELDS)
-                    names.append(f"{cname}__vtype")
-                else:  # string
-                    from rle_array_spark.strings import encode_string_rows
-
-                    if isinstance(col, pa.ChunkedArray):
-                        col = col.combine_chunks()
-                    soffsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                    scodec = codec if codec in ("srle", "sdict", "sraw", "sfsst") else "auto"
-                    c = encode_string_rows(
-                        col.flatten(), soffsets - soffsets[0], scodec
-                    )
-                    arrays.extend([
-                        pa.array(c["codec"], type=pa.string()),
-                        pa.array(c["payload"], type=pa.binary()),
-                        pa.array(c["n_values"]),
-                        pa.array(c["n_runs"]),
-                        pa.array(c["null_count"]),
-                        pa.array(c["card"]),
-                        pa.array(c["encoded_bytes"]),
-                    ])
-                    names.extend(f"{cname}__{f}" for f, _ in STRING_FIELDS)
+                fields = _ENCODERS[kind](batch.column(cname), codec)
+                col_arrays, col_names = wide_arrays(FAMILIES[kind], fields, cname)
+                arrays += col_arrays
+                names += col_names
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.select("doc_id", "source", *cols).mapInArrow(kernel, schema)
@@ -164,87 +99,6 @@ def decode_table_df(
     ``col_types`` maps column name → Spark element type ('int', 'double',
     'boolean', 'timestamp', 'string', ...), the same names passed to
     :func:`encode_table_df`."""
-    kinds = {
-        c: ("int" if t in ("int", "integer") else "string" if t == "string" else "typed")
-        for c, t in col_types.items()
-    }
-    out_schema = ", ".join(
-        ["doc_id string", "source string"]
-        + [f"{c} array<{t}>" for c, t in col_types.items()]
+    return decode_df(
+        blocks, {c: (FAMILIES[_kind(t)], t, f"{c}__") for c, t in col_types.items()}
     )
-    needed = ["doc_id", "source"]
-    for c, kind in kinds.items():
-        needed += [f"{c}__codec", f"{c}__payload", f"{c}__n_values"]
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            n_rows = batch.num_rows
-            arrays = [batch.column("doc_id"), batch.column("source")]
-            names = ["doc_id", "source"]
-            for cname, kind in kinds.items():
-                codecs_col = batch.column(f"{cname}__codec").to_pylist()
-                n_col = batch.column(f"{cname}__n_values").to_numpy(
-                    zero_copy_only=False
-                ).astype(np.int64)
-                payload_col = batch.column(f"{cname}__payload")
-                offsets = np.concatenate(([0], np.cumsum(n_col)))
-                if kind == "int":
-                    parts = [
-                        CODECS[codecs_col[i]].decode(
-                            memoryview(payload_col[i].as_buffer()), int(n_col[i])
-                        )
-                        for i in range(n_rows)
-                    ]
-                    flat = np.concatenate(parts) if parts else np.zeros(0, np.int32)
-                    child = pa.array(flat, type=pa.int32())
-                elif kind == "typed":
-                    parts, masks, any_null = [], [], False
-                    for i in range(n_rows):
-                        vals, mask = decode_typed(
-                            codecs_col[i],
-                            memoryview(payload_col[i].as_buffer()),
-                            int(n_col[i]),
-                        )
-                        parts.append(vals)
-                        masks.append(mask)
-                        any_null = any_null or mask is not None
-                    flat = (
-                        np.concatenate(parts) if parts else np.zeros(0, np.float64)
-                    )
-                    if any_null:
-                        invalid = np.zeros(flat.size, dtype=bool)
-                        for i, m in enumerate(masks):
-                            if m is not None:
-                                invalid[offsets[i] : offsets[i + 1]] = ~m
-                        child = pa.array(flat, mask=invalid)
-                    else:
-                        child = pa.array(flat)
-                else:  # string — Arrow-native per-row arrays (sraw/sfsst
-                    # come straight off their offset+data buffers, no
-                    # per-value Python; see codecs/strings.py)
-                    from rle_array_spark.codecs.strings import (
-                        decode_strings_arrow,
-                    )
-
-                    str_parts = [
-                        decode_strings_arrow(
-                            codecs_col[i],
-                            memoryview(payload_col[i].as_buffer()),
-                            int(n_col[i]),
-                        )
-                        for i in range(n_rows)
-                    ]
-                    child = (
-                        pa.concat_arrays(str_parts)
-                        if str_parts
-                        else pa.array([], type=pa.string())
-                    )
-                arrays.append(
-                    pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child)
-                )
-                names.append(cname)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return blocks.select(*needed).mapInArrow(kernel, out_schema)

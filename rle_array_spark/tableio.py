@@ -47,6 +47,7 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from rle_array_spark.blocks import TOKENS
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
 from rle_array_spark.engine import (
     _encode_batch,
@@ -56,25 +57,7 @@ from rle_array_spark.engine import (
     salted_repartition,
 )
 
-BLOCKS_ARROW_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("source", pa.string()),
-        ("codec", pa.string()),
-        ("payload", pa.binary()),
-        ("n_values", pa.int32()),
-        ("n_runs", pa.int32()),
-        ("tok_sum", pa.int64()),
-        ("tok_min", pa.int32()),
-        ("tok_max", pa.int32()),
-        ("raw_bytes", pa.int64()),
-        ("encoded_bytes", pa.int64()),
-        ("ref_rle_bytes", pa.int64()),
-        ("chunk_idx", pa.int32()),
-        ("n_chunks", pa.int32()),
-        ("chunk_offset", pa.int64()),
-    ]
-)
+BLOCKS_ARROW_SCHEMA = TOKENS.arrow
 
 LINEAGE_SCHEMA = (
     "part_id int, status string, fingerprint string, n_rows long, n_tokens long, "
@@ -332,11 +315,14 @@ def encode_to_dir(
 def _chunk_rows(df: DataFrame, chunk_tokens: int | None, length_field: str) -> DataFrame:
     """(doc_id, source, ``length_field``, chunk_idx, n_tok_stored): the rows
     the write path shuffles, from metadata alone — the value count is
-    ``F.size(tokens)`` and chunks follow :func:`pack_tokens_df` (n ≤ k → one
+    ``array_size(tokens)`` and chunks follow :func:`pack_tokens_df` (n ≤ k → one
     chunk, else ⌈n/k⌉ chunks of k with the remainder last). Columns are
-    int, as there. ``n_tok_stored`` carries the input's ``n_tok`` column for
-    chunk sizing (:func:`_sizing_aggs`); it never enters a fingerprint."""
-    n = F.size("tokens")
+    int, as there. A null array counts 0 values, as the encode reads it
+    (``array_size`` of null is null whatever the ANSI setting, where
+    ``size`` may give null or -1). ``n_tok_stored`` carries the input's
+    ``n_tok`` column for chunk sizing (:func:`_sizing_aggs`); it never
+    enters a fingerprint."""
+    n = F.coalesce(F.array_size("tokens"), F.lit(0))
     stored = F.col("n_tok").alias("n_tok_stored")
     if not chunk_tokens:
         return df.select(
@@ -645,11 +631,9 @@ def read_snapshot(out_dir: str, snapshot: int | None = None) -> dict:
 def read_blocks(spark: SparkSession, out_dir: str, snapshot: int | None = None) -> DataFrame:
     """Read the encoded-blocks table at a snapshot (latest by default) —
     only the files that snapshot committed, never uncommitted stragglers."""
-    from rle_array_spark.engine import BLOCK_SCHEMA
-
     snap = read_snapshot(out_dir, snapshot)
     files = [os.path.join(out_dir, "blocks", f) for f in snap["files"]]
-    return spark.read.schema(BLOCK_SCHEMA).parquet(*files)
+    return spark.read.schema(TOKENS.ddl()).parquet(*files)
 
 
 def read_manifest(out_dir: str) -> dict:

@@ -19,13 +19,17 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from rle_array_spark.codecs.typed import _fill_nulls, decode_typed, encode_typed
-
-TYPED_BLOCKS_SCHEMA = (
-    "doc_id string, source string, vtype string, codec string, payload binary, "
-    "n_values int, n_runs int, null_count int, val_min double, val_max double, "
-    "raw_bytes long, encoded_bytes long"
+from rle_array_spark.blocks import (
+    TYPED,
+    decode_df,
+    emit,
+    pair_blocks,
+    rewrite_blocks,
+    value_counts_df,
 )
+from rle_array_spark.codecs.typed import _fill_nulls, encode_typed
+
+TYPED_BLOCKS_SCHEMA = TYPED.ddl()
 
 # numpy dtype name ↔ Spark element type for decode round-trips
 _SPARK_ELEM = {
@@ -79,6 +83,54 @@ def _list_child_parts(col: pa.Array):
     return offsets, vals, valid
 
 
+def encode_typed_rows(col: pa.Array, codec: str = "auto", zone_maps: bool = True) -> dict:
+    """Encode every row of an ``array<T>`` column → {field: per-row
+    values}: vtype, codec, payload, n_values, null_count, encoded_bytes,
+    and with ``zone_maps`` the narrow blocks table's n_runs, val_min,
+    val_max and raw_bytes (a wide table row carries only the first six)."""
+    offsets, flat, valid = _list_child_parts(col)
+    n_rows, w = offsets.size - 1, flat.dtype.itemsize
+    out = {"codec": [], "payload": [], "n_values": offsets[1:] - offsets[:-1],
+           "null_count": np.zeros(n_rows, dtype=np.int32), "vtype": [str(flat.dtype)] * n_rows}
+    if zone_maps:
+        out.update(n_runs=np.empty(n_rows, dtype=np.int32), val_min=np.full(n_rows, np.nan),
+                   val_max=np.full(n_rows, np.nan), raw_bytes=out["n_values"] * w)
+    is_float = flat.dtype.kind == "f"
+    numeric_view = flat if flat.dtype.kind in "fiub" else flat.view("<i8")
+    for i in range(n_rows):
+        lo, hi = int(offsets[i]), int(offsets[i + 1])
+        row = flat[lo:hi]
+        mask = valid[lo:hi] if valid is not None else None
+        name, payload = encode_typed(row, mask, codec)
+        out["codec"].append(name)
+        out["payload"].append(payload)
+        nulls = int((~mask).sum()) if mask is not None else 0
+        out["null_count"][i] = nulls
+        if not zone_maps:
+            continue
+        bv = row.view(f"<u{w}") if w > 1 else row.view("<u1")
+        if nulls:
+            # n_runs must match the PAYLOAD's run structure, which
+            # forward-fills null slots (the audit primitive
+            # typed_payload_stats recomputes exactly this)
+            bv = _fill_nulls(bv, mask)
+        out["n_runs"][i] = 1 + int(np.count_nonzero(bv[1:] != bv[:-1])) if bv.size else 0
+        nv = numeric_view[lo:hi]
+        if nulls:
+            nv = nv[mask]
+        if nv.size:
+            if is_float:
+                finite = nv[~np.isnan(nv)]
+                if finite.size:
+                    out["val_min"][i] = float(finite.min())
+                    out["val_max"][i] = float(finite.max())
+            else:
+                out["val_min"][i] = float(nv.min())
+                out["val_max"][i] = float(nv.max())
+    out["encoded_bytes"] = [len(p) for p in out["payload"]]
+    return out
+
+
 def encode_typed_df(df: DataFrame, col: str = "vals", codec: str = "auto") -> DataFrame:
     """(doc_id, source, <col> array<T>) → typed encoded blocks.
 
@@ -87,172 +139,12 @@ def encode_typed_df(df: DataFrame, col: str = "vals", codec: str = "auto") -> Da
 
     def kernel(batches):
         for batch in batches:
-            if not batch.num_rows:
-                continue
-            offsets, flat, valid = _list_child_parts(batch.column(col))
-            n_rows = batch.num_rows
-            names_out, payloads = [], []
-            n_values = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            null_count = np.zeros(n_rows, dtype=np.int32)
-            vmin = np.full(n_rows, np.nan)
-            vmax = np.full(n_rows, np.nan)
-            enc_bytes = np.empty(n_rows, dtype=np.int64)
-            w = flat.dtype.itemsize
-            is_float = flat.dtype.kind == "f"
-            numeric_view = (
-                flat if flat.dtype.kind in "fiub" else flat.view("<i8")
-            )
-            for i in range(n_rows):
-                lo, hi = int(offsets[i]), int(offsets[i + 1])
-                row = flat[lo:hi]
-                mask = valid[lo:hi] if valid is not None else None
-                name, payload = encode_typed(row, mask, codec)
-                names_out.append(name)
-                payloads.append(payload)
-                n_values[i] = hi - lo
-                bv = row.view(f"<u{w}") if w > 1 else row.view("<u1")
-                if mask is not None and not mask.all():
-                    null_count[i] = int((~mask).sum())
-                    # n_runs must match the PAYLOAD's run structure, which
-                    # forward-fills null slots (the audit primitive
-                    # typed_payload_stats recomputes exactly this)
-                    bv = _fill_nulls(bv, mask)
-                n_runs[i] = (
-                    1 + int(np.count_nonzero(bv[1:] != bv[:-1])) if bv.size else 0
-                )
-                nv = numeric_view[lo:hi]
-                if mask is not None and not mask.all():
-                    nv = nv[mask]
-                if nv.size:
-                    if is_float:
-                        finite = nv[~np.isnan(nv)]
-                        if finite.size:
-                            vmin[i] = float(finite.min())
-                            vmax[i] = float(finite.max())
-                    else:
-                        vmin[i] = float(nv.min())
-                        vmax[i] = float(nv.max())
-                enc_bytes[i] = len(payload)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array([str(flat.dtype)] * n_rows, type=pa.string()),
-                    pa.array(names_out, type=pa.string()),
-                    pa.array(payloads, type=pa.binary()),
-                    pa.array(n_values),
-                    pa.array(n_runs),
-                    pa.array(null_count),
-                    pa.array(vmin),
-                    pa.array(vmax),
-                    pa.array((offsets[1:] - offsets[:-1]) * w),
-                    pa.array(enc_bytes),
-                ],
-                names=[
-                    "doc_id", "source", "vtype", "codec", "payload", "n_values",
-                    "n_runs", "null_count", "val_min", "val_max", "raw_bytes",
-                    "encoded_bytes",
-                ],
-            )
+            if batch.num_rows:
+                cols = encode_typed_rows(batch.column(col), codec)
+                cols.update(doc_id=batch.column("doc_id"), source=batch.column("source"))
+                yield emit(TYPED, cols)
 
     return df.select("doc_id", "source", col).mapInArrow(kernel, TYPED_BLOCKS_SCHEMA)
-
-
-def zip_blocks_pairwise_df(blocks_a: DataFrame, blocks_b: DataFrame, row_op) -> DataFrame:
-    """Shared scaffolding for block-pair zips that emit typed blocks:
-    align two block tables on (doc_id, source) — one block per key is the
-    contract of the typed/string encoders (no chunking) — check lengths,
-    apply ``row_op(codec_a, payload_a, codec_b, payload_b, n) -> (codec,
-    payload)`` or ``(codec, payload, new_n)`` — the 3-tuple form for
-    length-changing ops like the boolean-mask gather — per pair, and
-    recompute metadata exactly from the new payloads. Used by
-    :func:`zip_typed_df`, :func:`mask_typed_df`, strings.zip_strings_df."""
-    from pyspark.sql import functions as F
-
-    from rle_array_spark.codecs.typed import DTYPE_CODES, typed_payload_stats
-
-    a = blocks_a.select(
-        "doc_id", "source",
-        F.col("codec").alias("codec_a"), F.col("payload").alias("payload_a"),
-        "n_values",
-    )
-    b = blocks_b.select(
-        "doc_id", "source",
-        F.col("codec").alias("codec_b"), F.col("payload").alias("payload_b"),
-        F.col("n_values").alias("n_values_b"),
-    )
-    joined = a.join(b, ["doc_id", "source"], "inner")
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ca = batch.column("codec_a").to_pylist()
-            cb = batch.column("codec_b").to_pylist()
-            pa_col = batch.column("payload_a")
-            pb_col = batch.column("payload_b")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            nb_col = batch.column("n_values_b").to_numpy(zero_copy_only=False)
-            n_rows = batch.num_rows
-            new_codecs: list[str] = []
-            new_payloads: list[bytes] = []
-            vtypes: list[str] = []
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            null_count = np.empty(n_rows, dtype=np.int32)
-            vmin = np.full(n_rows, np.nan)
-            vmax = np.full(n_rows, np.nan)
-            out_n = np.empty(n_rows, dtype=np.int32)
-            for i in range(n_rows):
-                nv = int(n_col[i])
-                if nv != int(nb_col[i]):
-                    raise ValueError(
-                        f"zip length mismatch: {nv} != {int(nb_col[i])}"
-                    )
-                res = row_op(
-                    ca[i], memoryview(pa_col[i].as_buffer()),
-                    cb[i], memoryview(pb_col[i].as_buffer()),
-                    nv,
-                )
-                c, p = res[0], res[1]
-                nn = int(res[2]) if len(res) == 3 else nv
-                new_codecs.append(c)
-                new_payloads.append(p)
-                out_n[i] = nn
-                r, nc, lo, hi, _ = typed_payload_stats(c, p, nn)
-                n_runs[i], null_count[i] = r, nc
-                if lo is not None:
-                    vmin[i], vmax[i] = lo, hi
-                vtypes.append(str(DTYPE_CODES[p[0]]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(vtypes, type=pa.string()),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    pa.array(out_n),
-                    pa.array(n_runs),
-                    pa.array(null_count),
-                    pa.array(vmin),
-                    pa.array(vmax),
-                    pa.array(
-                        out_n.astype(np.int64)
-                        * np.array(
-                            [DTYPE_CODES[p[0]].itemsize for p in new_payloads],
-                            dtype=np.int64,
-                        )
-                    ),
-                    pa.array(np.array([len(p) for p in new_payloads], dtype=np.int64)),
-                ],
-                names=[
-                    "doc_id", "source", "vtype", "codec", "payload", "n_values",
-                    "n_runs", "null_count", "val_min", "val_max", "raw_bytes",
-                    "encoded_bytes",
-                ],
-            )
-
-    return joined.mapInArrow(kernel, TYPED_BLOCKS_SCHEMA)
 
 
 def zip_typed_df(
@@ -299,7 +191,8 @@ def zip_typed_df(
             ca, pa_, cb, pb_, nv, op, post_fn=post_fn, post_bool=post_bool
         )
 
-    return zip_blocks_pairwise_df(blocks_a, blocks_b, row_op)
+    return pair_blocks(blocks_a, blocks_b, TYPED, ["doc_id", "source"], row_op,
+                       what="a typed zip row")
 
 
 def mask_typed_df(value_blocks: DataFrame, mask_blocks: DataFrame) -> DataFrame:
@@ -312,7 +205,8 @@ def mask_typed_df(value_blocks: DataFrame, mask_blocks: DataFrame) -> DataFrame:
     n_values and all metadata reflect the post-gather block exactly."""
     from rle_array_spark.codecs.typed_zip import mask_typed
 
-    return zip_blocks_pairwise_df(value_blocks, mask_blocks, mask_typed)
+    return pair_blocks(value_blocks, mask_blocks, TYPED, ["doc_id", "source"], mask_typed,
+                       what="a typed mask row")
 
 
 def filter_typed_df(blocks: DataFrame, op: str, operand, pre=None) -> DataFrame:
@@ -343,7 +237,7 @@ def filter_typed_df(blocks: DataFrame, op: str, operand, pre=None) -> DataFrame:
     def row_fn(c, p, n):
         return filter_typed(c, p, n, op, operand, pre_fn=pre_fn)
 
-    return _block_transform_df(blocks, row_fn)
+    return rewrite_blocks(blocks, TYPED, row_fn)
 
 
 def _resolve_typed_op(op: str, operand=None):
@@ -430,10 +324,9 @@ def transform_typed_df(blocks: DataFrame, op: str, operand=None) -> DataFrame:
     fn, to_bool = _resolve_typed_op(op, operand)
 
     def row_fn(c, p, n):
-        nc, npay = transform_typed(c, p, n, fn, to_bool=to_bool)
-        return nc, npay, n  # value-map: length unchanged
+        return transform_typed(c, p, n, fn, to_bool=to_bool)
 
-    return _block_transform_df(blocks, row_fn)
+    return rewrite_blocks(blocks, TYPED, row_fn)
 
 
 def _resolve_typed_chain(steps):
@@ -479,10 +372,9 @@ def transform_typed_chain_df(blocks: DataFrame, steps) -> DataFrame:
     fused, to_bool = _resolve_typed_chain(steps)
 
     def row_fn(c, p, n):
-        nc, npay = transform_typed(c, p, n, fused, to_bool=to_bool)
-        return nc, npay, n
+        return transform_typed(c, p, n, fused, to_bool=to_bool)
 
-    return _block_transform_df(blocks, row_fn)
+    return rewrite_blocks(blocks, TYPED, row_fn)
 
 
 def cast_typed_df(blocks: DataFrame, to_dtype) -> DataFrame:
@@ -497,75 +389,9 @@ def cast_typed_df(blocks: DataFrame, to_dtype) -> DataFrame:
     to_dtype = np.dtype(to_dtype)
 
     def row_fn(c, p, n):
-        nc, np_ = cast_typed(c, p, n, to_dtype)
-        return nc, np_, n
+        return cast_typed(c, p, n, to_dtype)
 
-    return _block_transform_df(blocks, row_fn)
-
-
-def _block_transform_df(blocks: DataFrame, row_fn) -> DataFrame:
-    """Shared scaffold for shuffle-free per-block transforms that may change
-    length: ``row_fn(codec, payload, n) -> (codec, payload, new_n)``;
-    vtype from the payload's dtype tag, metadata recomputed exactly."""
-    from rle_array_spark.codecs.typed import DTYPE_CODES, typed_payload_stats
-
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            payload_col = batch.column("payload")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False).astype(np.int64)
-            n_rows = batch.num_rows
-            new_codecs: list[str] = []
-            new_payloads: list[bytes] = []
-            vtypes: list[str] = []
-            new_n = np.empty(n_rows, dtype=np.int32)
-            n_runs = np.empty(n_rows, dtype=np.int32)
-            null_count = np.empty(n_rows, dtype=np.int32)
-            vmin = np.full(n_rows, np.nan)
-            vmax = np.full(n_rows, np.nan)
-            raw_bytes = np.empty(n_rows, dtype=np.int64)
-            for i in range(n_rows):
-                nv = int(n_col[i])
-                c, p, nn = row_fn(
-                    codecs_col[i], memoryview(payload_col[i].as_buffer()), nv
-                )
-                new_codecs.append(c)
-                new_payloads.append(p)
-                new_n[i] = nn
-                r, nc, lo, hi, _ = typed_payload_stats(c, p, nn)
-                n_runs[i], null_count[i] = r, nc
-                if lo is not None:
-                    vmin[i], vmax[i] = lo, hi
-                dt = DTYPE_CODES[p[0]]
-                vtypes.append(str(dt))
-                raw_bytes[i] = nn * dt.itemsize
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    pa.array(vtypes, type=pa.string()),
-                    pa.array(new_codecs, type=pa.string()),
-                    pa.array(new_payloads, type=pa.binary()),
-                    pa.array(new_n),
-                    pa.array(n_runs),
-                    pa.array(null_count),
-                    pa.array(vmin),
-                    pa.array(vmax),
-                    pa.array(raw_bytes),
-                    pa.array(np.array([len(p) for p in new_payloads], dtype=np.int64)),
-                ],
-                names=[
-                    "doc_id", "source", "vtype", "codec", "payload", "n_values",
-                    "n_runs", "null_count", "val_min", "val_max", "raw_bytes",
-                    "encoded_bytes",
-                ],
-            )
-
-    return blocks.select(
-        "doc_id", "source", "codec", "payload", "n_values"
-    ).mapInArrow(kernel, TYPED_BLOCKS_SCHEMA)
+    return rewrite_blocks(blocks, TYPED, row_fn)
 
 
 def fillna_typed_df(blocks: DataFrame, value=None, method: str | None = None) -> DataFrame:
@@ -576,10 +402,9 @@ def fillna_typed_df(blocks: DataFrame, value=None, method: str | None = None) ->
     from rle_array_spark.codecs.typed import fillna_typed
 
     def row_fn(c, p, n):
-        nc, np_ = fillna_typed(c, p, n, value=value, method=method)
-        return nc, np_, n
+        return fillna_typed(c, p, n, value=value, method=method)
 
-    return _block_transform_df(blocks, row_fn)
+    return rewrite_blocks(blocks, TYPED, row_fn)
 
 
 def shift_typed_df(blocks: DataFrame, periods: int) -> DataFrame:
@@ -589,10 +414,9 @@ def shift_typed_df(blocks: DataFrame, periods: int) -> DataFrame:
     from rle_array_spark.codecs.typed import shift_typed
 
     def row_fn(c, p, n):
-        nc, np_ = shift_typed(c, p, n, periods)
-        return nc, np_, n
+        return shift_typed(c, p, n, periods)
 
-    return _block_transform_df(blocks, row_fn)
+    return rewrite_blocks(blocks, TYPED, row_fn)
 
 
 def dropna_typed_df(blocks: DataFrame) -> DataFrame:
@@ -602,7 +426,7 @@ def dropna_typed_df(blocks: DataFrame) -> DataFrame:
     n_values reflects the post-drop length."""
     from rle_array_spark.codecs.typed import dropna_typed
 
-    return _block_transform_df(blocks, dropna_typed)
+    return rewrite_blocks(blocks, TYPED, dropna_typed)
 
 
 TYPED_REDUCTIONS_SCHEMA = (
@@ -666,61 +490,7 @@ def decode_typed_df(blocks: DataFrame, elem_type: str) -> DataFrame:
     """Typed blocks → (doc_id, source, vals array<elem_type>) with element
     nulls restored; values bit-identical to the encoded input."""
 
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False).astype(np.int64)
-            payload_col = batch.column("payload")
-            parts, masks = [], []
-            any_null = False
-            for i in range(batch.num_rows):
-                vals, valid = decode_typed(
-                    codecs_col[i],
-                    memoryview(payload_col[i].as_buffer()),
-                    int(n_col[i]),
-                )
-                parts.append(vals)
-                masks.append(valid)
-                any_null = any_null or valid is not None
-            flat = (
-                np.concatenate(parts)
-                if parts
-                else np.zeros(0, dtype=np.float64)
-            )
-            offsets = np.concatenate(([0], np.cumsum(n_col, dtype=np.int64)))
-            if any_null:
-                invalid = np.zeros(flat.size, dtype=bool)
-                for i, m in enumerate(masks):
-                    if m is not None:
-                        invalid[offsets[i] : offsets[i + 1]] = ~m
-                child = pa.array(flat, mask=invalid)
-            else:
-                child = pa.array(flat)
-            lists = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), batch.column("source"), lists],
-                names=["doc_id", "source", "vals"],
-            )
-
-    schema = f"doc_id string, source string, vals array<{elem_type}>"
-    return blocks.select("doc_id", "source", "codec", "payload", "n_values").mapInArrow(
-        kernel, schema
-    )
-
-
-def _typed_rewrite_df(blocks: DataFrame, row_op, n_values_fn) -> DataFrame:
-    """Per-block payload rewrite with a length map that depends only on the
-    OLD length: ``row_op(codec, payload, n) -> (codec, payload)``,
-    ``n_values_fn(n) -> new_n``. Thin adapter over _block_transform_df
-    (which allows fully dynamic lengths, e.g. dropna)."""
-
-    def fn(c, p, n):
-        nc, np_ = row_op(c, p, n)
-        return nc, np_, n_values_fn(n)
-
-    return _block_transform_df(blocks, fn)
+    return decode_df(blocks, {"vals": (TYPED, elem_type, "")})
 
 
 def take_typed_df(
@@ -734,32 +504,18 @@ def take_typed_df(
     block; repeats allowed). Run-domain for trle (codecs/typed_zip.take_typed),
     with exact metadata recompute."""
     from rle_array_spark.codecs.typed_zip import take_typed
+    from rle_array_spark.engine import take_positions
 
-    if (stride is None) == (indices is None):
-        raise ValueError("exactly one of stride / indices is required")
-    if stride is not None and (stride < 1 or offset < 0):
-        raise ValueError(f"need stride >= 1 and offset >= 0, got {stride}/{offset}")
-    if indices is not None:
-        idx_global = np.asarray(indices, dtype=np.int64)
-        if idx_global.size:
-            if idx_global[0] < 0:
-                raise ValueError("indices must be non-negative")
-            if np.any(np.diff(idx_global) < 0):
-                raise ValueError("indices must be sorted non-decreasing")
+    idx_global = take_positions(stride, offset, indices)
 
     def row_op(codec, payload, n):
         if stride is not None:
             idx = np.arange(offset, n, stride, dtype=np.int64)
         else:
             idx = idx_global[: int(np.searchsorted(idx_global, n))]
-        return take_typed(codec, payload, n, idx)
+        return (*take_typed(codec, payload, n, idx), idx.size)
 
-    def n_values_fn(n):
-        if stride is not None:
-            return max(0, (n - offset + stride - 1) // stride) if n > offset else 0
-        return int(np.searchsorted(idx_global, n))
-
-    return _typed_rewrite_df(blocks, row_op, n_values_fn)
+    return rewrite_blocks(blocks, TYPED, row_op)
 
 
 def reverse_typed_df(blocks: DataFrame) -> DataFrame:
@@ -767,7 +523,7 @@ def reverse_typed_df(blocks: DataFrame) -> DataFrame:
     for trle."""
     from rle_array_spark.codecs.typed_zip import reverse_typed
 
-    return _typed_rewrite_df(blocks, reverse_typed, lambda n: n)
+    return rewrite_blocks(blocks, TYPED, reverse_typed)
 
 
 def value_counts_typed_df(blocks: DataFrame, elem_type: str) -> DataFrame:
@@ -778,45 +534,9 @@ def value_counts_typed_df(blocks: DataFrame, elem_type: str) -> DataFrame:
     groupBy that shuffles only distinct values. Returns (doc_id, value,
     count); NaNs group as one key (bit-view grouping)."""
 
-    def kernel(batches):
-        from rle_array_spark.codecs.typed_zip import value_counts_typed
+    from rle_array_spark.codecs.typed_zip import value_counts_typed
 
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            codecs_col = batch.column("codec").to_pylist()
-            payload_col = batch.column("payload")
-            n_col = batch.column("n_values").to_numpy(zero_copy_only=False)
-            doc_ids = batch.column("doc_id").to_pylist()
-            out_docs: list[str] = []
-            parts: list[np.ndarray] = []
-            counts_parts: list[np.ndarray] = []
-            for i in range(batch.num_rows):
-                vals, counts = value_counts_typed(
-                    codecs_col[i],
-                    memoryview(payload_col[i].as_buffer()),
-                    int(n_col[i]),
-                )
-                if vals.size:
-                    out_docs.extend([doc_ids[i]] * vals.size)
-                    parts.append(vals)
-                    counts_parts.append(counts)
-            if out_docs:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_docs, type=pa.string()),
-                        pa.array(np.concatenate(parts)),
-                        pa.array(np.concatenate(counts_parts)),
-                    ],
-                    names=["doc_id", "value", "count"],
-                )
-
-    partials = blocks.select("doc_id", "codec", "payload", "n_values").mapInArrow(
-        kernel, f"doc_id string, value {elem_type}, count long"
-    )
-    from pyspark.sql import functions as F
-
-    return partials.groupBy("doc_id", "value").agg(F.sum("count").alias("count"))
+    return value_counts_df(blocks, value_counts_typed, elem_type)
 
 
 def doc_quantiles_typed_df(

@@ -189,6 +189,46 @@ def test_table_prepass_null_arrays_and_row_order(spark, tmp_path):
     assert fp == tableio._fingerprint(["b", "a", "b", "b"], [3, 6, 0, 3], [0, 0, 0, 1], key)
 
 
+@pytest.mark.parametrize("chunk_tokens", [None, K])
+def test_null_token_array_is_empty_and_rerun_hits(spark, tmp_path, chunk_tokens):
+    """A null array<int> holds no values in the token writer: it decodes as
+    [], and the rerun's fingerprint pass counts it 0 like the kernel, so
+    the rerun is a full hit (chunked and unchunked)."""
+    from rle_array_spark.engine import decode_df
+    from rle_array_spark.tableio import read_blocks
+
+    rows = [("a", _tokens(5, 0), 5, "s"), ("n", None, 0, "s"), ("b", _tokens(2 * K + 1, 1), 2 * K + 1, "t")]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    out = str(tmp_path / "tok")
+    encode_to_dir(df, out, num_partitions=3, chunk_tokens=chunk_tokens)
+    got = decode_df(read_blocks(spark, out), reassemble_chunks=True).collect()
+    assert {r["doc_id"]: r["tokens"] for r in got} == {
+        "a": _tokens(5, 0), "n": [], "b": _tokens(2 * K + 1, 1)
+    }
+    again = encode_to_dir(df, out, num_partitions=3, chunk_tokens=chunk_tokens)
+    assert {r["status"] for r in again} == {"skipped"}
+
+
+def test_null_int_array_in_table_writer(spark, tmp_path):
+    """The table writer encodes a null array<int> (and null typed and
+    string arrays) as no values: it decodes as [], and the rerun hits."""
+    from rle_array_spark.tableframe import decode_table_df
+    from rle_array_spark.tableio import read_table_blocks
+
+    rows = [("a", "s", [1, 2], [1.0, None], ["x"]), ("n", "s", None, None, None)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, source string, toks array<int>, vals array<double>, tags array<string>"
+    )
+    out = str(tmp_path / "table")
+    encode_table_to_dir(df, TABLE_COLS, out, num_partitions=2)
+    types = {"toks": "int", "vals": "double", "tags": "string"}
+    got = {r["doc_id"]: r for r in decode_table_df(read_table_blocks(spark, out), types).collect()}
+    assert (got["n"]["toks"], got["n"]["vals"], got["n"]["tags"]) == ([], [], [])
+    assert got["a"]["toks"] == [1, 2] and got["a"]["vals"] == [1.0, None]
+    again = encode_table_to_dir(df, TABLE_COLS, out, num_partitions=2)
+    assert {r["status"] for r in again} == {"skipped"}
+
+
 # SHA-256 of the data files both writers commit for the inputs of
 # test_data_file_bytes_pinned (P = 4, the session of conftest.py). The
 # token writer's files are named by partition and fingerprint; the table
