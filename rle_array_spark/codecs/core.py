@@ -144,6 +144,16 @@ class Codec:
         return None
 
 
+_STRUCT_CODES = {"|u1": "B", "<u4": "I", "<i8": "q"}
+
+
+def struct_format(header: np.dtype) -> str:
+    """The ``struct`` format of a packed little-endian header record. A
+    codec declares its header once, as the structured dtype batch readers
+    view (codecs/vdecode.py), and packs single headers with this format."""
+    return "<" + "".join(_STRUCT_CODES[header.fields[f][0].str] for f in header.names)
+
+
 def _read_struct(fmt: str, buf: memoryview, offset: int):
     size = struct.calcsize(fmt)
     return struct.unpack_from(fmt, buf, offset), offset + size

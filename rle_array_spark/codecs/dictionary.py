@@ -14,10 +14,13 @@ import struct
 import numpy as np
 
 from rle_array_spark.codecs.bitpack import bit_width, pack_bits, packed_nbytes, unpack_bits
-from rle_array_spark.codecs.core import BlockStats, Codec, check_tokens
+from rle_array_spark.codecs.core import BlockStats, Codec, check_tokens, struct_format
 
-_HEADER = "<IqBB"  # cardinality:uint32, dbase:int64, dwidth:uint8, cwidth:uint8
-_HEADER_SIZE = struct.calcsize(_HEADER)
+# Payload: this header, then the FOR-packed table (dwidth bits each, offset
+# dbase), then the packed codes (cwidth bits each).
+HEADER = np.dtype([("card", "<u4"), ("dbase", "<i8"), ("dwidth", "u1"), ("cwidth", "u1")])
+_HEADER = struct_format(HEADER)
+_HEADER_SIZE = HEADER.itemsize
 
 
 class DictCodec(Codec):
@@ -27,9 +30,8 @@ class DictCodec(Codec):
         v = check_tokens(values)
         if table is None:
             table = np.unique(v)
-        card = int(table.size)
-        if card == 0:
-            return struct.pack(_HEADER, 0, 0, 0, 0)
+        if table.size == 0:
+            return self.encode_parts(table, v)
         span = int(table[-1]) - int(table[0]) + 1
         if span <= 2 * v.size:
             # Dense value range: O(span + n) inverse-lookup table beats the
@@ -38,50 +40,33 @@ class DictCodec(Codec):
             # MISUSED partial table deterministic and crash-free — the same
             # garbage-codes-no-crash class the searchsorted path has.
             lut = np.zeros(span, dtype=np.int64)
-            lut[table - table[0]] = np.arange(card, dtype=np.int64)
+            lut[table - table[0]] = np.arange(table.size, dtype=np.int64)
             codes = np.take(lut, v.astype(np.int64) - int(table[0]), mode="clip")
         else:
             codes = np.searchsorted(table, v)
-        dbase = int(table[0])
-        dwidth = bit_width(int(table[-1]) - dbase)
-        cwidth = bit_width(card - 1)
-        header = struct.pack(_HEADER, card, dbase, dwidth, cwidth)
-        return (
-            header
-            + pack_bits(table.astype(np.int64) - dbase, dwidth)
-            + pack_bits(codes, cwidth)
-        )
+        return self.encode_parts(table, codes)
 
     def decode(self, payload, n: int) -> np.ndarray:
-        buf = memoryview(payload)
-        card, dbase, dwidth, cwidth = struct.unpack_from(_HEADER, buf, 0)
-        if card == 0:
-            return np.zeros(0, dtype=np.int32)
-        off = _HEADER_SIZE
-        tbytes = packed_nbytes(card, dwidth)
-        table = (
-            unpack_bits(buf[off : off + tbytes], card, dwidth).astype(np.int64) + dbase
-        ).astype(np.int32)
-        codes = unpack_bits(buf[off + tbytes :], n, cwidth).astype(np.int64)
-        return table[codes]
+        table, codes = self.parts(payload, n)
+        return table.astype(np.int32)[codes]
 
     def parts(self, payload, n: int) -> tuple[np.ndarray, np.ndarray]:
         """(table int64 ascending-unique, codes int64) without gathering
-        values — the code-domain view used by the dict⊕dict zip."""
+        values — the code-domain view the compressed-domain operators read."""
         buf = memoryview(payload)
         card, dbase, dwidth, cwidth = struct.unpack_from(_HEADER, buf, 0)
         if card == 0:
             return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
         off = _HEADER_SIZE
         tbytes = packed_nbytes(card, dwidth)
-        table = unpack_bits(buf[off : off + tbytes], card, dwidth).astype(np.int64) + dbase
-        codes = unpack_bits(buf[off + tbytes :], n, cwidth).astype(np.int64)
-        return table, codes
+        # unpack_bits returns fresh uint64 arrays below 2^63: view, don't copy
+        table = unpack_bits(buf[off : off + tbytes], card, dwidth).view(np.int64) + dbase
+        return table, unpack_bits(buf[off + tbytes :], n, cwidth).view(np.int64)
 
     def encode_parts(self, table: np.ndarray, codes: np.ndarray) -> bytes:
-        """Build a payload from a SORTED-UNIQUE int32 table (every entry
-        referenced) + codes — byte-identical to ``encode(table[codes])``
-        without materializing the values."""
+        """Build a payload from a SORTED-UNIQUE int table + codes —
+        byte-identical to ``encode(table[codes])`` when every entry is
+        referenced, without materializing the values."""
         card = int(table.size)
         if card == 0:
             return struct.pack(_HEADER, 0, 0, 0, 0)

@@ -17,45 +17,12 @@ Per codec:
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from rle_array_spark.codecs import CODECS
-from rle_array_spark.codecs.bitpack import packed_nbytes, unpack_bits
-from rle_array_spark.codecs.rle import _HEADER as _RLE_HEADER
-from rle_array_spark.codecs.rle import _HEADER_SIZE as _RLE_HEADER_SIZE
+from rle_array_spark.codecs.rle import decode_runs, encode_runs, merge_runs, split_runs
 
-_DICT_HEADER = "<IqBB"
-_DICT_HEADER_SIZE = struct.calcsize(_DICT_HEADER)
-
-
-def _rle_parts(payload) -> tuple[np.ndarray, np.ndarray]:
-    buf = memoryview(payload)
-    n_runs, vbase, vwidth, lwidth = struct.unpack_from(_RLE_HEADER, buf, 0)
-    if n_runs == 0:
-        return np.zeros(0, np.int32), np.zeros(0, np.int64)
-    off = _RLE_HEADER_SIZE
-    vbytes = packed_nbytes(n_runs, vwidth)
-    run_values = (
-        unpack_bits(buf[off : off + vbytes], n_runs, vwidth).astype(np.int64) + vbase
-    ).astype(np.int32)
-    run_lengths = unpack_bits(buf[off + vbytes :], n_runs, lwidth).astype(np.int64) + 1
-    return run_values, run_lengths
-
-
-def _dict_parts(payload, n: int) -> tuple[np.ndarray, np.ndarray]:
-    buf = memoryview(payload)
-    card, dbase, dwidth, cwidth = struct.unpack_from(_DICT_HEADER, buf, 0)
-    if card == 0:
-        return np.zeros(0, np.int32), np.zeros(0, np.int64)
-    off = _DICT_HEADER_SIZE
-    tbytes = packed_nbytes(card, dwidth)
-    table = (
-        unpack_bits(buf[off : off + tbytes], card, dwidth).astype(np.int64) + dbase
-    ).astype(np.int32)
-    codes = unpack_bits(buf[off + tbytes :], n, cwidth).astype(np.int64)
-    return table, codes
+_dict_parts = CODECS["dict"].parts
 
 
 def block_sum(codec: str, payload, n: int) -> int:
@@ -63,7 +30,7 @@ def block_sum(codec: str, payload, n: int) -> int:
     if n == 0:
         return 0
     if codec == "rle":
-        run_values, run_lengths = _rle_parts(payload)
+        run_values, run_lengths = decode_runs(payload)
         return int(np.dot(run_values.astype(np.int64), run_lengths))
     if codec == "dict":
         table, codes = _dict_parts(payload, n)
@@ -78,7 +45,7 @@ def block_min_max(codec: str, payload, n: int) -> tuple[int, int]:
     if n == 0:
         return 0, 0
     if codec == "rle":
-        run_values, _ = _rle_parts(payload)
+        run_values, _ = decode_runs(payload)
         return int(run_values.min()), int(run_values.max())
     if codec == "dict":
         table, codes = _dict_parts(payload, n)
@@ -97,7 +64,7 @@ def block_any_all(codec: str, payload, n: int) -> tuple[bool, bool]:
     if n == 0:
         return False, True
     if codec == "rle":
-        run_values, _ = _rle_parts(payload)
+        run_values, _ = decode_runs(payload)
         return bool((run_values != 0).any()), bool((run_values != 0).all())
     if codec == "dict":
         table, codes = _dict_parts(payload, n)
@@ -114,7 +81,7 @@ def block_prod(codec: str, payload, n: int) -> float:
     if n == 0:
         return 1.0
     if codec == "rle":
-        run_values, run_lengths = _rle_parts(payload)
+        run_values, run_lengths = decode_runs(payload)
         with np.errstate(over="ignore"):
             return float(np.prod(np.power(run_values.astype(np.float64), run_lengths)))
     values = CODECS[codec].decode(payload, n)
@@ -134,7 +101,7 @@ def block_prod_mod(codec: str, payload, n: int, p: int) -> int:
     if n == 0:
         return 1 % p
     if codec == "rle":
-        run_values, run_lengths = _rle_parts(payload)
+        run_values, run_lengths = decode_runs(payload)
         acc = 1
         for v, ln in zip(run_values.tolist(), run_lengths.tolist()):
             acc = (acc * pow(v % p, ln, p)) % p
@@ -163,7 +130,7 @@ def decode_slice(codec: str, payload, n: int, start: int, stop: int) -> np.ndarr
     if stop == start:
         return np.zeros(0, np.int32)
     if codec == "rle":
-        run_values, run_lengths = _rle_parts(payload)
+        run_values, run_lengths = decode_runs(payload)
         ends = np.cumsum(run_lengths)
         first = int(np.searchsorted(ends, start, side="right"))
         last = int(np.searchsorted(ends, stop - 1, side="right"))
@@ -181,20 +148,10 @@ def decode_slice(codec: str, payload, n: int, start: int, stop: int) -> np.ndarr
         )
     if codec == "dict":
         table, codes = _dict_parts(payload, n)
-        return table[codes[start:stop]]
+        return table.astype(np.int32)[codes[start:stop]]
     # bitpack/for/ngram: decode then slice (bit-level window math is possible
     # for bitpack/for but the stream unpack is already a single C pass)
     return CODECS[codec].decode(payload, n)[start:stop]
-
-
-def _merge_adjacent_runs(
-    vals: np.ndarray, lens: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Canonicalize runs: merge adjacent runs with equal values."""
-    if vals.size == 0:
-        return vals, lens
-    starts = np.concatenate(([0], np.flatnonzero(vals[1:] != vals[:-1]) + 1))
-    return vals[starts], np.add.reduceat(lens, starts)
 
 
 def take_runs(
@@ -219,23 +176,41 @@ def take_runs(
     if idx[0] < 0 or idx[-1] >= n:
         raise IndexError(f"take index out of range [0, {n})")
     if codec == "rle":
-        run_values, run_lengths = _rle_parts(payload)
+        run_values, run_lengths = decode_runs(payload)
         ends = np.cumsum(run_lengths)
         ridx = np.searchsorted(ends, idx, side="right")
         starts = np.concatenate(([0], np.flatnonzero(ridx[1:] != ridx[:-1]) + 1))
         lens = np.diff(np.concatenate((starts, [idx.size])))
-        return _merge_adjacent_runs(run_values[ridx[starts]], lens)
+        return merge_runs(run_values[ridx[starts]], lens)
     if codec == "dict":
         table, codes = _dict_parts(payload, n)
-        gathered = table[codes[idx]]
+        gathered = table.astype(np.int32)[codes[idx]]
     elif codec == "raw":
         gathered = np.frombuffer(payload, dtype="<i4", count=n)[idx].astype(np.int32)
     else:
         gathered = CODECS[codec].decode(payload, n)[idx]
-    from rle_array_spark.codecs.rle import split_runs
-
     vals, lens = split_runs(np.ascontiguousarray(gathered))
     return vals.astype(np.int32, copy=False), lens
+
+
+def runs_stats(run_values: np.ndarray, run_lengths: np.ndarray) -> tuple[int, int, int, int]:
+    """(n_runs, sum, min, max) of a block held as canonical runs."""
+    if not run_values.size:
+        return 0, 0, 0, 0
+    return (
+        int(run_values.size),
+        int(np.dot(run_values.astype(np.int64), run_lengths)),
+        int(run_values.min()),
+        int(run_values.max()),
+    )
+
+
+def stream_stats(values: np.ndarray) -> tuple[int, int, int, int]:
+    """(n_runs, sum, min, max) of a materialized value stream."""
+    if values.size == 0:
+        return 0, 0, 0, 0
+    n_runs = 1 + int(np.count_nonzero(values[1:] != values[:-1]))
+    return n_runs, int(values.sum(dtype=np.int64)), int(values.min()), int(values.max())
 
 
 def payload_stats(codec: str, payload, n: int) -> tuple[int, int, int, int]:
@@ -246,13 +221,7 @@ def payload_stats(codec: str, payload, n: int) -> tuple[int, int, int, int]:
     if n == 0:
         return 0, 0, 0, 0
     if codec == "rle":
-        run_values, run_lengths = _rle_parts(payload)
-        return (
-            int(run_values.size),
-            int(np.dot(run_values.astype(np.int64), run_lengths)),
-            int(run_values.min()),
-            int(run_values.max()),
-        )
+        return runs_stats(*decode_runs(payload))
     if codec == "dict":
         table, codes = _dict_parts(payload, n)
         counts = np.bincount(codes, minlength=table.size)
@@ -267,14 +236,7 @@ def payload_stats(codec: str, payload, n: int) -> tuple[int, int, int, int]:
             int(ref[0]),
             int(ref[-1]),
         )
-    values = CODECS[codec].decode(payload, n)
-    n_runs = 1 + int(np.count_nonzero(values[1:] != values[:-1]))
-    return (
-        n_runs,
-        int(values.sum(dtype=np.int64)),
-        int(values.min()),
-        int(values.max()),
-    )
+    return stream_stats(CODECS[codec].decode(payload, n))
 
 
 def normalize_take_indices(
@@ -338,12 +300,12 @@ def take_any(
     else:
         gather_idx = np.where(fill_mask, 0, idx)
         if codec == "rle":
-            rv, rl = _rle_parts(payload)
+            rv, rl = decode_runs(payload)
             ends = np.cumsum(rl)
             vals = rv[np.searchsorted(ends, gather_idx, side="right")]
         elif codec == "dict":
             table, codes = _dict_parts(payload, n)
-            vals = table[codes[gather_idx]]
+            vals = table.astype(np.int32)[codes[gather_idx]]
         elif codec == "raw":
             vals = np.frombuffer(payload, dtype="<i4", count=n)[
                 gather_idx
@@ -353,8 +315,6 @@ def take_any(
         if fill_mask.any():
             vals = vals.copy()
             vals[fill_mask] = fill_value
-    from rle_array_spark.codecs.rle import split_runs
-
     v, lens = split_runs(np.ascontiguousarray(vals.astype(np.int32, copy=False)))
     return v.astype(np.int32, copy=False), lens
 
@@ -376,7 +336,7 @@ def value_counts_block(
     if n == 0:
         return np.zeros(0, np.int32), np.zeros(0, np.int64)
     if codec == "rle":
-        vals, lens = _rle_parts(payload)
+        vals, lens = decode_runs(payload)
         uniq, inv = np.unique(vals, return_inverse=True)
         counts = np.bincount(inv, weights=lens.astype(np.float64)).astype(np.int64)
         return uniq.astype(np.int32, copy=False), counts
@@ -404,8 +364,6 @@ def sort_block(
     machinery's decode path, conftest data_for_sorting fixtures; this is
     the compressed-domain upgrade). Returns (codec, payload) with
     new length == n."""
-    from rle_array_spark.codecs.rle import encode_runs
-
     vals, counts = value_counts_block(codec, payload, n)
     if descending:
         vals, counts = vals[::-1].copy(), counts[::-1].copy()

@@ -23,10 +23,13 @@ import struct
 import numpy as np
 
 from rle_array_spark.codecs.bitpack import bit_width, pack_bits, packed_nbytes, unpack_bits
-from rle_array_spark.codecs.core import BlockStats, Codec, check_tokens
+from rle_array_spark.codecs.core import BlockStats, Codec, check_tokens, struct_format
 
-_HEADER = "<IqBB"  # n_runs:uint32, vbase:int64, vwidth:uint8, lwidth:uint8
-_HEADER_SIZE = struct.calcsize(_HEADER)
+# Payload: this header, then FOR-packed run values (vwidth bits each, offset
+# vbase), then packed run lengths - 1 (lwidth bits each).
+HEADER = np.dtype([("n_runs", "<u4"), ("vbase", "<i8"), ("vwidth", "u1"), ("lwidth", "u1")])
+_HEADER = struct_format(HEADER)
+_HEADER_SIZE = HEADER.itemsize
 
 
 def split_runs(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -38,6 +41,21 @@ def split_runs(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     starts = np.concatenate(([0], boundaries))
     ends = np.concatenate((boundaries, [n]))
     return values[starts], (ends - starts).astype(np.int64)
+
+
+def merge_runs(values: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Restore the canonical form after an operator rewrote run values or
+    dropped runs: adjacent runs with equal values merge (reference
+    recompress, _algorithms.py:343-367). Values compare on their bit
+    pattern, so NaN runs merge and -0.0 / +0.0 stay apart, the typed
+    codecs' run semantics; for integers that is plain equality."""
+    if values.size > 1:
+        bits = values.view(f"u{values.itemsize}")
+        keep = np.concatenate(([True], bits[1:] != bits[:-1]))
+        if not keep.all():
+            starts = np.flatnonzero(keep)
+            return values[starts], np.add.reduceat(lengths, starts)
+    return values, lengths
 
 
 def encode_runs(run_values: np.ndarray, run_lengths: np.ndarray) -> bytes:
@@ -58,6 +76,23 @@ def encode_runs(run_values: np.ndarray, run_lengths: np.ndarray) -> bytes:
     )
 
 
+def decode_runs(payload) -> tuple[np.ndarray, np.ndarray]:
+    """(run_values int32, run_lengths int64) of an RLE payload, the inverse
+    of :func:`encode_runs`; the compressed-domain operators read runs here."""
+    buf = memoryview(payload)
+    n_runs, vbase, vwidth, lwidth = struct.unpack_from(_HEADER, buf, 0)
+    if n_runs == 0:
+        return np.zeros(0, dtype=np.int32), np.zeros(0, dtype=np.int64)
+    off = _HEADER_SIZE
+    vbytes = packed_nbytes(n_runs, vwidth)
+    # unpack_bits returns fresh uint64 arrays below 2^63: view, don't copy
+    run_values = (
+        unpack_bits(buf[off : off + vbytes], n_runs, vwidth).view(np.int64) + vbase
+    ).astype(np.int32)
+    run_lengths = unpack_bits(buf[off + vbytes :], n_runs, lwidth).view(np.int64) + 1
+    return run_values, run_lengths
+
+
 class RleCodec(Codec):
     name = "rle"
 
@@ -67,17 +102,7 @@ class RleCodec(Codec):
         return encode_runs(run_values, run_lengths)
 
     def decode(self, payload, n: int) -> np.ndarray:
-        buf = memoryview(payload)
-        n_runs, vbase, vwidth, lwidth = struct.unpack_from(_HEADER, buf, 0)
-        if n_runs == 0:
-            return np.zeros(0, dtype=np.int32)
-        off = _HEADER_SIZE
-        vbytes = packed_nbytes(n_runs, vwidth)
-        run_values = (
-            unpack_bits(buf[off : off + vbytes], n_runs, vwidth).astype(np.int64) + vbase
-        ).astype(np.int32)
-        run_lengths = unpack_bits(buf[off + vbytes :], n_runs, lwidth).astype(np.int64) + 1
-        out = np.repeat(run_values, run_lengths)
+        out = np.repeat(*decode_runs(payload))
         if out.size != n:
             raise ValueError(f"rle decode length mismatch: {out.size} != {n}")
         return out

@@ -16,7 +16,12 @@ import struct
 import numpy as np
 
 from rle_array_spark.codecs.bitpack import bit_width, pack_bits, packed_nbytes, unpack_bits
-from rle_array_spark.codecs.core import TOKEN_DTYPE, BlockStats, Codec, check_tokens
+from rle_array_spark.codecs.core import TOKEN_DTYPE, BlockStats, Codec, check_tokens, struct_format
+
+BITPACK_HEADER = np.dtype([("width", "u1")])
+FOR_HEADER = np.dtype([("base", "<i8"), ("width", "u1")])
+_BITPACK = struct_format(BITPACK_HEADER)
+_FOR = struct_format(FOR_HEADER)
 
 
 class RawCodec(Codec):
@@ -40,15 +45,15 @@ class BitpackCodec(Codec):
     def encode(self, values: np.ndarray) -> bytes:
         v = check_tokens(values)
         width = bit_width(int(v.max())) if v.size else 0
-        return struct.pack("<B", width) + pack_bits(v, width)
+        return struct.pack(_BITPACK, width) + pack_bits(v, width)
 
     def decode(self, payload, n: int) -> np.ndarray:
         buf = memoryview(payload)
-        (width,) = struct.unpack_from("<B", buf, 0)
-        return unpack_bits(buf[1:], n, width).astype(np.int32)
+        (width,) = struct.unpack_from(_BITPACK, buf, 0)
+        return unpack_bits(buf[BITPACK_HEADER.itemsize :], n, width).astype(np.int32)
 
     def estimate_size(self, stats: BlockStats) -> int:
-        return 1 + packed_nbytes(stats.n, bit_width(stats.vmax))
+        return BITPACK_HEADER.itemsize + packed_nbytes(stats.n, bit_width(stats.vmax))
 
 
 class ForCodec(Codec):
@@ -60,14 +65,14 @@ class ForCodec(Codec):
         v = check_tokens(values)
         base = int(v.min()) if v.size else 0
         width = bit_width(int(v.max()) - base) if v.size else 0
-        header = struct.pack("<qB", base, width)
+        header = struct.pack(_FOR, base, width)
         return header + pack_bits(v.astype(np.int64) - base, width)
 
     def decode(self, payload, n: int) -> np.ndarray:
         buf = memoryview(payload)
-        base, width = struct.unpack_from("<qB", buf, 0)
-        residuals = unpack_bits(buf[9:], n, width)
+        base, width = struct.unpack_from(_FOR, buf, 0)
+        residuals = unpack_bits(buf[FOR_HEADER.itemsize :], n, width)
         return (residuals.astype(np.int64) + base).astype(np.int32)
 
     def estimate_size(self, stats: BlockStats) -> int:
-        return 9 + packed_nbytes(stats.n, bit_width(stats.vmax - stats.vmin))
+        return FOR_HEADER.itemsize + packed_nbytes(stats.n, bit_width(stats.vmax - stats.vmin))

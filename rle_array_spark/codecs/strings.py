@@ -40,36 +40,9 @@ import pyarrow.compute as pc
 
 from rle_array_spark.codecs import bitpack
 from rle_array_spark.codecs.core import _read_struct
+from rle_array_spark.codecs.typed import _encode_nulls, _mask_runs, _read_nulls
 
 STRING_CODECS = ("srle", "sdict", "sraw", "sfsst")
-
-
-def _mask_runs(valid: np.ndarray) -> tuple[int, np.ndarray]:
-    change = np.flatnonzero(valid[1:] != valid[:-1]) + 1
-    ends = np.append(change, valid.size).astype(np.uint32)
-    return int(valid[0]), ends
-
-
-def _encode_flags(valid: np.ndarray | None) -> bytes:
-    if valid is None:
-        return struct.pack("<B", 0)
-    first, ends = _mask_runs(valid)
-    return struct.pack("<BIB", 1, ends.size, first) + ends.astype("<u4").tobytes()
-
-
-def _decode_flags(buf: memoryview, n: int):
-    (flags,), off = _read_struct("<B", buf, 0)
-    valid = None
-    if flags & 1:
-        (n_runs, first), off = _read_struct("<IB", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off)
-        off += 4 * n_runs
-        # alternating-run expansion, fully vectorized (runs alternate
-        # between `first` and its negation)
-        lens = np.diff(ends.astype(np.int64), prepend=0)
-        run_bits = (np.arange(n_runs) % 2 == 0) == bool(first)
-        valid = np.repeat(run_bits, lens)
-    return valid, off
 
 
 def _pack_table(table: list[bytes]) -> bytes:
@@ -119,7 +92,7 @@ def encode_sdict(arr: pa.Array, parts=None) -> bytes:
     width = bitpack.bit_width(len(table) - 1) if len(table) > 1 else 0
     packed = bitpack.pack_bits(codes, width) if width else b""
     return (
-        _encode_flags(valid)
+        _encode_nulls(valid)
         + _pack_table(table)
         + struct.pack("<B", width)
         + packed
@@ -139,7 +112,7 @@ def encode_srle(arr: pa.Array, parts=None) -> bytes:
     width = bitpack.bit_width(len(table) - 1) if len(table) > 1 else 0
     packed = bitpack.pack_bits(run_codes, width) if width else b""
     return (
-        _encode_flags(valid)
+        _encode_nulls(valid)
         + _pack_table(table)
         + struct.pack("<I", ends.size)
         + ends.astype("<u4").tobytes()
@@ -181,7 +154,7 @@ def encode_sfsst(arr: pa.Array) -> bytes:
         stream = np.frombuffer(data, dtype=np.uint8).astype(np.int32)
     body = NgramCodec().encode(stream)
     return (
-        _encode_flags(valid)
+        _encode_nulls(valid)
         + offs.astype("<u4").tobytes()
         + body
     )
@@ -206,13 +179,13 @@ def encode_sraw(arr: pa.Array) -> bytes:
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if n == 0 or arr.buffers()[1] is None:
-        return _encode_flags(valid) + np.zeros(n + 1, dtype="<u4").tobytes()
+        return _encode_nulls(valid) + np.zeros(n + 1, dtype="<u4").tobytes()
     abs_offs = np.frombuffer(
         arr.buffers()[1], dtype="<i4", count=n + 1, offset=4 * arr.offset
     ).astype(np.int64)
     data = memoryview(arr.buffers()[2])[abs_offs[0] : abs_offs[-1]]
     offs = (abs_offs - abs_offs[0]).astype("<u4")
-    return _encode_flags(valid) + offs.tobytes() + bytes(data)
+    return _encode_nulls(valid) + offs.tobytes() + bytes(data)
 
 
 def decode_strings(name: str, payload, n: int) -> tuple[np.ndarray, np.ndarray | None]:
@@ -225,7 +198,7 @@ def decode_strings(name: str, payload, n: int) -> tuple[np.ndarray, np.ndarray |
         out = table[codes] if table.size else np.full(n, "", dtype=object)
         return out, valid
     buf = memoryview(payload)
-    valid, off = _decode_flags(buf, n)
+    valid, off = _read_nulls(buf, 0)
     if name == "sfsst":
         from rle_array_spark.codecs.ngram import NgramCodec
 
@@ -268,7 +241,7 @@ def decode_strings_arrow(name: str, payload, n: int) -> pa.Array:
         return pa.array(
             vals, type=pa.string(), mask=None if valid2 is None else ~valid2
         )
-    valid, off = _decode_flags(buf, n)
+    valid, off = _read_nulls(buf, 0)
     null_buf = None
     null_count = 0
     if valid is not None:
@@ -380,7 +353,7 @@ def _codes_form(name: str, payload, n: int):
     """→ (table object-ndarray of str, codes int64 (length n, nulls
     forward-filled), valid | None) for the dictionary-backed codecs."""
     buf = memoryview(payload)
-    valid, off = _decode_flags(buf, n)
+    valid, off = _read_nulls(buf, 0)
     table, off = _unpack_table(buf, off)
     if name == "sdict":
         (width,), off = _read_struct("<B", buf, off)
@@ -422,7 +395,7 @@ def string_payload_stats(name: str, payload, n: int):
     stream, value bytes untouched), decode for sraw/sfsst. card counts
     values actually REFERENCED (valid slots only); min/max likewise."""
     buf = memoryview(payload)
-    valid, off = _decode_flags(buf, n)
+    valid, off = _read_nulls(buf, 0)
     null_count = 0 if valid is None else int(n - valid.sum())
     if n == 0:
         return 0, 0, 0, None, None
@@ -460,7 +433,7 @@ def string_value_bytes(name: str, payload, n: int) -> int:
     if n == 0:
         return 0
     buf = memoryview(payload)
-    valid, _ = _decode_flags(buf, n)
+    valid, _ = _read_nulls(buf, 0)
     if name in ("srle", "sdict"):
         table, codes, _ = _codes_form(name, payload, n)
         ref = codes if valid is None else codes[valid]
@@ -482,7 +455,7 @@ def dropna_strings(name: str, payload, n: int) -> tuple[str, bytes, int]:
     stream and unreferenced table entries pruned — string bytes never
     gathered. sraw/sfsst decode and re-choose."""
     buf = memoryview(payload)
-    valid, off = _decode_flags(buf, n)
+    valid, off = _read_nulls(buf, 0)
     if valid is None:
         return name, bytes(payload), n
     if name in ("srle", "sdict"):
@@ -517,7 +490,7 @@ def fillna_strings(
     if method not in (None, "ffill", "bfill"):
         raise ValueError(f"fillna: unknown method {method!r}")
     buf = memoryview(payload)
-    valid, off = _decode_flags(buf, n)
+    valid, off = _read_nulls(buf, 0)
     if valid is None:
         return name, bytes(payload)
     body = bytes(buf[off:])
@@ -536,8 +509,8 @@ def fillna_strings(
             lead = int(np.argmax(valid))
             new_valid = np.zeros(n, dtype=bool)
             new_valid[lead:] = True
-            return name, _encode_flags(new_valid) + body
-        return name, struct.pack("<B", 0) + body
+            return name, _encode_nulls(new_valid) + body
+        return name, _encode_nulls(None) + body
     if method == "bfill":
         vals, _ = decode_strings(name, buf, n)
         out = vals.copy()
@@ -776,7 +749,7 @@ def filter_strings(
         c, p = encode_string_block(pa.array([], type=pa.string()), "sraw")
         return c, p, 0
     buf = memoryview(payload)
-    valid, _ = _decode_flags(buf, n)
+    valid, _ = _read_nulls(buf, 0)
     if name in ("srle", "sdict"):
         table, codes, _ = _codes_form(name, payload, n)
         cmp_tab = (
@@ -839,7 +812,7 @@ def value_counts_strings(
     if n == 0:
         return np.zeros(0, dtype=object), np.zeros(0, np.int64)
     buf = memoryview(payload)
-    valid, _ = _decode_flags(buf, n)
+    valid, _ = _read_nulls(buf, 0)
     if name in ("srle", "sdict"):
         table, codes, _ = _codes_form(name, payload, n)
         live = codes if valid is None else codes[valid]

@@ -21,19 +21,14 @@ int32 token range; out-of-range results raise (never wrap silently).
 
 from __future__ import annotations
 
-import struct
 import warnings
 from collections.abc import Callable
 
 import numpy as np
 
 from rle_array_spark.codecs import CODECS
-from rle_array_spark.codecs.bitpack import bit_width, pack_bits, packed_nbytes, unpack_bits
-from rle_array_spark.codecs.rle import _HEADER as _RLE_HEADER
-from rle_array_spark.codecs.rle import _HEADER_SIZE as _RLE_HEADER_SIZE
-
-_DICT_HEADER = "<IqBB"
-_DICT_HEADER_SIZE = struct.calcsize(_DICT_HEADER)
+from rle_array_spark.codecs.reduce import runs_stats, stream_stats
+from rle_array_spark.codecs.rle import decode_runs, encode_runs, merge_runs
 
 _INT32_MAX = np.int64(2**31 - 1)
 
@@ -51,171 +46,40 @@ def _checked_int32(values: np.ndarray) -> np.ndarray:
     return v.astype(np.int32)
 
 
-def _repack_rle(run_values: np.ndarray, run_lengths: np.ndarray) -> bytes:
-    n_runs = run_values.size
-    if n_runs == 0:
-        return struct.pack(_RLE_HEADER, 0, 0, 0, 0)
-    vbase = int(run_values.min())
-    vwidth = bit_width(int(run_values.max()) - vbase)
-    lwidth = bit_width(int(run_lengths.max()) - 1)
-    return (
-        struct.pack(_RLE_HEADER, n_runs, vbase, vwidth, lwidth)
-        + pack_bits(run_values.astype(np.int64) - vbase, vwidth)
-        + pack_bits(run_lengths - 1, lwidth)
-    )
-
-
-def _transform_rle(payload, n: int, fn) -> bytes:
-    buf = memoryview(payload)
-    n_runs, vbase, vwidth, lwidth = struct.unpack_from(_RLE_HEADER, buf, 0)
-    if n_runs == 0:
-        return bytes(buf)
-    off = _RLE_HEADER_SIZE
-    vbytes = packed_nbytes(n_runs, vwidth)
-    run_values = (
-        unpack_bits(buf[off : off + vbytes], n_runs, vwidth).astype(np.int64) + vbase
-    ).astype(np.int32)
-    run_lengths = unpack_bits(buf[off + vbytes :], n_runs, lwidth).astype(np.int64) + 1
-    new_values = _checked_int32(fn(run_values.astype(np.int64)))
-    # recompress: merge adjacent runs made equal by the transform
-    # (reference recompress, _algorithms.py:343-367)
-    if n_runs > 1:
-        keep = np.concatenate(([True], new_values[1:] != new_values[:-1]))
-        if not keep.all():
-            starts = np.flatnonzero(keep)
-            new_values = new_values[starts]
-            run_lengths = np.add.reduceat(run_lengths, starts)
-    return _repack_rle(new_values, run_lengths)
-
-
-def _transform_dict(payload, n: int, fn) -> bytes:
-    buf = memoryview(payload)
-    card, dbase, dwidth, cwidth = struct.unpack_from(_DICT_HEADER, buf, 0)
-    if card == 0:
-        return bytes(buf)
-    off = _DICT_HEADER_SIZE
-    tbytes = packed_nbytes(card, dwidth)
-    table = (
-        unpack_bits(buf[off : off + tbytes], card, dwidth).astype(np.int64) + dbase
-    ).astype(np.int32)
-    codes = unpack_bits(buf[off + tbytes :], n, cwidth).astype(np.int64)
-    new_table_raw = _checked_int32(fn(table.astype(np.int64)))
-    # canonicalize: the transform may unsort or collide table entries
-    canon, inverse = np.unique(new_table_raw, return_inverse=True)
-    new_codes = inverse[codes]
-    new_card = int(canon.size)
-    new_base = int(canon[0])
-    new_dwidth = bit_width(int(canon[-1]) - new_base)
-    new_cwidth = bit_width(max(new_card - 1, 0))
-    return (
-        struct.pack(_DICT_HEADER, new_card, new_base, new_dwidth, new_cwidth)
-        + pack_bits(canon.astype(np.int64) - new_base, new_dwidth)
-        + pack_bits(new_codes, new_cwidth)
-    )
-
-
-def transform_block(
-    codec: str, payload, n: int, fn: Callable[[np.ndarray], np.ndarray]
-) -> tuple[str, bytes]:
-    """Apply a value-map to one encoded block without full decode where the
-    codec structure allows it. Returns (codec, new_payload)."""
-    if codec == "rle":
-        return "rle", _transform_rle(payload, n, fn)
-    if codec == "dict":
-        return "dict", _transform_dict(payload, n, fn)
-    if codec in ("raw", "bitpack", "for"):
-        values = CODECS[codec].decode(payload, n)
-        return codec, CODECS[codec].encode(_checked_int32(fn(values.astype(np.int64))))
-    # decode-fallback path (ngram): re-pick the codec after the transform
-    from rle_array_spark.chooser import choose_codec
-    from rle_array_spark.codecs.core import PerformanceWarning
-
-    warnings.warn(
-        f"transform of {codec!r} block decodes (grammar hides value structure)",
-        PerformanceWarning,
-        stacklevel=2,
-    )
-    values = CODECS[codec].decode(payload, n)
-    return choose_codec(_checked_int32(fn(values.astype(np.int64))))
-
-
-def _stream_stats(values: np.ndarray) -> tuple[int, int, int, int]:
-    """(n_runs, sum, min, max) of a materialized value stream."""
-    if values.size == 0:
-        return 0, 0, 0, 0
-    n_runs = 1 + int(np.count_nonzero(values[1:] != values[:-1]))
-    return (
-        n_runs,
-        int(values.sum(dtype=np.int64)),
-        int(values.min()),
-        int(values.max()),
-    )
-
-
 def transform_block_stats(
     codec: str, payload, n: int, fn: Callable[[np.ndarray], np.ndarray]
 ) -> tuple[str, bytes, int, int, int, int]:
-    """Like :func:`transform_block` but additionally returns EXACT post-op
-    metadata (n_runs, tok_sum, tok_min, tok_max), computed from the codec
-    structure at hand — run values + lengths for RLE (O(n_runs)), table +
-    code counts for DICT — so non-monotonic ops (mod, bit-and, clamped sub)
-    keep every metadata column truthful, which the analytic add/mul update
-    cannot do (e.g. mul 0 merges every run)."""
+    """Apply a value-map to one encoded block without full decode where the
+    codec structure allows it, and return the new block with EXACT post-op
+    metadata: (codec, payload, n_runs, tok_sum, tok_min, tok_max), computed
+    from the codec structure at hand — run values + lengths for RLE
+    (O(n_runs)), table + code counts for DICT — so non-monotonic ops (mod,
+    bit-and, clamped sub) keep every metadata column truthful, which the
+    analytic add/mul update cannot do (e.g. mul 0 merges every run)."""
     if codec == "rle":
-        buf = memoryview(payload)
-        n_runs, vbase, vwidth, lwidth = struct.unpack_from(_RLE_HEADER, buf, 0)
-        if n_runs == 0:
-            return "rle", bytes(buf), 0, 0, 0, 0
-        off = _RLE_HEADER_SIZE
-        vbytes = packed_nbytes(n_runs, vwidth)
-        run_values = (
-            unpack_bits(buf[off : off + vbytes], n_runs, vwidth).astype(np.int64) + vbase
-        ).astype(np.int32)
-        run_lengths = unpack_bits(buf[off + vbytes :], n_runs, lwidth).astype(np.int64) + 1
-        new_values = _checked_int32(fn(run_values.astype(np.int64)))
-        if n_runs > 1:
-            keep = np.concatenate(([True], new_values[1:] != new_values[:-1]))
-            if not keep.all():
-                starts = np.flatnonzero(keep)
-                new_values = new_values[starts]
-                run_lengths = np.add.reduceat(run_lengths, starts)
-        return (
-            "rle",
-            _repack_rle(new_values, run_lengths),
-            int(new_values.size),
-            int(np.dot(new_values.astype(np.int64), run_lengths)),
-            int(new_values.min()),
-            int(new_values.max()),
+        run_values, run_lengths = decode_runs(payload)
+        if not run_values.size:
+            return "rle", bytes(memoryview(payload)), 0, 0, 0, 0
+        # recompress: merge adjacent runs made equal by the transform
+        # (reference recompress, _algorithms.py:343-367)
+        new_values, run_lengths = merge_runs(
+            _checked_int32(fn(run_values.astype(np.int64))), run_lengths
         )
+        return ("rle", encode_runs(new_values, run_lengths), *runs_stats(new_values, run_lengths))
     if codec == "dict":
-        buf = memoryview(payload)
-        card, dbase, dwidth, cwidth = struct.unpack_from(_DICT_HEADER, buf, 0)
-        if card == 0:
-            return "dict", bytes(buf), 0, 0, 0, 0
-        off = _DICT_HEADER_SIZE
-        tbytes = packed_nbytes(card, dwidth)
-        table = (
-            unpack_bits(buf[off : off + tbytes], card, dwidth).astype(np.int64) + dbase
-        ).astype(np.int32)
-        codes = unpack_bits(buf[off + tbytes :], n, cwidth).astype(np.int64)
-        new_table_raw = _checked_int32(fn(table.astype(np.int64)))
-        canon, inverse = np.unique(new_table_raw, return_inverse=True)
+        dc = CODECS["dict"]
+        table, codes = dc.parts(payload, n)
+        if not table.size:
+            return "dict", bytes(memoryview(payload)), 0, 0, 0, 0
+        # canonicalize: the transform may unsort or collide table entries
+        canon, inverse = np.unique(_checked_int32(fn(table)), return_inverse=True)
         new_codes = inverse[codes]
-        new_card = int(canon.size)
-        new_base = int(canon[0])
-        new_dwidth = bit_width(int(canon[-1]) - new_base)
-        new_cwidth = bit_width(max(new_card - 1, 0))
-        new_payload = (
-            struct.pack(_DICT_HEADER, new_card, new_base, new_dwidth, new_cwidth)
-            + pack_bits(canon.astype(np.int64) - new_base, new_dwidth)
-            + pack_bits(new_codes, new_cwidth)
-        )
-        counts = np.bincount(new_codes, minlength=new_card)
+        counts = np.bincount(new_codes, minlength=canon.size)
         # code→value is injective post-unique, so value runs == code runs
         n_runs = 1 + int(np.count_nonzero(new_codes[1:] != new_codes[:-1]))
         return (
             "dict",
-            new_payload,
+            dc.encode_parts(canon, new_codes),
             n_runs,
             int(np.dot(canon.astype(np.int64), counts)),
             int(canon[0]),
@@ -223,7 +87,8 @@ def transform_block_stats(
         )
     if codec in ("raw", "bitpack", "for"):
         values = _checked_int32(fn(CODECS[codec].decode(payload, n).astype(np.int64)))
-        return (codec, CODECS[codec].encode(values), *_stream_stats(values))
+        return (codec, CODECS[codec].encode(values), *stream_stats(values))
+    # decode-fallback path (ngram): re-pick the codec after the transform
     from rle_array_spark.chooser import choose_codec
     from rle_array_spark.codecs.core import PerformanceWarning
 
@@ -234,4 +99,4 @@ def transform_block_stats(
     )
     values = _checked_int32(fn(CODECS[codec].decode(payload, n).astype(np.int64)))
     name, new_payload = choose_codec(values)
-    return (name, new_payload, *_stream_stats(values))
+    return (name, new_payload, *stream_stats(values))

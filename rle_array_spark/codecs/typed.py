@@ -41,6 +41,7 @@ import numpy as np
 
 from rle_array_spark.codecs import bitpack
 from rle_array_spark.codecs.core import _read_struct
+from rle_array_spark.codecs.rle import merge_runs, split_runs
 
 DTYPE_CODES: dict[int, np.dtype] = {
     0: np.dtype("<i4"),
@@ -93,40 +94,83 @@ def _mask_runs(valid: np.ndarray) -> tuple[int, np.ndarray]:
     return int(valid[0]), ends
 
 
-def _encode_header(code: int, valid: np.ndarray | None) -> bytes:
+def _encode_nulls(valid: np.ndarray | None) -> bytes:
+    """u8 flags (bit0: has null section) [+ u32 n_mask_runs, u8
+    first_valid, u32 run_ends × n] — the null-mask layout both the typed
+    payload (after its dtype byte) and the string payload (at offset 0) use."""
     if valid is None:
-        return struct.pack("<BB", code, 0)
+        return b"\x00"
     first, ends = _mask_runs(valid)
-    return (
-        struct.pack("<BBIB", code, 1, ends.size, first)
-        + ends.astype("<u4").tobytes()
-    )
+    return struct.pack("<BIB", 1, ends.size, first) + ends.astype("<u4").tobytes()
+
+
+def _null_runs(buf: memoryview, off: int):
+    """Read the flags byte + null section at ``off`` WITHOUT expanding the
+    mask → (first_valid | None, mask_run_ends | None, body offset)."""
+    (flags,), off = _read_struct("<B", buf, off)
+    if not flags & 1:
+        return None, None, off
+    (n_runs, first), off = _read_struct("<IB", buf, off)
+    ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off)
+    return int(first), ends, off + 4 * n_runs
+
+
+def _read_nulls(buf: memoryview, off: int):
+    """→ (valid bool mask | None when there is no null section, body offset)."""
+    first, ends, off = _null_runs(buf, off)
+    if ends is None:
+        return None, off
+    # alternating-run expansion, fully vectorized
+    run_bits = (np.arange(ends.size) % 2 == 0) == bool(first)
+    return np.repeat(run_bits, _lengths(ends)), off
+
+
+def _encode_header(code: int, valid: np.ndarray | None) -> bytes:
+    return struct.pack("<B", code) + _encode_nulls(valid)
+
+
+def _header_mask_runs(buf: memoryview):
+    """(dtype, first_valid | None, mask_run_ends | None, body_offset)."""
+    (code,), off = _read_struct("<B", buf, 0)
+    return (DTYPE_CODES[code], *_null_runs(buf, off))
 
 
 def _decode_header(buf: memoryview, n: int):
-    (code, flags), off = _read_struct("<BB", buf, 0)
-    dtype = DTYPE_CODES[code]
-    valid = None
-    if flags & 1:
-        (n_runs, first), off = _read_struct("<IB", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off)
-        off += 4 * n_runs
-        # alternating-run expansion, fully vectorized
-        lens = np.diff(ends.astype(np.int64), prepend=0)
-        run_bits = (np.arange(n_runs) % 2 == 0) == bool(first)
-        valid = np.repeat(run_bits, lens)
-        if valid.all():
-            valid = None
-    return dtype, valid, off
+    (code,), off = _read_struct("<B", buf, 0)
+    valid, off = _read_nulls(buf, off)
+    if valid is not None and valid.all():
+        valid = None
+    return DTYPE_CODES[code], valid, off
 
 
-def _split_runs_bits(bv: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    if bv.size == 0:
-        return np.zeros(0, dtype=bv.dtype), np.zeros(0, dtype=np.uint32)
-    change = np.flatnonzero(bv[1:] != bv[:-1]) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.append(change, bv.size).astype(np.uint32)
-    return bv[starts], ends
+def _trle_body(run_vals: np.ndarray, run_lens: np.ndarray) -> bytes:
+    """trle body: u32 n_runs, u32 run_ends × n_runs, raw run values."""
+    ends = np.cumsum(run_lens).astype("<u4")
+    return struct.pack("<I", ends.size) + ends.tobytes() + run_vals.tobytes()
+
+
+def _read_trle(buf: memoryview, off: int, dtype: np.dtype):
+    """→ (run_ends <u4, run values as the bit view) of a trle body at ``off``."""
+    (n_runs,), off = _read_struct("<I", buf, off)
+    ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off)
+    bits = _BIT_VIEWS[dtype.itemsize]
+    return ends, np.frombuffer(buf, dtype=bits, count=n_runs, offset=off + 4 * n_runs)
+
+
+def _read_tdict(buf: memoryview, off: int, dtype: np.dtype, n: int):
+    """→ (table as the bit view, codes) of a tdict body at ``off``: u32 k,
+    raw table (k × w), u8 width, bit-packed codes."""
+    (k,), off = _read_struct("<I", buf, off)
+    table = np.frombuffer(buf, dtype=_BIT_VIEWS[dtype.itemsize], count=k, offset=off)
+    (width,), off = _read_struct("<B", buf, off + k * dtype.itemsize)
+    if not width:
+        return table, np.zeros(n, dtype=np.int64)
+    return table, bitpack.unpack_bits(buf[off:], n, width)
+
+
+def _lengths(ends: np.ndarray) -> np.ndarray:
+    """Run lengths (int64) from run ends."""
+    return np.diff(ends.astype(np.int64), prepend=0)
 
 
 def _normalize(values: np.ndarray, valid: np.ndarray | None):
@@ -146,13 +190,7 @@ def _normalize(values: np.ndarray, valid: np.ndarray | None):
 
 def encode_trle(values: np.ndarray, valid: np.ndarray | None = None) -> bytes:
     code, bv, valid = _normalize(values, valid)
-    run_vals, run_ends = _split_runs_bits(bv)
-    return (
-        _encode_header(code, valid)
-        + struct.pack("<I", run_ends.size)
-        + run_ends.astype("<u4").tobytes()
-        + run_vals.tobytes()
-    )
+    return _encode_header(code, valid) + _trle_body(*split_runs(bv))
 
 
 def encode_tdict(values: np.ndarray, valid: np.ndarray | None = None) -> bytes:
@@ -178,26 +216,14 @@ def decode_typed(name: str, payload: bytes | memoryview, n: int):
     """→ (values ndarray of the tagged dtype, valid bool mask | None)."""
     buf = memoryview(payload)
     dtype, valid, off = _decode_header(buf, n)
-    w = dtype.itemsize
-    bits = _BIT_VIEWS[w]
     if name == "trle":
-        (n_runs,), off = _read_struct("<I", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off)
-        off += 4 * n_runs
-        run_vals = np.frombuffer(buf, dtype=bits, count=n_runs, offset=off)
-        out = np.repeat(run_vals, np.diff(np.concatenate(([0], ends.astype(np.int64)))))
+        ends, run_vals = _read_trle(buf, off, dtype)
+        out = np.repeat(run_vals, _lengths(ends))
     elif name == "tdict":
-        (k,), off = _read_struct("<I", buf, off)
-        table = np.frombuffer(buf, dtype=bits, count=k, offset=off)
-        off += k * w
-        (width,), off = _read_struct("<B", buf, off)
-        if width:
-            codes = bitpack.unpack_bits(buf[off:], n, width)
-        else:
-            codes = np.zeros(n, dtype=np.int64)
+        table, codes = _read_tdict(buf, off, dtype, n)
         out = table[codes]
     elif name == "traw":
-        out = np.frombuffer(buf, dtype=bits, count=n, offset=off).copy()
+        out = np.frombuffer(buf, dtype=_BIT_VIEWS[dtype.itemsize], count=n, offset=off).copy()
     else:
         raise ValueError(f"unknown typed codec {name!r}")
     if out.size != n:
@@ -226,8 +252,6 @@ def typed_payload_stats(name: str, payload, n: int):
     written by other jobs."""
     buf = memoryview(payload)
     dtype, valid, off = _decode_header(buf, n)
-    w = dtype.itemsize
-    bits = _BIT_VIEWS[w]
     null_count = 0 if valid is None else int(n - valid.sum())
     if n == 0:
         return 0, 0, None, None, None
@@ -246,24 +270,15 @@ def typed_payload_stats(name: str, payload, n: int):
         return float(kv.min()), float(kv.max()), float(np.dot(kv, kw))
 
     if name == "trle":
-        (n_runs,), off2 = _read_struct("<I", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off2).astype(np.int64)
-        off2 += 4 * n_runs
-        run_vals = np.frombuffer(buf, dtype=bits, count=n_runs, offset=off2).view(dtype)
-        bounds = np.concatenate(([0], ends))
+        ends, run_vals = _read_trle(buf, off, dtype)
+        bounds = np.concatenate(([0], ends.astype(np.int64)))
         vcounts = np.diff(_valid_prefix_counts(valid, bounds, n))
-        vmin, vmax, vsum = _reduce(run_vals, vcounts)
-        return int(n_runs), null_count, vmin, vmax, vsum
+        vmin, vmax, vsum = _reduce(run_vals.view(dtype), vcounts)
+        return int(ends.size), null_count, vmin, vmax, vsum
     if name == "tdict":
-        (k,), off2 = _read_struct("<I", buf, off)
-        table = np.frombuffer(buf, dtype=bits, count=k, offset=off2).view(dtype)
-        off2 += k * w
-        (width,), off2 = _read_struct("<B", buf, off2)
-        codes = (
-            bitpack.unpack_bits(buf[off2:], n, width).astype(np.int64)
-            if width
-            else np.zeros(n, dtype=np.int64)
-        )
+        table, codes = _read_tdict(buf, off, dtype, n)
+        table, codes = table.view(dtype), codes.astype(np.int64)
+        k = table.size
         counts = np.bincount(
             codes if valid is None else codes[valid], minlength=max(k, 1)
         ).astype(np.int64)
@@ -278,47 +293,17 @@ def typed_payload_stats(name: str, payload, n: int):
     return n_runs, null_count, vmin, vmax, vsum
 
 
-def _header_mask_runs(buf: memoryview):
-    """Like _decode_header but WITHOUT expanding the mask: returns
-    (dtype, first_valid | None, mask_run_ends | None, body_offset)."""
-    (code, flags), off = _read_struct("<BB", buf, 0)
-    dtype = DTYPE_CODES[code]
-    if not flags & 1:
-        return dtype, None, None, off
-    (n_runs, first), off = _read_struct("<IB", buf, off)
-    ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off)
-    off += 4 * n_runs
-    return dtype, int(first), ends, off
-
-
 def _valid_prefix_from_runs(first: int, ends: np.ndarray, positions: np.ndarray) -> np.ndarray:
     """#valid slots in [0, p) for each p, from the MASK RUNS alone —
     O(r_mask + len(positions) log r_mask), never the expanded mask."""
     ends64 = ends.astype(np.int64)
-    lens = np.diff(ends64, prepend=0)
+    lens = _lengths(ends)
     bits = (np.arange(ends.size) % 2 == 0) == bool(first)
     cum = np.concatenate(([0], np.cumsum(lens * bits)))
     starts = np.concatenate(([0], ends64[:-1]))
     j = np.searchsorted(ends64, positions, side="right")
     j = np.minimum(j, ends.size - 1)
     return cum[j] + (positions - starts[j]) * bits[j]
-
-
-def _encode_trle_body(bv_vals: np.ndarray, ends: np.ndarray) -> bytes:
-    return (
-        struct.pack("<I", ends.size)
-        + ends.astype("<u4").tobytes()
-        + bv_vals.tobytes()
-    )
-
-
-def _merge_adjacent_runs(bv_vals: np.ndarray, ends: np.ndarray):
-    if not bv_vals.size:
-        return bv_vals, ends.astype(np.int64)
-    keep = np.concatenate(([True], bv_vals[1:] != bv_vals[:-1]))
-    starts = np.flatnonzero(keep)
-    ends64 = ends.astype(np.int64)
-    return bv_vals[keep], np.append(ends64[starts[1:] - 1], ends64[-1])
 
 
 def fillna_typed(
@@ -353,7 +338,7 @@ def fillna_typed(
             new_valid = np.zeros(n, dtype=bool)
             new_valid[lead:] = True
             return name, _encode_header(code, new_valid) + body
-        return name, struct.pack("<BB", code, 0) + body
+        return name, _encode_header(code, None) + body
     if method == "bfill":
         vals, valid = decode_typed(name, buf, n)
         out = vals.copy()
@@ -368,19 +353,16 @@ def fillna_typed(
     fill = np.array([value], dtype=dtype)
     fill_bit = _bit_view(np.ascontiguousarray(fill))[0]
     if name == "trle":
-        (n_runs,), off2 = _read_struct("<I", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off2)
-        off2 += 4 * n_runs
-        run_vals = np.frombuffer(buf, dtype=_BIT_VIEWS[dtype.itemsize], count=n_runs, offset=off2)
+        ends, run_vals = _read_trle(buf, off, dtype)
         # union grid of body-run and mask-run boundaries
         grid = np.union1d(ends.astype(np.int64), mask_ends.astype(np.int64))
         bi = np.searchsorted(ends.astype(np.int64), grid, side="left")
         mi = np.searchsorted(mask_ends.astype(np.int64), grid, side="left")
-        seg_vals = run_vals[np.minimum(bi, n_runs - 1)].copy()
+        seg_vals = run_vals[np.minimum(bi, ends.size - 1)].copy()
         seg_valid = ((mi % 2 == 0) == bool(first))
         seg_vals[~seg_valid] = fill_bit
-        merged_vals, merged_ends = _merge_adjacent_runs(seg_vals, grid)
-        return "trle", struct.pack("<BB", code, 0) + _encode_trle_body(merged_vals, merged_ends)
+        body = _trle_body(*merge_runs(seg_vals, _lengths(grid)))
+        return "trle", _encode_header(code, None) + body
     vals, valid = decode_typed(name, buf, n)
     out = vals.copy()
     out[~valid] = fill[0]
@@ -401,23 +383,13 @@ def dropna_typed(name: str, payload, n: int) -> tuple[str, bytes, int]:
         return name, bytes(payload), n
     code = dtype_code(dtype)
     if name == "trle":
-        (n_runs,), off2 = _read_struct("<I", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off2)
-        off2 += 4 * n_runs
-        run_vals = np.frombuffer(buf, dtype=_BIT_VIEWS[dtype.itemsize], count=n_runs, offset=off2)
+        ends, run_vals = _read_trle(buf, off, dtype)
         bounds = np.concatenate(([0], ends.astype(np.int64)))
         prefix = _valid_prefix_from_runs(first, mask_ends, bounds)
         new_lens = np.diff(prefix)
         keep = new_lens > 0
-        kept_vals = run_vals[keep]
-        kept_ends = np.cumsum(new_lens[keep])
-        merged_vals, merged_ends = _merge_adjacent_runs(kept_vals, kept_ends)
-        new_n = int(prefix[-1])
-        return (
-            "trle",
-            struct.pack("<BB", code, 0) + _encode_trle_body(merged_vals, merged_ends),
-            new_n,
-        )
+        body = _trle_body(*merge_runs(run_vals[keep], new_lens[keep]))
+        return "trle", _encode_header(code, None) + body, int(prefix[-1])
     vals, valid = decode_typed(name, buf, n)
     out = np.ascontiguousarray(vals[valid])
     enc = {"tdict": encode_tdict, "traw": encode_traw}[name]
@@ -447,12 +419,8 @@ def shift_typed(name: str, payload, n: int, periods: int) -> tuple[str, bytes]:
     else:
         new_valid[: n + p] = old_valid[-p:]
     if name == "trle":
-        (n_runs,), off2 = _read_struct("<I", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off2).astype(np.int64)
-        off2 += 4 * n_runs
-        run_vals = np.frombuffer(
-            buf, dtype=_BIT_VIEWS[dtype.itemsize], count=n_runs, offset=off2
-        ).copy()
+        ends, run_vals = _read_trle(buf, off, dtype)
+        ends = ends.astype(np.int64)
         if p > 0:
             # leading null stretch forward-fills to 0-bits, then the old
             # runs shifted right and clipped at n
@@ -475,12 +443,9 @@ def shift_typed(name: str, payload, n: int, periods: int) -> tuple[str, bytes]:
                 tail_keep = new_ends > lead
                 new_ends = np.concatenate(([lead], new_ends[tail_keep]))
                 new_vals = np.concatenate((new_vals[:1] * 0, new_vals[tail_keep]))
-        new_vals, new_ends = _merge_adjacent_runs(new_vals, new_ends)
         mask = None if new_valid.all() else new_valid
-        return "trle", (
-            _encode_header(dtype_code(dtype), mask)
-            + _encode_trle_body(new_vals, new_ends)
-        )
+        body = _trle_body(*merge_runs(new_vals, _lengths(new_ends)))
+        return "trle", _encode_header(dtype_code(dtype), mask) + body
     vals, _ = decode_typed(name, buf, n)
     out = np.empty(n, dtype=vals.dtype)
     if p > 0:
@@ -516,28 +481,10 @@ def cast_typed(name: str, payload, n: int, to_dtype) -> tuple[str, bytes]:
     if to_dtype == dtype:
         return name, bytes(payload)
     if name == "trle":
-        (n_runs,), off = _read_struct("<I", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off)
-        off += 4 * n_runs
-        run_vals = np.frombuffer(
-            buf, dtype=_BIT_VIEWS[dtype.itemsize], count=n_runs, offset=off
-        ).view(dtype)
-        new_vals = np.ascontiguousarray(run_vals.astype(to_dtype))
-        nbv = _bit_view(new_vals)
-        if n_runs:
-            keep = np.concatenate(([True], nbv[1:] != nbv[:-1]))
-            starts = np.flatnonzero(keep)
-            merged_ends = np.append(ends[starts[1:] - 1], ends[-1]).astype("<u4")
-            merged_vals = nbv[keep]
-        else:
-            merged_ends = ends
-            merged_vals = nbv
-        return "trle", (
-            _encode_header(to_code, valid)
-            + struct.pack("<I", merged_ends.size)
-            + merged_ends.tobytes()
-            + merged_vals.tobytes()
-        )
+        ends, run_vals = _read_trle(buf, off, dtype)
+        new_vals = run_vals.view(dtype).astype(to_dtype)
+        body = _trle_body(*merge_runs(new_vals, _lengths(ends)))
+        return "trle", _encode_header(to_code, valid) + body
     vals, _ = decode_typed(name, buf, n)
     out = vals.astype(to_dtype)
     if name == "tdict":
@@ -562,11 +509,7 @@ def choose_typed(values: np.ndarray, valid: np.ndarray | None = None) -> tuple[s
     r = 1 + int(change)
     est_rle = header + 4 + r * (4 + w)
     # cardinality from run values (adjacent dupes add nothing)
-    if r == n:
-        run_vals = bv
-    else:
-        starts = np.concatenate(([0], np.flatnonzero(bv[1:] != bv[:-1]) + 1))
-        run_vals = bv[starts]
+    run_vals = bv if r == n else split_runs(bv)[0]
     k = int(np.unique(run_vals[:: max(1, run_vals.size // 4096)]).size)
     width = bitpack.bit_width(max(k - 1, 0)) if k > 1 else 0
     est_dict = header + 4 + k * w + 1 + bitpack.packed_nbytes(n, width)

@@ -19,19 +19,23 @@ view, so NaN outputs form runs exactly like NaN inputs do.
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Callable
 
 import numpy as np
 
+from rle_array_spark.codecs.rle import merge_runs, split_runs
 from rle_array_spark.codecs.typed import (
     _BIT_VIEWS,
     _decode_header,
     _encode_header,
-    _read_struct,
+    _lengths,
+    _read_tdict,
+    _read_trle,
+    _trle_body,
     decode_typed,
     dtype_code,
     encode_traw,
+    encode_trle,
 )
 
 TYPED_ZIP_OPS: dict[str, Callable[[np.ndarray, np.ndarray], np.ndarray]] = {
@@ -101,14 +105,9 @@ def _typed_run_form(name: str, payload, n: int):
     tdict/traw decode the stream and re-split on the bit view."""
     buf = memoryview(payload)
     dtype, valid, off = _decode_header(buf, n)
-    w = dtype.itemsize
-    bits = _BIT_VIEWS[w]
     if name == "trle":
-        (n_runs,), off = _read_struct("<I", buf, off)
-        ends = np.frombuffer(buf, dtype="<u4", count=n_runs, offset=off).astype(np.int64)
-        off += 4 * n_runs
-        run_vals = np.frombuffer(buf, dtype=bits, count=n_runs, offset=off).view(dtype)
-        return ends, run_vals, valid
+        ends, run_vals = _read_trle(buf, off, dtype)
+        return ends.astype(np.int64), run_vals.view(dtype), valid
     import warnings
 
     from rle_array_spark.codecs.core import PerformanceWarning
@@ -120,13 +119,8 @@ def _typed_run_form(name: str, payload, n: int):
         stacklevel=3,
     )
     vals, _ = decode_typed(name, buf, n)
-    bv = np.ascontiguousarray(vals).view(bits)
-    if bv.size == 0:
-        return np.zeros(0, np.int64), vals[:0], valid
-    change = np.flatnonzero(bv[1:] != bv[:-1]) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.append(change, bv.size).astype(np.int64)
-    return ends, vals[starts], valid
+    run_vals, run_lens = split_runs(np.ascontiguousarray(vals).view(_BIT_VIEWS[dtype.itemsize]))
+    return np.cumsum(run_lens), run_vals.view(dtype), valid
 
 
 def _emit_runs(
@@ -139,19 +133,10 @@ def _emit_runs(
     """Pack canonical typed runs as trle, falling back to expanded traw
     when the run form is larger (never exceeds raw + header)."""
     header = _encode_header(code, valid)
-    ends = np.cumsum(run_lens).astype("<u4")
-    bits = _BIT_VIEWS[run_vals.dtype.itemsize]
-    trle = (
-        header
-        + struct.pack("<I", ends.size)
-        + ends.tobytes()
-        + run_vals.view(bits).tobytes()
-    )
-    raw_size = len(header) + n * run_vals.dtype.itemsize
-    if len(trle) <= raw_size:
+    trle = header + _trle_body(run_vals, run_lens)
+    if len(trle) <= len(header) + n * run_vals.dtype.itemsize:
         return "trle", trle
-    full = np.repeat(run_vals, run_lens)
-    return "traw", header + full.view(bits).tobytes()
+    return "traw", header + np.repeat(run_vals, run_lens).tobytes()
 
 
 def zip_typed_blocks(
@@ -205,22 +190,14 @@ def zip_typed_blocks(
         out_vals = np.ascontiguousarray(post_fn(out_vals))
         if post_bool:
             out_vals = out_vals.astype(np.bool_)
-    out_vals = _canonicalize_nan(out_vals)
-    out_bits = out_vals.view(_BIT_VIEWS[out_vals.dtype.itemsize])
     # merge adjacent grid cells with equal output bit patterns
-    if out_bits.size > 1:
-        keep = np.concatenate(([True], out_bits[1:] != out_bits[:-1]))
-        if not keep.all():
-            starts = np.flatnonzero(keep)
-            out_vals = out_vals[starts]
-            union_ends = union_ends[np.append(starts[1:] - 1, union_ends.size - 1)]
+    out_vals, lens = merge_runs(_canonicalize_nan(out_vals), _lengths(union_ends))
     if valid_a is None:
         valid = valid_b
     elif valid_b is None:
         valid = valid_a
     else:
         valid = valid_a & valid_b
-    lens = np.diff(np.concatenate(([0], union_ends)))
     return _emit_runs(dtype_code(out_vals.dtype), valid, out_vals, lens, n)
 
 
@@ -257,15 +234,8 @@ def transform_typed(name: str, payload, n: int, fn, to_bool: bool = False):
     out_vals = np.ascontiguousarray(fn(vals))
     if to_bool:
         out_vals = out_vals.astype(np.bool_)
-    out_vals = _canonicalize_nan(out_vals)
-    out_bits = out_vals.view(_BIT_VIEWS[out_vals.dtype.itemsize])
-    if out_bits.size > 1:  # merge adjacent runs made equal by the map
-        keep = np.concatenate(([True], out_bits[1:] != out_bits[:-1]))
-        if not keep.all():
-            starts = np.flatnonzero(keep)
-            out_vals = out_vals[starts]
-            ends = ends[np.append(starts[1:] - 1, ends.size - 1)]
-    lens = np.diff(np.concatenate(([0], ends)))
+    # merge adjacent runs made equal by the map
+    out_vals, lens = merge_runs(_canonicalize_nan(out_vals), _lengths(ends))
     return _emit_runs(dtype_code(out_vals.dtype), valid, out_vals, lens, n)
 
 
@@ -294,8 +264,7 @@ def take_typed(
     dtype, valid, _ = _decode_header(buf, n)
     idx, fill_mask = normalize_take_indices(idx, n, allow_fill)
     if idx.size == 0:  # before the run form: empty take must be O(1)
-        header = _encode_header(dtype_code(dtype), None)
-        return "trle", header + struct.pack("<I", 0)
+        return "trle", encode_trle(np.zeros(0, dtype))
     if fill_mask.any() or bool(np.any(np.diff(idx) < 0)):
         from rle_array_spark.codecs.typed import encode_typed
 
@@ -322,18 +291,10 @@ def take_typed(
             new_valid = None
         return encode_typed(np.ascontiguousarray(vals), new_valid, "auto")
     ends, run_vals, _ = _typed_run_form(name, payload, n)
-    bits = _BIT_VIEWS[dtype.itemsize]
     ridx = np.searchsorted(ends, idx, side="right")
     starts = np.concatenate(([0], np.flatnonzero(ridx[1:] != ridx[:-1]) + 1))
     lens = np.diff(np.concatenate((starts, [idx.size])))
-    out_vals = np.ascontiguousarray(run_vals[ridx[starts]])
-    ob = out_vals.view(bits)
-    if ob.size > 1:
-        keep = np.concatenate(([True], ob[1:] != ob[:-1]))
-        if not keep.all():
-            s2 = np.flatnonzero(keep)
-            out_vals = out_vals[s2]
-            lens = np.add.reduceat(lens, s2)
+    out_vals, lens = merge_runs(np.ascontiguousarray(run_vals[ridx[starts]]), lens)
     new_valid = valid[idx] if valid is not None else None
     if new_valid is not None and new_valid.all():
         new_valid = None
@@ -346,11 +307,10 @@ def reverse_typed(name: str, payload, n: int) -> tuple[str, bytes]:
     buf = memoryview(payload)
     dtype, valid, _ = _decode_header(buf, n)
     ends, run_vals, _ = _typed_run_form(name, payload, n)
-    lens = np.diff(np.concatenate(([0], ends)))
-    out_vals = np.ascontiguousarray(run_vals[::-1])
-    out_lens = lens[::-1]
     new_valid = valid[::-1].copy() if valid is not None else None
-    return _emit_runs(dtype_code(dtype), new_valid, out_vals, out_lens, n)
+    return _emit_runs(
+        dtype_code(dtype), new_valid, np.ascontiguousarray(run_vals[::-1]), _lengths(ends)[::-1], n
+    )
 
 
 def mask_typed(
@@ -387,8 +347,7 @@ def mask_typed(
     buf_v = memoryview(payload_v)
     dt_v, valid_v, _ = _decode_header(buf_v, n)
     if n == 0:
-        header = _encode_header(dtype_code(dt_v), None)
-        return "trle", header + struct.pack("<I", 0), 0
+        return "trle", encode_trle(np.zeros(0, dt_v)), 0
     if (
         name_v == "trle"
         and name_m == "trle"
@@ -400,22 +359,13 @@ def mask_typed(
         union_ends = np.union1d(ends_v, ends_m)
         v_exp = vals_v[np.searchsorted(ends_v, union_ends, side="left")]
         m_exp = vals_m[np.searchsorted(ends_m, union_ends, side="left")]
-        seg_lens = np.diff(np.concatenate(([0], union_ends)))
         keep = m_exp.view(np.bool_)
-        out_vals = np.ascontiguousarray(v_exp[keep])
-        out_lens = seg_lens[keep]
+        out_lens = _lengths(union_ends)[keep]
         new_n = int(out_lens.sum())
         if new_n == 0:
-            header = _encode_header(dtype_code(dt_v), None)
-            return "trle", header + struct.pack("<I", 0), 0
+            return "trle", encode_trle(np.zeros(0, dt_v)), 0
         # merge newly-adjacent equal runs on the bit view
-        ob = out_vals.view(_BIT_VIEWS[dt_v.itemsize])
-        if ob.size > 1:
-            keep2 = np.concatenate(([True], ob[1:] != ob[:-1]))
-            if not keep2.all():
-                s2 = np.flatnonzero(keep2)
-                out_vals = out_vals[s2]
-                out_lens = np.add.reduceat(out_lens, s2)
+        out_vals, out_lens = merge_runs(np.ascontiguousarray(v_exp[keep]), out_lens)
         codec, payload = _emit_runs(dtype_code(dt_v), None, out_vals, out_lens, new_n)
         return codec, payload, new_n
     # slot-level mask extraction is the contract here (bool, 1 B/slot) —
@@ -460,10 +410,9 @@ def filter_typed(
         raise ValueError(f"filter op must be a comparison, got {op!r}")
     fn = TYPED_ZIP_OPS[op]
     buf = memoryview(payload)
-    dtype, valid, _ = _decode_header(buf, n)
+    dtype, valid, off = _decode_header(buf, n)
     if n == 0:
-        header = _encode_header(dtype_code(dtype), None)
-        return "trle", header + struct.pack("<I", 0), 0
+        return "trle", encode_trle(np.zeros(0, dtype)), 0
     from rle_array_spark.codecs.typed import encode_typed
 
     if pre_fn is None:
@@ -479,21 +428,13 @@ def filter_typed(
     if name == "trle":
         ends, run_vals, _ = _typed_run_form(name, payload, n)
         keep_runs = np.asarray(pred(run_vals), dtype=bool)
-        lens = np.diff(np.concatenate(([0], ends)))
+        lens = _lengths(ends)
         if valid is None:
-            out_vals = np.ascontiguousarray(run_vals[keep_runs])
             out_lens = lens[keep_runs]
             new_n = int(out_lens.sum())
             if new_n == 0:
-                header = _encode_header(dtype_code(dtype), None)
-                return "trle", header + struct.pack("<I", 0), 0
-            ob = out_vals.view(_BIT_VIEWS[dtype.itemsize])
-            if ob.size > 1:
-                k2 = np.concatenate(([True], ob[1:] != ob[:-1]))
-                if not k2.all():
-                    s2 = np.flatnonzero(k2)
-                    out_vals = out_vals[s2]
-                    out_lens = np.add.reduceat(out_lens, s2)
+                return "trle", encode_trle(np.zeros(0, dtype)), 0
+            out_vals, out_lens = merge_runs(np.ascontiguousarray(run_vals[keep_runs]), out_lens)
             codec, pl = _emit_runs(
                 dtype_code(dtype), None, out_vals, out_lens, new_n
             )
@@ -503,27 +444,15 @@ def filter_typed(
         codec, pl = take_typed(name, payload, n, idx)
         return codec, pl, int(idx.size)
     if name == "tdict":
-        w = dtype.itemsize
-        bits = _BIT_VIEWS[w]
-        (k,), off = _read_struct("<I", buf, _decode_header(buf, n)[2])
-        table = np.frombuffer(buf, dtype=bits, count=k, offset=off).view(dtype)
-        off += k * w
-        (width,), off = _read_struct("<B", buf, off)
-        from rle_array_spark.codecs import bitpack as _bp
-
-        codes = (
-            _bp.unpack_bits(buf[off:], n, width)
-            if width
-            else np.zeros(n, dtype=np.int64)
-        )
+        table, codes = _read_tdict(buf, off, dtype, n)
+        table = table.view(dtype)
         keep_code = np.asarray(pred(table), dtype=bool)
         keep_slots = keep_code[codes]
         if valid is not None:
             keep_slots = keep_slots & valid
         kept_codes = codes[keep_slots]
         if kept_codes.size == 0:
-            header = _encode_header(dtype_code(dtype), None)
-            return "trle", header + struct.pack("<I", 0), 0
+            return "trle", encode_trle(np.zeros(0, dtype)), 0
         vals = np.ascontiguousarray(table[kept_codes])
         new_valid = valid[keep_slots] if valid is not None else None
         if new_valid is not None and new_valid.all():
@@ -536,8 +465,7 @@ def filter_typed(
         keep_slots = keep_slots & valid
     kept = np.ascontiguousarray(vals[keep_slots])
     if kept.size == 0:
-        header = _encode_header(dtype_code(dtype), None)
-        return "trle", header + struct.pack("<I", 0), 0
+        return "trle", encode_trle(np.zeros(0, dtype)), 0
     new_valid = valid[keep_slots] if valid is not None else None
     if new_valid is not None and new_valid.all():
         new_valid = None
@@ -566,10 +494,9 @@ def value_counts_typed(
         return np.zeros(0, dtype=dtype), np.zeros(0, np.int64)
     if name == "trle" and valid is None:
         ends, run_vals, _ = _typed_run_form(name, payload, n)
-        lens = np.diff(np.concatenate(([0], ends)))
         bv = np.ascontiguousarray(run_vals).view(bits)
         uniq, inv = np.unique(bv, return_inverse=True)
-        counts = np.bincount(inv, weights=lens.astype(np.float64)).astype(np.int64)
+        counts = np.bincount(inv, weights=_lengths(ends).astype(np.float64)).astype(np.int64)
         return uniq.view(dtype), counts
     vals, _ = decode_typed(name, buf, n)
     bv = np.ascontiguousarray(vals).view(bits)

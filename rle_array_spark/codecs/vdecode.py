@@ -33,6 +33,10 @@ import numpy as np
 
 from rle_array_spark.codecs import CODECS
 from rle_array_spark.codecs.bitpack import packed_nbytes
+from rle_array_spark.codecs.dictionary import HEADER as _DICT_HDR
+from rle_array_spark.codecs.rle import HEADER as _RLE_HDR
+from rle_array_spark.codecs.simple import BITPACK_HEADER as _BP_HDR
+from rle_array_spark.codecs.simple import FOR_HEADER as _FOR_HDR
 
 __all__ = ["decode_rows_vectorized"]
 
@@ -227,31 +231,22 @@ def _decode_raw(buf, starts, lens, ns, out, out_starts):
     out[_segment_index(out_starts, ns)] = vals
 
 
-_BP_HDR = np.dtype([("width", "<u1")])
-
-
 def _decode_bitpack(buf, starts, lens, ns, out, out_starts):
     widths = _headers(buf, starts, _BP_HDR)["width"].astype(np.int64)
     u = np.zeros(int(ns.sum()), dtype=np.uint64)
     ustarts = np.concatenate(([0], np.cumsum(ns)))[:-1]
-    _unpack_width_groups(buf, starts + 1, ns, widths, u, ustarts)
+    _unpack_width_groups(buf, starts + _BP_HDR.itemsize, ns, widths, u, ustarts)
     out[_segment_index(out_starts, ns)] = u.astype(np.int32)
-
-
-_FOR_HDR = np.dtype([("base", "<i8"), ("width", "<u1")])
 
 
 def _decode_for(buf, starts, lens, ns, out, out_starts):
     hdr = _headers(buf, starts, _FOR_HDR)
     u = np.zeros(int(ns.sum()), dtype=np.uint64)
     ustarts = np.concatenate(([0], np.cumsum(ns)))[:-1]
-    _unpack_width_groups(buf, starts + 9, ns, hdr["width"].astype(np.int64), u, ustarts)
+    widths = hdr["width"].astype(np.int64)
+    _unpack_width_groups(buf, starts + _FOR_HDR.itemsize, ns, widths, u, ustarts)
     vals = (u.astype(np.int64) + np.repeat(hdr["base"], ns)).astype(np.int32)
     out[_segment_index(out_starts, ns)] = vals
-
-
-_RLE_HDR = np.dtype([("n_runs", "<u4"), ("vbase", "<i8"), ("vwidth", "<u1"), ("lwidth", "<u1")])
-_RLE_HDR_SIZE = 14
 
 
 def _decode_rle(buf, starts, lens, ns, out, out_starts):
@@ -266,11 +261,11 @@ def _decode_rle(buf, starts, lens, ns, out, out_starts):
         [packed_nbytes(int(r), int(w)) for r, w in zip(n_runs, vwidths)], dtype=np.int64
     )
     rv = np.zeros(total_runs, dtype=np.uint64)
-    _unpack_width_groups(buf, starts + _RLE_HDR_SIZE, n_runs, vwidths, rv, run_starts)
+    _unpack_width_groups(buf, starts + _RLE_HDR.itemsize, n_runs, vwidths, rv, run_starts)
     run_values = (rv.astype(np.int64) + np.repeat(hdr["vbase"], n_runs)).astype(np.int32)
 
     rl = np.zeros(total_runs, dtype=np.uint64)
-    _unpack_width_groups(buf, starts + _RLE_HDR_SIZE + vbytes, n_runs, lwidths, rl, run_starts)
+    _unpack_width_groups(buf, starts + _RLE_HDR.itemsize + vbytes, n_runs, lwidths, rl, run_starts)
     run_lengths = rl.astype(np.int64) + 1
 
     decoded = np.repeat(run_values, run_lengths)
@@ -285,10 +280,6 @@ def _decode_rle(buf, starts, lens, ns, out, out_starts):
     out[_segment_index(out_starts, ns)] = decoded
 
 
-_DICT_HDR = np.dtype([("card", "<u4"), ("dbase", "<i8"), ("dwidth", "<u1"), ("cwidth", "<u1")])
-_DICT_HDR_SIZE = 14
-
-
 def _decode_dict(buf, starts, lens, ns, out, out_starts):
     hdr = _headers(buf, starts, _DICT_HDR)
     card = hdr["card"].astype(np.int64)
@@ -301,12 +292,12 @@ def _decode_dict(buf, starts, lens, ns, out, out_starts):
         [packed_nbytes(int(c), int(w)) for c, w in zip(card, dwidths)], dtype=np.int64
     )
     tu = np.zeros(total_card, dtype=np.uint64)
-    _unpack_width_groups(buf, starts + _DICT_HDR_SIZE, card, dwidths, tu, tstarts)
+    _unpack_width_groups(buf, starts + _DICT_HDR.itemsize, card, dwidths, tu, tstarts)
     tables = (tu.astype(np.int64) + np.repeat(hdr["dbase"], card)).astype(np.int32)
 
     cu = np.zeros(int(ns.sum()), dtype=np.uint64)
     custarts = np.concatenate(([0], np.cumsum(ns)))[:-1]
-    _unpack_width_groups(buf, starts + _DICT_HDR_SIZE + tbytes, ns, cwidths, cu, custarts)
+    _unpack_width_groups(buf, starts + _DICT_HDR.itemsize + tbytes, ns, cwidths, cu, custarts)
     codes = cu.astype(np.int64) + np.repeat(tstarts, ns)
 
     out[_segment_index(out_starts, ns)] = tables[codes]

@@ -18,17 +18,8 @@ from collections.abc import Callable
 import numpy as np
 
 from rle_array_spark.codecs import CODECS
-from rle_array_spark.codecs.reduce import _rle_parts
-from rle_array_spark.codecs.transform import _checked_int32, _repack_rle
-
-
-def _merge_equal_runs(values: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    if values.size > 1:
-        keep = np.concatenate(([True], values[1:] != values[:-1]))
-        if not keep.all():
-            starts = np.flatnonzero(keep)
-            return values[starts], np.add.reduceat(lengths, starts)
-    return values, lengths
+from rle_array_spark.codecs.rle import decode_runs, encode_runs, merge_runs
+from rle_array_spark.codecs.transform import _checked_int32
 
 
 def zip_blocks(
@@ -44,8 +35,8 @@ def zip_blocks(
     if n == 0:
         return "raw", CODECS["raw"].encode(np.zeros(0, np.int32))
     if codec_a == "rle" and codec_b == "rle":
-        vals_a, lens_a = _rle_parts(payload_a)
-        vals_b, lens_b = _rle_parts(payload_b)
+        vals_a, lens_a = decode_runs(payload_a)
+        vals_b, lens_b = decode_runs(payload_b)
         ends_a = np.cumsum(lens_a)
         ends_b = np.cumsum(lens_b)
         union_ends = np.union1d(ends_a, ends_b)  # both end with n
@@ -53,8 +44,8 @@ def zip_blocks(
         b_exp = vals_b[np.searchsorted(ends_b, union_ends, side="left")]
         out_vals = _checked_int32(op(a_exp.astype(np.int64), b_exp.astype(np.int64)))
         out_lens = np.diff(np.concatenate(([0], union_ends)))
-        out_vals, out_lens = _merge_equal_runs(out_vals, out_lens)
-        return "rle", _repack_rle(out_vals, out_lens)
+        out_vals, out_lens = merge_runs(out_vals, out_lens)
+        return "rle", encode_runs(out_vals, out_lens)
     if codec_a == "dict" and codec_b == "dict":
         # CODE-domain zip: the op runs over the ≤ k_a×k_b PAIR TABLE that
         # actually occurs; values are never gathered and the chooser's
@@ -121,8 +112,8 @@ def mask_blocks(
     if n == 0:
         return _empty_block()
     if codec_m == "rle" and codec_v == "rle":
-        vals_m, lens_m = _rle_parts(payload_m)
-        vals_v, lens_v = _rle_parts(payload_v)
+        vals_m, lens_m = decode_runs(payload_m)
+        vals_v, lens_v = decode_runs(payload_v)
         ends_v = np.cumsum(lens_v)
         ends_m = np.cumsum(lens_m)
         union_ends = np.union1d(ends_v, ends_m)
@@ -130,14 +121,14 @@ def mask_blocks(
         m_exp = vals_m[np.searchsorted(ends_m, union_ends, side="left")]
         seg_lens = np.diff(np.concatenate(([0], union_ends)))
         keep = m_exp != 0
-        out_vals, out_lens = _merge_equal_runs(v_exp[keep], seg_lens[keep])
+        out_vals, out_lens = merge_runs(v_exp[keep], seg_lens[keep])
         new_n = int(out_lens.sum())
         if new_n == 0:
             return _empty_block()
-        return "rle", _repack_rle(out_vals, out_lens), new_n
+        return "rle", encode_runs(out_vals, out_lens), new_n
     if codec_v in ("rle", "dict"):
         if codec_m == "rle":
-            vals_m, lens_m = _rle_parts(payload_m)
+            vals_m, lens_m = decode_runs(payload_m)
             mask_bool = np.repeat(vals_m != 0, lens_m)
         else:
             mask_bool = CODECS[codec_m].decode(payload_m, n) != 0
@@ -161,7 +152,7 @@ def mask_blocks(
         from rle_array_spark.codecs.reduce import take_runs
 
         rv, rl = take_runs("rle", payload_v, n, idx)
-        payload = _repack_rle(rv, rl)
+        payload = encode_runs(rv, rl)
         if len(payload) <= 4 * idx.size + 1:  # never worse than raw
             return "rle", payload, int(idx.size)
         from rle_array_spark.chooser import choose_codec
@@ -179,7 +170,7 @@ def mask_blocks(
     )
     v = CODECS[codec_v].decode(payload_v, n)
     if codec_m == "rle":
-        vals_m, lens_m = _rle_parts(payload_m)
+        vals_m, lens_m = decode_runs(payload_m)
         m = np.repeat(vals_m, lens_m)
     else:
         m = CODECS[codec_m].decode(payload_m, n)
@@ -215,13 +206,13 @@ def filter_block(
     if n == 0:
         return _empty_block()
     if codec == "rle":
-        vals, lens = _rle_parts(payload)
+        vals, lens = decode_runs(payload)
         keep = pred(vals.astype(np.int64)) != 0
-        out_vals, out_lens = _merge_equal_runs(vals[keep], lens[keep])
+        out_vals, out_lens = merge_runs(vals[keep], lens[keep])
         new_n = int(out_lens.sum())
         if new_n == 0:
             return _empty_block()
-        return "rle", _repack_rle(out_vals, out_lens), new_n
+        return "rle", encode_runs(out_vals, out_lens), new_n
     if codec == "dict":
         dc = CODECS["dict"]
         table, codes = dc.parts(payload, n)

@@ -10,6 +10,8 @@ AQE for free (SURVEY.md §4).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -19,7 +21,6 @@ from pyspark.sql import functions as F
 from rle_array_spark.blocks import (
     TOKENS,
     carried,
-    decode_df as _decode_cols,
     emit,
     pair_blocks,
     payload_cols,
@@ -51,6 +52,17 @@ STATS_SCHEMA = (
 )
 
 
+def _default_driver_memory() -> str:
+    """min(16g, 40% of physical memory): in local mode the driver heap is
+    the whole engine's, and a heap sized past the machine lets the JVM grow
+    until the host's out-of-memory killer stops it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, int(phys * 0.4) >> 20)}m"
+
+
 def session(
     app: str = "rle-array-spark",
     cores: int | str = "*",
@@ -58,7 +70,7 @@ def session(
     arrow_batch_rows: int = 1024,
     max_partition_bytes: int = 16 * 1024 * 1024,
     reader_batch_rows: int = 256,
-    driver_memory: str = "16g",
+    driver_memory: str = _default_driver_memory(),
 ) -> SparkSession:
     """Local session with the engine's required configs. On a real cluster
     the same configs ride spark-submit --conf; nothing here is local-only."""
@@ -83,8 +95,9 @@ def session(
         # rows anyway) and measured 1.08-1.13x FASTER on the 241 M-token
         # encode A/B (byte-identical output; BASELINE.md round 5).
         .config("spark.sql.parquet.columnarReaderBatchSize", str(reader_batch_rows))
-        # Local mode: the driver heap IS the executor heap. 16g across 32
-        # concurrent tasks is 0.5 GB/task — enough for the engine's own
+        # Local mode: the driver heap IS the executor heap (default: 16g or
+        # 40% of the machine, whichever is less). 16g across 32 concurrent
+        # tasks is 0.5 GB/task — enough for the engine's own
         # bounded blocks, but a RAW corpus row of T tokens needs ~3×4T bytes
         # per scan task transiently (vector growth + Arrow transfer), so
         # giant-sequence ingest must size the heap like a real cluster does:
@@ -321,20 +334,49 @@ def _row_stats(
     )
 
 
+def _run_scan(flat: np.ndarray, offsets: np.ndarray):
+    """One batch-level run scan over a column's flat values + row offsets →
+    (run_pos, run_off, row_sum, row_min, row_max): every run's start in
+    ``flat`` (a row start always starts a run), the index in run_pos of
+    each row's first run (n_rows + 1 entries), and per-row sum/min/max (0
+    for an empty row). Only the bool change mask is full-width: full-width
+    cumsums (8 B/token) measured SECONDS of page-fault churn per large
+    batch on memory-starved hosts — reduceat/searchsorted give the same
+    per-row figures with KB-scale outputs."""
+    n_rows = offsets.size - 1
+    row_sum = np.zeros(n_rows, dtype=np.int64)
+    row_min = np.zeros(n_rows, dtype=np.int32)
+    row_max = np.zeros(n_rows, dtype=np.int32)
+    if not flat.size:
+        return np.zeros(0, np.int64), np.zeros(n_rows + 1, np.int64), row_sum, row_min, row_max
+    starts = offsets[:-1]
+    change = np.empty(flat.size, dtype=bool)
+    change[0] = True
+    np.not_equal(flat[1:], flat[:-1], out=change[1:])
+    change[starts[starts < flat.size]] = True
+    run_pos = np.flatnonzero(change)
+    # reduceat only at NON-EMPTY row starts: valid starts are strictly
+    # increasing, so each segment spans exactly one row (the last valid
+    # segment correctly extends to flat.size). Reducing at raw `starts`
+    # would clamp a trailing empty row's boundary into the previous row's
+    # segment and truncate its final element.
+    valid = offsets[1:] > starts
+    vs = starts[valid].astype(np.int64)
+    row_sum[valid] = np.add.reduceat(flat, vs, dtype=np.int64)
+    row_min[valid] = np.minimum.reduceat(flat, vs)
+    row_max[valid] = np.maximum.reduceat(flat, vs)
+    return run_pos, np.searchsorted(run_pos, offsets), row_sum, row_min, row_max
+
+
 def _encode_column(
     flat: np.ndarray, offsets: np.ndarray, codec: str, threshold: float
 ) -> dict:
     """Encode one logical column (flat values + row offsets) → per-row
     codec names, payloads and exact metadata arrays.
 
-    Batch-level vectorization: change mask, run-start positions, per-row
-    sums and min/max over the flat values buffer — one pass for the whole
-    batch (not per row). The chooser then receives fully-precomputed
-    BlockStats so compute_stats never re-derives the change mask per row.
-    All intermediates are O(n_rows + n_runs) except the bool mask itself:
-    full-width cumsums (8 B/token) measured SECONDS of page-fault churn
-    per large batch on memory-starved hosts — reduceat/searchsorted give
-    the same per-row figures with KB-scale outputs."""
+    Batch-level vectorization: one :func:`_run_scan` for the whole batch
+    (not per row). The chooser then receives fully-precomputed BlockStats
+    so compute_stats never re-derives the change mask per row."""
     n_rows = offsets.size - 1
     codecs_out: list[str] = []
     payloads: list[bytes] = []
@@ -344,31 +386,7 @@ def _encode_column(
     enc_bytes = np.empty(n_rows, dtype=np.int64)
     ref_bytes = np.empty(n_rows, dtype=np.int64)
 
-    starts = offsets[:-1]
-    valid = offsets[1:] > starts
-    tok_sum_row = np.zeros(n_rows, dtype=np.int64)
-    tok_min = np.zeros(n_rows, dtype=np.int32)
-    tok_max = np.zeros(n_rows, dtype=np.int32)
-    if flat.size:
-        change = np.empty(flat.size, dtype=bool)
-        change[0] = True
-        np.not_equal(flat[1:], flat[:-1], out=change[1:])
-        change[starts[starts < flat.size]] = True
-        run_pos = np.flatnonzero(change)
-        # run_off[i] = index into run_pos of row i's first run
-        run_off = np.searchsorted(run_pos, offsets)
-        # reduceat only at NON-EMPTY row starts: valid starts are strictly
-        # increasing, so each segment spans exactly one row (the last valid
-        # segment correctly extends to flat.size). Reducing at raw `starts`
-        # would clamp a trailing empty row's boundary into the previous
-        # row's segment and truncate its final element.
-        vs = starts[valid].astype(np.int64)
-        tok_sum_row[valid] = np.add.reduceat(flat, vs, dtype=np.int64)
-        tok_min[valid] = np.minimum.reduceat(flat, vs)
-        tok_max[valid] = np.maximum.reduceat(flat, vs)
-    else:
-        run_pos = np.zeros(0, dtype=np.int64)
-        run_off = np.zeros(n_rows + 1, dtype=np.int64)
+    run_pos, run_off, tok_sum_row, tok_min, tok_max = _run_scan(flat, offsets)
 
     if codec == "auto":
         # Batch chooser: NGRAM trials across the whole batch fuse into one
@@ -713,8 +731,7 @@ def reverse_blocks(blocks: DataFrame) -> DataFrame:
     ``decode_df(reassemble_chunks=True)`` instead."""
 
     def kernel(batches):
-        from rle_array_spark.codecs.reduce import _rle_parts
-        from rle_array_spark.codecs.rle import encode_runs
+        from rle_array_spark.codecs.rle import decode_runs, encode_runs
 
         for batch in batches:
             if not batch.num_rows:
@@ -734,7 +751,7 @@ def reverse_blocks(blocks: DataFrame) -> DataFrame:
                 payload = memoryview(payload_col[i].as_buffer())
                 n = int(n_col[i])
                 if codec == "rle":
-                    rv, rl = _rle_parts(payload)
+                    rv, rl = decode_runs(payload)
                     new_payloads.append(encode_runs(rv[::-1], rl[::-1]))
                 else:  # same codec back: size characteristics preserved
                     vals = CODECS[codec].decode(payload, n)[::-1]
@@ -751,13 +768,6 @@ def reverse_blocks(blocks: DataFrame) -> DataFrame:
             )
 
     return blocks.mapInArrow(kernel, BLOCK_SCHEMA)
-
-
-def _runs_core(rv: np.ndarray, rl: np.ndarray) -> tuple[int, int, int, int]:
-    """(n_runs, sum, min, max) of a block given as runs."""
-    if not rv.size:
-        return 0, 0, 0, 0
-    return rv.size, int(np.dot(rv.astype(np.int64), rl)), int(rv.min()), int(rv.max())
 
 
 def take_positions(stride: int | None, offset: int, indices) -> np.ndarray | None:
@@ -804,7 +814,7 @@ def take_blocks(
     idx_global = take_positions(stride, offset, indices)
 
     def kernel(batches):
-        from rle_array_spark.codecs.reduce import take_runs
+        from rle_array_spark.codecs.reduce import runs_stats, take_runs
         from rle_array_spark.codecs.rle import encode_runs
 
         for batch in batches:
@@ -829,7 +839,7 @@ def take_blocks(
                     codecs_col[i], memoryview(payload_col[i].as_buffer()), n, idx
                 )
                 p = encode_runs(rv, rl)
-                core = _runs_core(rv, rl)
+                core = runs_stats(rv, rl)
                 for col, v in zip(cols.values(), (
                     "rle", p, idx.size, *TOKENS.stats("rle", p, idx.size, core), taken_before
                 )):
@@ -983,17 +993,15 @@ def decode_df(blocks: DataFrame, reassemble_chunks: bool = False) -> DataFrame:
 
 
 def _stats_batch(batch: pa.RecordBatch, flat: np.ndarray, offsets: np.ndarray) -> pa.RecordBatch:
-    """Per-row scalar stats over a decoded/raw token batch. Batch-level
-    change mask + reduceat, like _encode_batch: only the bool mask and one
-    int64 weighted-product buffer are full-width; everything else is
-    O(n_rows + n_runs). Cardinality remains a per-row unique over run
-    values (the only inherently per-row sort)."""
+    """Per-row scalar stats over a decoded/raw token batch: the
+    :func:`_run_scan` of _encode_column, plus one int64 weighted-product
+    buffer (the only other full-width temporary). Cardinality remains a
+    per-row unique over run values (the only inherently per-row sort)."""
     n = batch.num_rows
-    tok_sum = np.zeros(n, dtype=np.int64)
-    tok_min = np.zeros(n, dtype=np.int32)
-    tok_max = np.zeros(n, dtype=np.int32)
+    run_pos, run_off, tok_sum, tok_min, tok_max = _run_scan(flat, offsets)
     tok_wsum = np.zeros(n, dtype=np.int64)
-    n_runs = np.zeros(n, dtype=np.int32)
+    # an empty row's first and next run offsets coincide: 0 runs
+    n_runs = np.diff(run_off).astype(np.int32)
     card = np.zeros(n, dtype=np.int32)
     if flat.size:
         from rle_array_spark.codecs.core import (
@@ -1003,30 +1011,14 @@ def _stats_batch(batch: pa.RecordBatch, flat: np.ndarray, offsets: np.ndarray) -
 
         starts = offsets[:-1]
         valid = offsets[1:] > starts
-        change = np.empty(flat.size, dtype=bool)
-        change[0] = True
-        np.not_equal(flat[1:], flat[:-1], out=change[1:])
-        change[starts[starts < flat.size]] = True
-        run_pos = np.flatnonzero(change)
-        run_off = np.searchsorted(run_pos, offsets)
-        # reduceat only at NON-EMPTY row starts (strictly increasing, so one
-        # segment per row; last valid segment extends to flat.size). Raw
-        # `starts` would fold a trailing empty row's boundary into the
-        # previous row and truncate its final element.
         vs = starts[valid].astype(np.int64)
-        sums_v = np.add.reduceat(flat, vs, dtype=np.int64)
-        tok_sum[valid] = sums_v
-        tok_min[valid] = np.minimum.reduceat(flat, vs)
-        tok_max[valid] = np.maximum.reduceat(flat, vs)
         # weighted sum Σ v_k·(k_local+1): computed with GLOBAL positions and
         # corrected by lo·Σv per row — avoids materializing per-row-restarting
         # position indices (two full-width temporaries instead of three)
         wsum_global = np.add.reduceat(
             flat * np.arange(1, flat.size + 1, dtype=np.int64), vs, dtype=np.int64
         )
-        tok_wsum[valid] = wsum_global - vs * sums_v
-        n_runs_all = (run_off[1:] - run_off[:-1]).astype(np.int32)
-        n_runs[valid] = n_runs_all[valid]
+        tok_wsum[valid] = wsum_global - vs * tok_sum[valid]
         for i in np.flatnonzero(valid):
             rv = flat[run_pos[run_off[i] : run_off[i + 1]]]
             if rv.size <= EXACT_CARDINALITY_MAX_RUNS:
@@ -1448,6 +1440,7 @@ def sort_blocks_df(blocks: DataFrame, descending: bool = False) -> DataFrame:
     ).join(src, "doc_id")
 
     def kernel(batches):
+        from rle_array_spark.codecs.reduce import runs_stats
         from rle_array_spark.codecs.rle import encode_runs
 
         for batch in batches:
@@ -1469,7 +1462,7 @@ def sort_blocks_df(blocks: DataFrame, descending: bool = False) -> DataFrame:
                 p = encode_runs(vals, counts)
                 n = int(counts.sum())
                 for col, v in zip(cols.values(), (
-                    "rle", p, n, *TOKENS.stats("rle", p, n, _runs_core(vals, counts))
+                    "rle", p, n, *TOKENS.stats("rle", p, n, runs_stats(vals, counts))
                 )):
                     col.append(v)
             # one unchunked block per doc
@@ -1593,8 +1586,9 @@ def verify_roundtrip(df: DataFrame, blocks: DataFrame, reassemble_chunks: bool =
 # ---------------------------------------------------------------------------
 
 def frame_schema(token_cols: list[str]) -> str:
-    return ", ".join(["doc_id string, source string"]
-                     + [TOKENS.ddl(TOKENS.wide, prefix=f"{c}__") for c in token_cols])
+    from rle_array_spark.tableframe import wide_ddl
+
+    return wide_ddl({c: "int" for c in token_cols})
 
 
 def encode_frame_df(
@@ -1607,33 +1601,22 @@ def encode_frame_df(
     wide blocks row per input row — the frame-level analog of the
     reference's ``auto_convert_to_rle`` (each column gets its own per-row
     codec choice). Columns of one row stay together, so cross-column
-    compressed ops (zip_frame_df) need no join and no shuffle.
+    compressed ops (zip_frame_df) need no join and no shuffle. This is
+    ``tableframe.encode_table_df`` over int columns.
 
     Giant-sequence chunking is a single-column concern (pack_tokens_df) and
     is not applied here: frame rows are assumed bounded (chunk upstream or
     use the single-column path for giant-sequence corpora)."""
+    from rle_array_spark.tableframe import _encode_wide
 
-    def kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            arrays = [batch.column("doc_id"), batch.column("source")]
-            names = ["doc_id", "source"]
-            for cname in token_cols:
-                c = _encode_column(*_list_to_numpy(batch.column(cname)), codec, threshold)
-                col_arrays, col_names = wide_arrays(TOKENS, c, cname)
-                arrays += col_arrays
-                names += col_names
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.select("doc_id", "source", *token_cols).mapInArrow(
-        kernel, frame_schema(token_cols)
-    )
+    return _encode_wide(df, token_cols, codec, threshold)
 
 
 def decode_frame_df(blocks: DataFrame, token_cols: list[str]) -> DataFrame:
     """Wide blocks → (doc_id, source, <col> array<int> per column)."""
-    return _decode_cols(blocks, {c: (TOKENS, "int", f"{c}__") for c in token_cols})
+    from rle_array_spark.tableframe import decode_table_df
+
+    return decode_table_df(blocks, {c: "int" for c in token_cols})
 
 
 def _frame_kernel(blocks: DataFrame, out_names: list[str], columns_fn):

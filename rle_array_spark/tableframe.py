@@ -11,9 +11,10 @@ extended across the engine's three codec families:
   (trle/tdict/traw, bit-pattern runs, in-band null RLE)
 - ``array<string>``     → string codecs (srle/sdict/sraw)
 
-Columns of one row stay together (no join, no shuffle — same posture as
-engine.encode_frame_df), each column carries its own per-row codec choice
-and zone-map metadata, and decode restores every column bit-identically.
+Columns of one row stay together (no join, no shuffle; engine.encode_frame_df
+is this encode over int columns only), each column carries its own per-row
+codec choice and zone-map metadata, and decode restores every column
+bit-identically.
 """
 
 from __future__ import annotations
@@ -29,22 +30,23 @@ from rle_array_spark.strings import encode_string_column
 from rle_array_spark.typed import encode_typed_rows
 
 
-def _int_column(col, codec: str) -> dict:
+def _int_column(col, codec: str, threshold: float) -> dict:
     # family-foreign codec names fall back to auto, like the other kinds
     icodec = codec if codec in CODECS or codec == "auto" else "auto"
-    return _encode_column(*_list_to_numpy(col), icodec, DEFAULT_THRESHOLD)
+    return _encode_column(*_list_to_numpy(col), icodec, threshold)
 
 
-def _typed_column(col, codec: str) -> dict:
+def _typed_column(col, codec: str, threshold: float) -> dict:
     return encode_typed_rows(col, codec if codec in ("trle", "tdict", "traw") else "auto",
                              zone_maps=False)
 
 
-def _string_column(col, codec: str) -> dict:
+def _string_column(col, codec: str, threshold: float) -> dict:
     return encode_string_column(col, codec if codec in ("srle", "sdict", "sraw", "sfsst") else "auto")
 
 
-# kind → the family's column encoder: an Arrow list column → {field: values}
+# kind → the family's column encoder: an Arrow list column → {field: values};
+# ``threshold`` is the token chooser's (the other families ignore it)
 _ENCODERS = {"int": _int_column, "typed": _typed_column, "string": _string_column}
 
 
@@ -59,19 +61,28 @@ def _spark_kind(spark_type: str) -> str:
     return _kind(inner[6:-1])
 
 
+def wide_ddl(kinds: dict[str, str]) -> str:
+    """The wide-row schema DDL for columns of the given kinds."""
+    parts = ["doc_id string", "source string"]
+    parts += [FAMILIES[k].ddl(FAMILIES[k].wide, prefix=f"{c}__") for c, k in kinds.items()]
+    return ", ".join(parts)
+
+
 def table_schema(df: DataFrame, cols: list[str]) -> tuple[str, dict[str, str]]:
     """(wide output schema DDL, column → kind map) from the input schema."""
     types = dict(df.dtypes)
     kinds = {c: _spark_kind(types[c]) for c in cols}
-    parts = ["doc_id string", "source string"]
-    parts += [FAMILIES[kinds[c]].ddl(FAMILIES[kinds[c]].wide, prefix=f"{c}__") for c in cols]
-    return ", ".join(parts), kinds
+    return wide_ddl(kinds), kinds
 
 
 def encode_table_df(df: DataFrame, cols: list[str], codec: str = "auto") -> DataFrame:
     """(doc_id, source, *array columns) → one wide encoded row per input
     row, each column under its dtype's codec family. Scan-parallel,
     shuffle-free."""
+    return _encode_wide(df, cols, codec, DEFAULT_THRESHOLD)
+
+
+def _encode_wide(df: DataFrame, cols: list[str], codec: str, threshold: float) -> DataFrame:
     schema, kinds = table_schema(df, cols)
 
     def kernel(batches):
@@ -82,7 +93,7 @@ def encode_table_df(df: DataFrame, cols: list[str], codec: str = "auto") -> Data
             names = ["doc_id", "source"]
             for cname in cols:
                 kind = kinds[cname]
-                fields = _ENCODERS[kind](batch.column(cname), codec)
+                fields = _ENCODERS[kind](batch.column(cname), codec, threshold)
                 col_arrays, col_names = wide_arrays(FAMILIES[kind], fields, cname)
                 arrays += col_arrays
                 names += col_names

@@ -44,7 +44,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import TaskContext
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rle_array_spark.blocks import TOKENS
@@ -72,20 +72,22 @@ def _params_hash(params_key: str) -> int:
 
 def _row_hash(doc_id: str, chunk_idx: int, n: int, params_key: str) -> int:
     h = hashlib.sha256(f"{doc_id}:{chunk_idx}:{n}:{params_key}".encode()).digest()[:16]
-    return int.from_bytes(h, "little")
+    return int.from_bytes(h, "big")
 
 
 def _fingerprint(
     doc_ids: list[str], n_toks: list[int], chunk_idxs: list[int], params_key: str
 ) -> str:
     """Order-insensitive fingerprint of a partition's input rows + encode
-    params (chunk_idx included so two equal-length chunks of one doc don't
-    XOR-cancel; params included so a codec/threshold change produces new
-    immutable files instead of silently reusing stale ones)."""
+    params: the sum of the row hashes mod 2^128, so a repeated row counts
+    once per copy instead of cancelling like an XOR would (chunk_idx
+    separates the chunks of one doc; params are included so a
+    codec/threshold change produces new immutable files instead of
+    silently reusing stale ones)."""
     acc = _params_hash(params_key)
     for d, n, c in zip(doc_ids, n_toks, chunk_idxs):
-        acc ^= _row_hash(d, c, n, params_key)
-    return f"{acc:032x}"
+        acc += _row_hash(d, c, n, params_key)
+    return f"{acc % 2**128:032x}"
 
 
 def _block_fingerprint(batches: list[pa.RecordBatch], params_key: str, length_field: str) -> str:
@@ -102,12 +104,9 @@ def _block_fingerprint(batches: list[pa.RecordBatch], params_key: str, length_fi
 
 
 def _table_fingerprint(batches: list[pa.RecordBatch], params_key: str, n_value_cols: list[str]) -> str:
-    """Table-writer partition fingerprint: doc_id, the value count summed
-    over ``n_value_cols`` (a null array counts 0), and in the chunk slot
-    the row's rank among the rows with the same (doc_id, count) — with a
-    constant there, two equal rows would XOR-cancel and adding or removing
-    such a pair would reuse a stale data file. The rank makes it
-    independent of the order of the rows, like :func:`_table_rows`."""
+    """Table-writer partition fingerprint: doc_id and the value count
+    summed over ``n_value_cols`` (a null array counts 0), with chunk slot 0
+    (wide rows are not chunked)."""
     doc_ids: list[str] = []
     lengths: list[int] = []
     for b in batches:
@@ -117,12 +116,7 @@ def _table_fingerprint(batches: list[pa.RecordBatch], params_key: str, n_value_c
             for c in n_value_cols
         )
         lengths.extend(int(x) for x in total)
-    seen: dict[tuple, int] = {}
-    slots = []
-    for key in zip(doc_ids, lengths):
-        slots.append(seen.get(key, 0))
-        seen[key] = slots[-1] + 1
-    return _fingerprint(doc_ids, lengths, slots, params_key)
+    return _fingerprint(doc_ids, lengths, [0] * len(doc_ids), params_key)
 
 
 # Lineage totals a writer's data file can carry; a writer's ``stats`` maps
@@ -358,27 +352,27 @@ def _salted_fingerprints(
     """Each partition's fingerprint over (doc_id, ``length_field``,
     chunk_idx) ``rows``, where the column ``part_id`` is the partition the
     writer's repartition sends a row to, in one JVM aggregate that moves no
-    rows: the fingerprint is an XOR over :func:`_row_hash`, so the rows are
-    grouped by partition id and XOR ``sha2`` of the same string, the 16
-    hash bytes as two 8-byte halves (``conv`` to base -10 reads 16 hex
-    digits as a signed long; XOR is bytewise, so the byte order is fixed up
-    once, here). ``aggs`` ride along in the same aggregate; their per-group
-    rows are returned next to the fingerprints."""
+    rows: the fingerprint is a sum of :func:`_row_hash` mod 2^128, so the
+    rows are grouped by partition id and sum ``sha2`` of the same string,
+    its first 32 hex digits as two unsigned 64-bit halves (``conv`` to
+    decimal digits, summed as ``decimal(20, 0)``: the ``decimal(30, 0)``
+    sum cannot overflow under ANSI mode below 10^10 rows, and costs less
+    than four 32-bit long lanes). The halves are carried into one 128-bit
+    sum once, here. ``aggs`` ride along in the same aggregate; their
+    per-group rows are returned next to the fingerprints."""
     row = F.concat_ws(
         ":", F.coalesce(F.col("doc_id"), F.lit("None")), F.col("chunk_idx").cast("string"),
         F.col(length_field).cast("string"), F.lit(params_key),
     )
     h = F.sha2(row, 256)
     parts = rows.groupBy(part_id.alias("part_id")).agg(*[
-        F.bit_xor(F.conv(F.substring(h, 1 + 16 * j, 16), 16, -10).cast("long")).alias(f"x{j}")
+        F.sum(F.conv(F.substring(h, 1 + 16 * j, 16), 16, 10).cast("decimal(20,0)")).alias(f"x{j}")
         for j in (0, 1)
     ], *aggs).collect()
     acc = [_params_hash(params_key)] * num_partitions
     for r in parts:
-        acc[r["part_id"]] ^= int.from_bytes(
-            b"".join((r[f"x{j}"] & (2**64 - 1)).to_bytes(8, "big") for j in (0, 1)), "little"
-        )
-    return [f"{x:032x}" for x in acc], parts
+        acc[r["part_id"]] += (int(r["x0"]) << 64) + int(r["x1"])
+    return [f"{x % 2**128:032x}" for x in acc], parts
 
 
 def _write_kernel(out_dir, commit_mode, fail_at_partition, fingerprint, stats, build):
@@ -689,9 +683,8 @@ def encode_table_to_dir(
     family, one wide row per input row, written as one immutable parquet
     file per partition with the same snapshot/lineage/resume discipline as
     :func:`encode_to_dir`, including the metadata-only full-hit check:
-    one SQL execution with no Python task, where only the (doc_id, value
-    count) rows shuffle, once, to rank duplicate rows
-    (:func:`_table_rows`) before the fingerprint aggregate.
+    one SQL execution with no Python task and no row shuffle, the same
+    fingerprint aggregate as the token writer's over :func:`_table_rows`.
 
     Encode-first by construction: columns are encoded at scan parallelism
     and the shuffle moves encoded wide rows (binary payloads), keyed by a
@@ -743,16 +736,12 @@ def _table_rows(df: DataFrame, cols: list[str], num_partitions: int) -> DataFram
     """(part_id, doc_id, n, chunk_idx) per input row, as the table writer's
     kernel fingerprints it (:func:`_table_fingerprint`): ``part_id`` is the
     hash partitioner of :func:`_by_doc`, ``n`` the value count summed over
-    ``cols`` (a null array counts 0) and ``chunk_idx`` the row's rank
-    among the rows with the same (doc_id, n). The repartition on
-    ``part_id`` is the only shuffle: it already clusters the rank's window
-    and the fingerprint aggregate, so neither adds an exchange."""
+    ``cols`` (a null array counts 0) and ``chunk_idx`` 0."""
     n = sum(F.coalesce(F.array_size(c), F.lit(0)).cast("long") for c in cols)
-    rows = df.select(
-        F.pmod(F.hash("doc_id"), F.lit(num_partitions)).alias("part_id"), "doc_id", n.alias("n")
-    ).repartition("part_id")
-    same = Window.partitionBy("part_id", "doc_id", "n").orderBy("doc_id")
-    return rows.withColumn("chunk_idx", F.row_number().over(same) - 1)
+    return df.select(
+        F.pmod(F.hash("doc_id"), F.lit(num_partitions)).alias("part_id"), "doc_id",
+        n.alias("n"), F.lit(0).alias("chunk_idx"),
+    )
 
 
 def read_table_blocks(spark: SparkSession, out_dir: str, snapshot: int | None = None) -> DataFrame:

@@ -3,7 +3,7 @@
 Each iteration draws random data (runs/zipf/narrow/empty regimes), a random
 codec, and a random operator chain, then checks:
 
-* token: transform_block with the fused composed map decodes exactly like
+* token: transform_block_stats with the fused composed map decodes exactly like
   the stepwise hops AND like numpy on the raw values;
 * typed: transform_typed fused vs stepwise, bit-equal on live slots,
   validity preserved (random null masks, int64 + float64);
@@ -27,7 +27,7 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rle_array_spark.codecs import CODECS, decode_block, encode_block
-from rle_array_spark.codecs.transform import transform_block
+from rle_array_spark.codecs.transform import transform_block_stats
 from rle_array_spark.codecs.typed import decode_typed, encode_typed
 from rle_array_spark.codecs.typed_zip import transform_typed, zip_typed_blocks
 from rle_array_spark.engine import TRANSFORM_OPS
@@ -90,12 +90,12 @@ def token_iter(rng: np.random.Generator) -> None:
             v = f(v, kk)
         return v
 
-    c_f, p_f = transform_block(codec, payload, arr.size, fused)
+    c_f, p_f = transform_block_stats(codec, payload, arr.size, fused)[:2]
     c_s, p_s = codec, payload
     for f, kk in fns:
-        c_s, p_s = transform_block(
+        c_s, p_s = transform_block_stats(
             c_s, p_s, arr.size, lambda v, _f=f, _k=kk: _f(v.astype(np.int64), _k)
-        )
+        )[:2]
     out_f = decode_block(p_f, c_f, arr.size)
     np.testing.assert_array_equal(out_f, decode_block(p_s, c_s, arr.size))
     np.testing.assert_array_equal(out_f, fused(arr).astype(np.int32))

@@ -140,21 +140,22 @@ def test_skip_check_corrupt_file_quarantined(tmp_path):
 
 
 def test_table_fingerprint_duplicate_pair_no_xor_cancel():
-    """With chunk slots pinned to a constant, two identical (doc_id, n)
-    rows XOR-cancel and the fingerprint equals the empty partition's —
-    resume would silently reuse a stale file. Distinct slots break the
-    cancellation (the table writer numbers equal (doc_id, n) rows 0, 1, …)."""
+    """Two identical (doc_id, n) rows must not cancel: under an XOR they
+    did, the fingerprint equalled the empty partition's and resume
+    silently reused a stale file. The fingerprint is a sum of row hashes,
+    so equal rows count once per copy, whatever the chunk slot."""
     from rle_array_spark.tableio import _fingerprint
 
     empty = _fingerprint([], [], [], "k")
-    # old behavior (constant chunk slot): pair cancels — documents the bug
-    assert _fingerprint(["a", "a"], [5, 5], [0, 0], "k") == empty
-    # ordinal slots: no cancellation
-    assert _fingerprint(["a", "a"], [5, 5], [0, 1], "k") != empty
-    # and adding a duplicate pair changes the fingerprint
+    assert _fingerprint(["a", "a"], [5, 5], [0, 0], "k") != empty
+    # adding a duplicate pair changes the fingerprint
     one = _fingerprint(["a"], [5], [0], "k")
-    three = _fingerprint(["a"] * 3, [5] * 3, [0, 1, 2], "k")
+    three = _fingerprint(["a"] * 3, [5] * 3, [0, 0, 0], "k")
     assert one != three
+    # and the order of the rows does not
+    assert _fingerprint(["a", "b", "a"], [5, 2, 5], [0] * 3, "k") == _fingerprint(
+        ["b", "a", "a"], [2, 5, 5], [0] * 3, "k"
+    )
 
 
 # ---------------------------------------------------------------------------

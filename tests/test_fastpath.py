@@ -11,7 +11,7 @@ import pytest
 
 from rle_array_spark.codecs import encode_block
 from rle_array_spark.codecs.core import PerformanceWarning
-from rle_array_spark.codecs.transform import transform_block, transform_block_stats
+from rle_array_spark.codecs.transform import transform_block_stats
 from rle_array_spark.codecs.zip_ops import zip_blocks
 
 RUNS = np.repeat(np.array([5, 9, 5, 0], dtype=np.int32), [100, 1, 200, 57])
@@ -28,14 +28,11 @@ def escalate():
 def test_rle_dict_transform_stays_compressed():
     for codec in ("rle", "dict"):
         payload = encode_block(RUNS, codec)
-        transform_block(codec, payload, RUNS.size, lambda v: v + 1)
         transform_block_stats(codec, payload, RUNS.size, lambda v: v + 1)
 
 
 def test_ngram_transform_warns():
     payload = encode_block(MOTIFS, "ngram")
-    with pytest.raises(PerformanceWarning):
-        transform_block("ngram", payload, MOTIFS.size, lambda v: v + 1)
     with pytest.raises(PerformanceWarning):
         transform_block_stats("ngram", payload, MOTIFS.size, lambda v: v + 1)
 
@@ -89,7 +86,5 @@ def test_generic_fn_transform_fastpath_contract(spark, sequences):
 
 def test_generic_fn_out_of_range_raises():
     payload = encode_block(RUNS, "rle")
-    from rle_array_spark.codecs.transform import transform_block
-
     with pytest.raises(ValueError, match="out of int32 token range"):
-        transform_block("rle", payload, RUNS.size, lambda v: v - 10**10)
+        transform_block_stats("rle", payload, RUNS.size, lambda v: v - 10**10)

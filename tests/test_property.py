@@ -14,7 +14,7 @@ from hypothesis.extra.numpy import arrays
 from rle_array_spark.chooser import choose_codec
 from rle_array_spark.codecs import CODECS, decode_block, encode_block
 from rle_array_spark.codecs.reduce import block_min_max, block_sum, decode_slice
-from rle_array_spark.codecs.transform import transform_block
+from rle_array_spark.codecs.transform import transform_block_stats
 
 token_arrays = arrays(
     dtype=np.int32,
@@ -93,9 +93,11 @@ def test_transform_add_matches_or_raises_on_overflow(arr, codec, k):
     if overflows:
         # silent int32 wraparound would be data corruption; must raise
         with pytest.raises(ValueError, match="int32 token range"):
-            transform_block(codec, payload, arr.size, lambda v: v + k)
+            transform_block_stats(codec, payload, arr.size, lambda v: v + k)
         return
-    new_codec, new_payload = transform_block(codec, payload, arr.size, lambda v: v + k)
+    new_codec, new_payload = transform_block_stats(
+        codec, payload, arr.size, lambda v: v + k
+    )[:2]
     np.testing.assert_array_equal(decode_block(new_payload, new_codec, arr.size), expected)
 
 
@@ -593,7 +595,7 @@ small_tokens = arrays(
 def test_token_chain_fused_equals_stepwise(arr, codec, steps):
     """For ANY codec, array and 1-4-step TRANSFORM_OPS chain (operands
     bounded so no path overflows int32), the fused composed map through
-    transform_block decodes exactly like applying the steps one at a
+    transform_block_stats decodes exactly like applying the steps one at a
     time, and both equal numpy."""
     from rle_array_spark.engine import TRANSFORM_OPS
 
@@ -607,12 +609,12 @@ def test_token_chain_fused_equals_stepwise(arr, codec, steps):
             v = f(v, k)
         return v
 
-    c_f, p_f = transform_block(codec, payload, arr.size, fused_fn)
+    c_f, p_f = transform_block_stats(codec, payload, arr.size, fused_fn)[:2]
     c_s, p_s = codec, payload
     for f, k in zip(fns, ks):
-        c_s, p_s = transform_block(
+        c_s, p_s = transform_block_stats(
             c_s, p_s, arr.size, lambda v, _f=f, _k=k: _f(v.astype(np.int64), _k)
-        )
+        )[:2]
     out_f = decode_block(p_f, c_f, arr.size)
     out_s = decode_block(p_s, c_s, arr.size)
     np.testing.assert_array_equal(out_f, out_s)

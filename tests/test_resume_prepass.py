@@ -161,8 +161,8 @@ def test_table_prepass_fingerprints_match_write_kernel(spark, tmp_path, commit_m
 
 
 def test_table_prepass_null_arrays_and_row_order(spark, tmp_path):
-    """A null array counts 0 values on both sides, and the kernel's rank
-    slot does not depend on the order of duplicate rows."""
+    """A null array counts 0 values on both sides, and the kernel's
+    fingerprint does not depend on the order of duplicate rows."""
     rows = [
         ("a", "s", [1, 2], [1.0, None], ["x", None]), ("b", "s", [3], None, None),
         ("c", "s", [4, 4], [2.0], ["y"]), ("b", "s", [3], None, None),
@@ -186,7 +186,44 @@ def test_table_prepass_null_arrays_and_row_order(spark, tmp_path):
     })
     fp = tableio._table_fingerprint([batch], key, cols)
     assert fp == tableio._table_fingerprint([batch.take([3, 2, 1, 0])], key, cols)
-    assert fp == tableio._fingerprint(["b", "a", "b", "b"], [3, 6, 0, 3], [0, 0, 0, 1], key)
+    assert fp == tableio._fingerprint(["b", "a", "b", "b"], [3, 6, 0, 3], [0, 0, 0, 0], key)
+
+
+@pytest.mark.parametrize("writer", ["tokens", "table"])
+def test_rerun_with_added_duplicate_rows(spark, tmp_path, writer):
+    """Two identical rows added to a committed input must be encoded on the
+    rerun: an XOR fingerprint cancelled them, so every partition came back
+    skipped and both rows were silently lost."""
+    from rle_array_spark.engine import decode_df
+    from rle_array_spark.tableframe import decode_table_df
+    from rle_array_spark.tableio import read_blocks, read_table_blocks
+
+    def df(docs):
+        return spark.createDataFrame(
+            [(d, "s", [i + 1] * 3, 3) for i, d in enumerate(docs)],
+            "doc_id string, source string, toks array<int>, n_tok int",
+        ).withColumnRenamed("toks", "tokens" if writer == "tokens" else "toks")
+
+    out = str(tmp_path / writer)
+    if writer == "tokens":
+        def write(docs):
+            return encode_to_dir(df(docs), out, num_partitions=4)
+
+        def read():
+            return [r["doc_id"] for r in decode_df(read_blocks(spark, out)).collect()]
+    else:
+        def write(docs):
+            return encode_table_to_dir(df(docs), ["toks"], out, num_partitions=4)
+
+        def read():
+            rows = decode_table_df(read_table_blocks(spark, out), {"toks": "int"})
+            return [r["doc_id"] for r in rows.collect()]
+
+    write(["a", "b"])
+    lineage = write(["a", "b", "c", "c"])
+    assert "encoded" in {r["status"] for r in lineage}
+    assert sum(r["n_rows"] for r in lineage) == 4
+    assert sorted(read()) == ["a", "b", "c", "c"]
 
 
 @pytest.mark.parametrize("chunk_tokens", [None, K])
@@ -231,14 +268,15 @@ def test_null_int_array_in_table_writer(spark, tmp_path):
 
 # SHA-256 of the data files both writers commit for the inputs of
 # test_data_file_bytes_pinned (P = 4, the session of conftest.py). The
-# token writer's files are named by partition and fingerprint; the table
-# writer's by partition here, since its fingerprints changed when the row
-# slot became a rank (MIGRATION.md) while its bytes did not.
+# token writer's files are named by partition and fingerprint (the names
+# moved once, when the fingerprint became a sum of row hashes; MIGRATION.md);
+# the table writer's by partition here, since its fingerprints changed
+# twice while its bytes did not.
 TOKEN_FILES = {
-    "part-00000-6352c5c5550c9d46.parquet": "d10c3faa93c72635dc624fc73f69a4c2cf799c6ae6bd823e38547cf9f898793a",
-    "part-00001-0c0c0906a0e3073b.parquet": "0412203a8e1f7c45c0282dda52f78589ce925141d4edb496fb0f07ff68b613e0",
-    "part-00002-f1d3020de505ee2c.parquet": "42fc3a81e7d8e40132a5ecf3eadf2318a929392ee0607a9718938c611335db4c",
-    "part-00003-a80793bc09d79401.parquet": "ec13d3d6cac7f820c9818abe1323dc930c1dfef7ba0746908f5633f046e15b7a",
+    "part-00000-81ff24feece2dd43.parquet": "d10c3faa93c72635dc624fc73f69a4c2cf799c6ae6bd823e38547cf9f898793a",
+    "part-00001-6470c69719ec0ac9.parquet": "0412203a8e1f7c45c0282dda52f78589ce925141d4edb496fb0f07ff68b613e0",
+    "part-00002-431aecceda98cf45.parquet": "42fc3a81e7d8e40132a5ecf3eadf2318a929392ee0607a9718938c611335db4c",
+    "part-00003-b3357e87e188d86e.parquet": "ec13d3d6cac7f820c9818abe1323dc930c1dfef7ba0746908f5633f046e15b7a",
 }
 TABLE_FILES = {
     "00000": "65ed11db912f4f4c5c50b5a47a499a0fa3d9307eb0170fd1a83dfd5bde0e4192",
@@ -342,11 +380,10 @@ def test_full_hit_runs_no_encode(spark, sequences, tmp_path, writer):
     nodes = [n["nodeName"] for n in runs[0]["nodes"]]
     assert not [n for n in nodes if "Python" in n or "Arrow" in n or "Pandas" in n], nodes
     if writer != "table":
-        # the fingerprint aggregate: per-partition XORs shuffle, no rows
+        # the fingerprint aggregate: per-partition sums shuffle, no rows
         assert stages_r == 2 and 0 < shuffle_r < shuffle_w / 10, (stages_r, shuffle_r, shuffle_w)
     else:
-        # doc_id rows shuffle once, in place of payloads, into the rank
-        # window and the fingerprint aggregate
+        # the same aggregate: per-partition sums shuffle, no rows
         assert stages_r == 2 and 0 < shuffle_r < shuffle_w, (stages_r, shuffle_r, shuffle_w)
     assert _file_hashes(out) == files
     # manifest mode rebuilds records from the files, where wall time is 0

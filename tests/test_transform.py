@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rle_array_spark.codecs import CODECS, decode_block, encode_block
-from rle_array_spark.codecs.transform import transform_block
+from rle_array_spark.codecs.transform import transform_block_stats
 from rle_array_spark.engine import encode_df, transform_blocks, decode_stats_df
 
 ARRAYS = {
@@ -29,7 +29,7 @@ ARRAYS = {
 def test_transform_equals_decode_fn_encode(codec, name, op):
     arr = ARRAYS[name]
     payload = encode_block(arr, codec)
-    new_codec, new_payload = transform_block(codec, payload, arr.size, op)
+    new_codec, new_payload = transform_block_stats(codec, payload, arr.size, op)[:2]
     out = decode_block(new_payload, new_codec, arr.size)
     np.testing.assert_array_equal(out, op(arr.astype(np.int64)).astype(np.int32))
 
@@ -38,7 +38,7 @@ def test_transform_rle_merges_runs():
     # floor-div collapses adjacent runs 4,5 → 2,2 which must merge
     arr = np.repeat(np.array([4, 5, 9], dtype=np.int32), [10, 10, 5])
     payload = encode_block(arr, "rle")
-    _, new_payload = transform_block("rle", payload, arr.size, lambda v: v // 2)
+    _, new_payload = transform_block_stats("rle", payload, arr.size, lambda v: v // 2)[:2]
     import struct
 
     n_runs = struct.unpack_from("<I", new_payload, 0)[0]
@@ -57,7 +57,7 @@ def test_transform_rle_work_is_run_proportional():
 
     t0 = time.monotonic()
     for _ in range(100):
-        transform_block("rle", payload, arr.size, lambda v: v + 1)
+        transform_block_stats("rle", payload, arr.size, lambda v: v + 1)
     assert time.monotonic() - t0 < 0.5  # 100 transforms of 1M elements
 
 

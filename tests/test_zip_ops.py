@@ -257,7 +257,7 @@ def test_zip_compare_mask_compresses():
     import numpy as np
 
     from rle_array_spark.codecs import encode_block
-    from rle_array_spark.codecs.reduce import _rle_parts
+    from rle_array_spark.codecs.rle import decode_runs
     from rle_array_spark.codecs.zip_ops import zip_blocks
     from rle_array_spark.engine import ZIP_OPS
 
@@ -266,7 +266,7 @@ def test_zip_compare_mask_compresses():
     _, payload = zip_blocks(
         "rle", encode_block(a, "rle"), "rle", encode_block(b, "rle"), 3000, ZIP_OPS["gt"]
     )
-    vals, lens = _rle_parts(payload)
+    vals, lens = decode_runs(payload)
     assert vals.size == 3 and vals.tolist() == [0, 1, 0]
 
 
