@@ -40,7 +40,13 @@ class Family:
 
     def ddl(self, names=None, prefix: str = "") -> str:
         types = dict(self.fields)
-        return ", ".join(f"{prefix}{n} {types[n]}" for n in (names or self.names))
+        return ", ".join(f"{ident(prefix + n)} {types[n]}" for n in (names or self.names))
+
+
+def ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier (backtick-quoted), for DDL and
+    SQL text that carry a caller's column names."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _token_stats(codec, payload, n, core=None):

@@ -760,7 +760,8 @@ def filter_strings(
         keep_code = cmp_tab == value
         if op == "ne":
             keep_code = ~keep_code
-        keep_slots = keep_code[codes]
+        # an all-null block has an empty table: no slot can match
+        keep_slots = keep_code[codes] if table.size else np.zeros(n, dtype=bool)
         if valid is not None:
             keep_slots = keep_slots & valid
         kept = codes[keep_slots]

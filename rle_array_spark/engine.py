@@ -73,7 +73,15 @@ def session(
     driver_memory: str = _default_driver_memory(),
 ) -> SparkSession:
     """Local session with the engine's required configs. On a real cluster
-    the same configs ride spark-submit --conf; nothing here is local-only."""
+    the same configs ride spark-submit --conf; nothing here is local-only.
+
+    The session turns off PySpark's DataFrame call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled=false``), so a
+    DataFrame error message carries no block naming the Python line that
+    built the failing expression. The capture costs py4j round trips on
+    every ``Column`` built; a caller who wants the block builds their own
+    session (a static conf: it cannot be set on a running one) — the
+    engine works with any session."""
     return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -108,6 +116,7 @@ def session(
         # writeback and adds multi-second variance to shuffle-heavy stages.
         # On a real cluster this is the usual local-SSD spark.local.dir.
         .config("spark.local.dir", "/dev/shm/spark-local")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
 
@@ -268,7 +277,8 @@ def salted_repartition(
     partitions left a 4.4×-median straggler partition; 8×num_partitions
     brings max/median under ~1.6).
     """
-    return df.repartition(num_partitions, *_salted_keys(df, num_partitions, salt_buckets))
+    keys = _salted_keys(df, num_partitions, salt_buckets)
+    return df.repartition(num_partitions, *map(F.expr, keys))
 
 
 def salted_partition_id(df: DataFrame, num_partitions: int) -> Column:
@@ -276,23 +286,24 @@ def salted_partition_id(df: DataFrame, num_partitions: int) -> Column:
     to, as a column: Spark's hash partitioner is ``pmod(hash(keys), P)``
     (Murmur3, seed 42 — the same function as SQL ``hash``), so this needs
     no shuffle."""
-    return F.pmod(F.hash(*_salted_keys(df, num_partitions)), F.lit(num_partitions))
+    return F.expr(f"pmod(hash({', '.join(_salted_keys(df, num_partitions))}), {num_partitions})")
 
 
-def _salted_keys(
-    df: DataFrame, num_partitions: int, salt_buckets: int | None = None
-) -> list[Column]:
+def _salted_keys(df: DataFrame, num_partitions: int, salt_buckets: int | None = None) -> list[str]:
+    """The repartition keys as SQL text (one parse per key instead of a
+    py4j call per expression node): source, the log2 length bucket and a
+    doc_id salt. chunk_idx joins the salt when present so the chunks of
+    one giant sequence spread instead of inheriting the doc's single salt
+    value."""
     if salt_buckets is None:
         salt_buckets = num_partitions * 8
     length_col = "n_tok" if "n_tok" in df.columns else "n_values"
-    length_bucket = F.ceil(F.log2(F.col(length_col) + F.lit(2.0))).cast("int")
-    # chunk_idx joins the salt when present so the chunks of one giant
-    # sequence spread instead of inheriting the doc's single salt value
-    salt_cols = [F.col("doc_id")] + (
-        [F.col("chunk_idx")] if "chunk_idx" in df.columns else []
-    )
-    salt = F.pmod(F.xxhash64(*salt_cols), F.lit(salt_buckets))
-    return [F.col("source"), length_bucket, salt]
+    salt_cols = "doc_id, chunk_idx" if "chunk_idx" in df.columns else "doc_id"
+    return [
+        "source",
+        f"CAST(ceil(log2({length_col} + 2.0D)) AS INT)",
+        f"pmod(xxhash64({salt_cols}), {salt_buckets})",
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -952,10 +963,8 @@ def decode_df(blocks: DataFrame, reassemble_chunks: bool = False) -> DataFrame:
     # the reference's concat semantics (_algorithms.py:62-96) at the
     # transport cost of the encoded form.
     grouped = blocks.groupBy("doc_id").agg(
-        F.first("source").alias("source"),
-        F.expr(
-            "array_sort(collect_list(struct(chunk_idx, codec, payload, n_values)))"
-        ).alias("chunks"),
+        F.expr("first(source) AS source"),
+        F.expr("array_sort(collect_list(struct(chunk_idx, codec, payload, n_values))) AS chunks"),
     )
 
     def reassemble_kernel(batches):

@@ -22,7 +22,7 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from rle_array_spark.blocks import FAMILIES, decode_df, wide_arrays
+from rle_array_spark.blocks import FAMILIES, decode_df, ident, wide_arrays
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
 from rle_array_spark.codecs import CODECS
 from rle_array_spark.engine import _encode_column, _list_to_numpy
@@ -91,15 +91,18 @@ def _encode_wide(df: DataFrame, cols: list[str], codec: str, threshold: float) -
                 continue
             arrays = [batch.column("doc_id"), batch.column("source")]
             names = ["doc_id", "source"]
-            for cname in cols:
+            for i, cname in enumerate(cols):
                 kind = kinds[cname]
-                fields = _ENCODERS[kind](batch.column(cname), codec, threshold)
+                fields = _ENCODERS[kind](batch.column(2 + i), codec, threshold)
                 col_arrays, col_names = wide_arrays(FAMILIES[kind], fields, cname)
                 arrays += col_arrays
                 names += col_names
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return df.select("doc_id", "source", *cols).mapInArrow(kernel, schema)
+    # The kernel reads the array columns by position: PySpark's mapInArrow
+    # looks up every input column by name, which fails on a backtick.
+    picked = df.selectExpr("doc_id", "source", *[f"{ident(c)} AS _{i}" for i, c in enumerate(cols)])
+    return picked.mapInArrow(kernel, schema)
 
 
 def decode_table_df(

@@ -47,7 +47,7 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rle_array_spark.blocks import TOKENS
+from rle_array_spark.blocks import TOKENS, ident
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
 from rle_array_spark.engine import (
     _encode_batch,
@@ -103,14 +103,14 @@ def _block_fingerprint(batches: list[pa.RecordBatch], params_key: str, length_fi
     return _fingerprint(doc_ids, lengths, chunk_idxs, params_key)
 
 
-def _table_fingerprint(batches: list[pa.RecordBatch], params_key: str, n_value_cols: list[str]) -> str:
-    """Table-writer partition fingerprint: doc_id and the value count
-    summed over ``n_value_cols`` (a null array counts 0), with chunk slot 0
-    (wide rows are not chunked)."""
+def _table_fingerprint(batches: list[pa.RecordBatch], params_key: str, n_value_cols: list) -> str:
+    """Table-writer partition fingerprint: doc_id (the first column) and
+    the value count summed over ``n_value_cols`` (names or positions; a
+    null array counts 0), with chunk slot 0 (wide rows are not chunked)."""
     doc_ids: list[str] = []
     lengths: list[int] = []
     for b in batches:
-        doc_ids.extend(b.column("doc_id").to_pylist())
+        doc_ids.extend(b.column(0).to_pylist())
         total = sum(
             pc.fill_null(b.column(c), 0).to_numpy(zero_copy_only=False).astype("int64")
             for c in n_value_cols
@@ -148,10 +148,7 @@ AUTO_CHUNK_PER_PARTITION = 8
 def auto_chunk_tokens(df: DataFrame, num_partitions: int) -> int | None:
     """Pick a chunk size from corpus shape (one metadata-only aggregate over
     the stored ``n_tok`` column; see :func:`_auto_chunk_size`)."""
-    row = df.agg(
-        F.sum(F.col("n_tok").cast("long")).alias("total"),
-        F.max("n_tok").alias("longest"),
-    ).collect()[0]
+    row = df.selectExpr("sum(CAST(n_tok AS BIGINT)) AS total", "max(n_tok) AS longest").collect()[0]
     return _auto_chunk_size(row["total"], row["longest"], num_partitions)
 
 
@@ -315,21 +312,22 @@ def _chunk_rows(df: DataFrame, chunk_tokens: int | None, length_field: str) -> D
     (``array_size`` of null is null whatever the ANSI setting, where
     ``size`` may give null or -1). ``n_tok_stored`` carries the input's
     ``n_tok`` column for chunk sizing (:func:`_sizing_aggs`); it never
-    enters a fingerprint."""
-    n = F.coalesce(F.array_size("tokens"), F.lit(0))
-    stored = F.col("n_tok").alias("n_tok_stored")
+    enters a fingerprint.
+
+    This plan and the fingerprint aggregate are SQL text: one parse per
+    expression, where the Column builders cost a py4j round trip per
+    node."""
+    n = "coalesce(array_size(tokens), 0)"
     if not chunk_tokens:
-        return df.select(
-            "doc_id", "source", n.alias(length_field), F.lit(0).alias("chunk_idx"), stored
+        return df.selectExpr(
+            "doc_id", "source", f"{n} AS {length_field}", "0 AS chunk_idx", "n_tok AS n_tok_stored"
         )
-    k = F.lit(chunk_tokens)
-    n_chunks = F.greatest(F.lit(1), F.ceil(n / k).cast("int"))
-    return df.select(
-        "doc_id", "source", n.alias("n"), stored,
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-    ).select(
-        "doc_id", "source",
-        F.least(k, F.col("n") - F.col("chunk_idx") * k).alias(length_field),
+    k = int(chunk_tokens)
+    return df.selectExpr(
+        "doc_id", "source", f"{n} AS n", "n_tok AS n_tok_stored",
+        f"explode(sequence(0, greatest(1, CAST(ceil({n} / {k}) AS INT)) - 1)) AS chunk_idx",
+    ).selectExpr(
+        "doc_id", "source", f"least({k}, n - chunk_idx * {k}) AS {length_field}",
         "chunk_idx", "n_tok_stored",
     )
 
@@ -338,11 +336,17 @@ def _sizing_aggs() -> tuple[Column, Column]:
     """:func:`auto_chunk_tokens`'s figures over :func:`_chunk_rows` rows,
     per group: the stored ``n_tok`` summed over documents (each counted on
     its first chunk) and its maximum."""
-    n_tok = F.col("n_tok_stored")
     return (
-        F.sum(F.when(F.col("chunk_idx") == 0, n_tok.cast("long"))).alias("total"),
-        F.max(n_tok).alias("longest"),
+        F.expr("sum(CASE WHEN chunk_idx = 0 THEN CAST(n_tok_stored AS BIGINT) END) AS total"),
+        F.expr("max(n_tok_stored) AS longest"),
     )
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string expression. Hex-encoded, so no
+    character of ``s`` (a quote, a backslash, a column name of the table
+    writer's params key) nor the parser's escape setting can change it."""
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
 
 
 def _salted_fingerprints(
@@ -360,13 +364,13 @@ def _salted_fingerprints(
     than four 32-bit long lanes). The halves are carried into one 128-bit
     sum once, here. ``aggs`` ride along in the same aggregate; their
     per-group rows are returned next to the fingerprints."""
-    row = F.concat_ws(
-        ":", F.coalesce(F.col("doc_id"), F.lit("None")), F.col("chunk_idx").cast("string"),
-        F.col(length_field).cast("string"), F.lit(params_key),
+    h = (
+        "sha2(concat_ws(':', coalesce(doc_id, 'None'), CAST(chunk_idx AS STRING), "
+        f"CAST({length_field} AS STRING), {_sql_string(params_key)}), 256)"
     )
-    h = F.sha2(row, 256)
     parts = rows.groupBy(part_id.alias("part_id")).agg(*[
-        F.sum(F.conv(F.substring(h, 1 + 16 * j, 16), 16, 10).cast("decimal(20,0)")).alias(f"x{j}")
+        F.expr(f"sum(CAST(conv(substring({h}, {1 + 16 * j}, 16), 16, 10) AS DECIMAL(20,0)))"
+               f" AS x{j}")
         for j in (0, 1)
     ], *aggs).collect()
     acc = [_params_hash(params_key)] * num_partitions
@@ -714,16 +718,22 @@ def encode_table_to_dir(
         if hits is not None:
             return _commit_snapshot(out_dir, meta, params_key, hits)
 
+    wide = encode_table_df(df, cols, codec=codec)
+    names = wide.columns
+
     def build(in_batches: list[pa.RecordBatch]) -> pa.Table | None:
         if not in_batches:
             return None
-        return pa.Table.from_batches(in_batches).sort_by([("doc_id", "ascending")])
+        table = pa.Table.from_batches(in_batches).rename_columns(names)
+        return table.sort_by([("doc_id", "ascending")])
 
+    n_value_idx = [names.index(c) for c in n_value_cols]
     kernel = _write_kernel(
         out_dir, commit_mode, fail_at_partition,
-        lambda batches: _table_fingerprint(batches, params_key, n_value_cols), stats, build,
+        lambda batches: _table_fingerprint(batches, params_key, n_value_idx), stats, build,
     )
-    parted = _by_doc(encode_table_df(df, cols, codec=codec), num_partitions)
+    # the kernel's input goes by position, as in tableframe._encode_wide
+    parted = _by_doc(wide, num_partitions).toDF(*[f"_{i}" for i in range(len(names))])
     lineage_rows = [r.asDict() for r in parted.mapInArrow(kernel, LINEAGE_SCHEMA).collect()]
     return _commit_snapshot(out_dir, meta, params_key, lineage_rows)
 
@@ -737,10 +747,9 @@ def _table_rows(df: DataFrame, cols: list[str], num_partitions: int) -> DataFram
     kernel fingerprints it (:func:`_table_fingerprint`): ``part_id`` is the
     hash partitioner of :func:`_by_doc`, ``n`` the value count summed over
     ``cols`` (a null array counts 0) and ``chunk_idx`` 0."""
-    n = sum(F.coalesce(F.array_size(c), F.lit(0)).cast("long") for c in cols)
-    return df.select(
-        F.pmod(F.hash("doc_id"), F.lit(num_partitions)).alias("part_id"), "doc_id",
-        n.alias("n"), F.lit(0).alias("chunk_idx"),
+    n = " + ".join(f"CAST(coalesce(array_size({ident(c)}), 0) AS BIGINT)" for c in cols)
+    return df.selectExpr(
+        f"pmod(hash(doc_id), {num_partitions}) AS part_id", "doc_id", f"{n} AS n", "0 AS chunk_idx"
     )
 
 

@@ -47,11 +47,11 @@ def test_rerun_skips_all_partitions(spark, sequences, tmp_path):
     assert _file_hashes(out) == before
 
 
-def test_resume_after_injected_failure(spark, sequences, tmp_path):
+def test_resume_after_injected_failure(spark, sequences, tmp_path, settled_count):
     out = str(tmp_path / "enc")
     with pytest.raises(Exception, match="injected failure"):
         encode_to_dir(sequences, out, num_partitions=N_PARTS, fail_at_partition=N_PARTS - 1)
-    done_before = len(glob.glob(os.path.join(out, "blocks", "*.parquet")))
+    done_before = settled_count(os.path.join(out, "blocks", "*.parquet"))
     assert 0 < done_before < N_PARTS  # some partitions committed, not all
 
     lineage = encode_to_dir(sequences, out, num_partitions=N_PARTS)
@@ -69,7 +69,7 @@ def test_resume_after_injected_failure(spark, sequences, tmp_path):
     assert _file_hashes(out) == _file_hashes(ref)
 
 
-def test_manifest_mode_resume_without_sidecars(spark, sequences, tmp_path):
+def test_manifest_mode_resume_without_sidecars(spark, sequences, tmp_path, settled_count):
     """Sidecar-less (object-store-safe) protocol: the data file itself is
     the checkpoint. Crash → resume must skip committed partitions with NO
     lineage sidecars on disk, and lineage stats must be rebuilt exactly."""
@@ -79,8 +79,8 @@ def test_manifest_mode_resume_without_sidecars(spark, sequences, tmp_path):
             sequences, out, num_partitions=N_PARTS,
             fail_at_partition=N_PARTS - 1, commit_mode="manifest",
         )
+    done_before = settled_count(os.path.join(out, "blocks", "*.parquet"))
     assert glob.glob(os.path.join(out, "lineage", "*.json")) == []
-    done_before = len(glob.glob(os.path.join(out, "blocks", "*.parquet")))
     assert 0 < done_before < N_PARTS
 
     lineage = encode_to_dir(

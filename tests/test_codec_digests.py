@@ -298,7 +298,7 @@ def _string_digest() -> str:
 
 TOKEN_DIGEST = "4da4d4d60a62a07bbfafee2bf24a932313d1d4857f276f928b10ddf78ee7d08c"
 TYPED_DIGEST = "6ca385445b044ea3cf9c84348aa3c3022ebd9cc61f99cd385ba3ec0a7ab09428"
-STRING_DIGEST = "3a06c2774fec08bcb52d25097f95ed7a4bf9561c564148c628aa210effc97471"
+STRING_DIGEST = "aa1d039d17ef531800e5a54ac1e52252f1bd30c0fddef228e81c90c7e74506fa"
 
 
 def test_token_codec_ops_pinned():

@@ -350,6 +350,18 @@ def test_filter_strings_byte_canonical_dict():
     assert pl == fresh_p
 
 
+
+@pytest.mark.parametrize("codec", ["srle", "sdict", "sraw", "sfsst", "auto"])
+def test_filter_strings_all_null_block(codec):
+    """An all-null block (an empty table under srle/sdict) filters to the
+    empty sraw block under every codec, with or without a predicate map."""
+    from rle_array_spark.codecs.strings import filter_strings
+
+    name, p = encode_string_block(pa.array([None] * 6, type=pa.string()), codec)
+    empty = encode_string_block(pa.array([], type=pa.string()), "sraw")
+    for op, pre_fn in (("eq", None), ("ne", None), ("eq", str.upper)):
+        assert filter_strings(name, p, 6, op, "x", pre_fn=pre_fn) == (*empty, 0)
+
 def test_filter_typed_df_and_filter_strings_df(spark):
     from pyspark.sql import functions as F
 

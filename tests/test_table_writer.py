@@ -52,14 +52,14 @@ def _roundtrip_ok(spark, mixed, out):
 
 
 @pytest.mark.parametrize("commit_mode", ["sidecar", "manifest"])
-def test_table_writer_crash_resume(spark, mixed, tmp_path, commit_mode):
+def test_table_writer_crash_resume(spark, mixed, tmp_path, commit_mode, settled_count):
     out = str(tmp_path / f"enc_{commit_mode}")
     with pytest.raises(Exception, match="injected failure"):
         encode_table_to_dir(
             mixed, COLS, out, num_partitions=N_PARTS,
             fail_at_partition=N_PARTS - 1, commit_mode=commit_mode,
         )
-    done = len(glob.glob(os.path.join(out, "blocks", "*.parquet")))
+    done = settled_count(os.path.join(out, "blocks", "*.parquet"))
     assert done > 0
     lineage = encode_table_to_dir(
         mixed, COLS, out, num_partitions=N_PARTS, commit_mode=commit_mode
