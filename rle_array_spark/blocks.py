@@ -256,15 +256,20 @@ def decode_df(blocks: DataFrame, cols: dict) -> DataFrame:
     (family, Spark element type, input column prefix))."""
     need = ["doc_id", "source"] + [p + f for _, _, p in cols.values() for f in _PAYLOAD]
     schema = ", ".join(["doc_id string", "source string"]
-                       + [f"{c} array<{t}>" for c, (_, t, _) in cols.items()])
+                       + [f"{ident(c)} array<{t}>" for c, (_, t, _) in cols.items()])
+    fams = [fam for fam, _, _ in cols.values()]
+    k = len(_PAYLOAD)
 
     def kernel(batches):
         for batch in batches:
             if batch.num_rows:
                 yield pa.RecordBatch.from_arrays(
-                    [batch.column("doc_id"), batch.column("source")]
-                    + [decode_lists(fam, *payload_cols(batch, p)) for fam, _, p in cols.values()],
+                    batch.columns[:2] + [decode_lists(fam, *batch.columns[2 + i * k:2 + (i + 1) * k])
+                                         for i, fam in enumerate(fams)],
                     names=["doc_id", "source", *cols],
                 )
 
-    return blocks.select(*need).mapInArrow(kernel, schema)
+    # The kernel reads the payload columns by position: PySpark's
+    # mapInArrow looks every input column up by its unquoted name.
+    picked = blocks.selectExpr(*[f"{ident(n)} AS _{i}" for i, n in enumerate(need)])
+    return picked.mapInArrow(kernel, schema)

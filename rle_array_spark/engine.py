@@ -18,6 +18,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from rle_array_spark import _daemon
 from rle_array_spark.blocks import (
     TOKENS,
     carried,
@@ -81,9 +82,19 @@ def session(
     built the failing expression. The capture costs py4j round trips on
     every ``Column`` built; a caller who wants the block builds their own
     session (a static conf: it cannot be set on a running one) — the
-    engine works with any session."""
+    engine works with any session.
+
+    It also starts Spark's Python daemon through ``rle_array_spark._daemon``
+    (``spark.python.daemon.module``), which loads pyspark from a
+    byte-compiled copy of Spark's ``pyspark.zip`` and reads each zip
+    archive once before it forks a worker, when the worker interpreter can
+    import that module (``_daemon.worker_can_import``); Spark's own daemon
+    otherwise."""
+    builder = SparkSession.builder
+    if _daemon.worker_can_import():
+        builder = builder.config("spark.python.daemon.module", _daemon.__name__)
     return (
-        SparkSession.builder.master(f"local[{cores}]")
+        builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

@@ -12,8 +12,6 @@ blocks append downstream.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession
 
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
@@ -21,9 +19,10 @@ from rle_array_spark.engine import encode_df
 from rle_array_spark.tokenize import SEQUENCES_SCHEMA
 
 
-@contextlib.contextmanager
-def _state_partitions_conf(spark: SparkSession, n: int | None):
-    """Scope ``spark.sql.shuffle.partitions`` around a streaming drain.
+def _drain(spark: SparkSession, writer, state_partitions: int | None = None):
+    """Start ``writer`` as an availableNow query and wait for it to end,
+    the query's ``spark.sql.shuffle.partitions`` set to
+    ``state_partitions`` when given.
 
     Spark fixes a stateful operator's state-store partition count from
     this conf at the checkpoint's FIRST batch, and every micro-batch
@@ -31,27 +30,30 @@ def _state_partitions_conf(spark: SparkSession, n: int | None):
     per partition — so for a low-cardinality grouping key (a handful of
     sources, N pack shards) the session-wide default buys no parallelism
     and multiplies per-batch commit overhead (measured: 32 → 8 cut a
-    4-micro-batch drain 7.3 s → 5.2 s on the sf0.1 gate corpus). The conf
-    is restored on exit; an EXISTING checkpoint keeps its recorded count
-    regardless of this setting.
+    4-micro-batch drain 7.3 s → 5.2 s on the sf0.1 gate corpus). An
+    EXISTING checkpoint keeps its recorded count regardless.
 
-    The conf is session-global, so don't START two streaming queries
-    concurrently from one session while inside this scope — every drain
-    in this module blocks (awaitTermination) before exiting it, which
-    keeps the sequential case safe."""
-    if n is None:
-        yield
-        return
-    if int(n) < 1:
-        # fail at call time, not with an opaque planner error after the
-        # checkpoint directory exists (same policy as pack_stream seq_len)
-        raise ValueError(f"state_partitions must be >= 1, got {n}")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    ``.start()`` clones the session, conf included, for the query, so the
+    conf is set for that call alone: batch queries run during the drain
+    see the session's own value. It is still session-global for that
+    call: don't start another query from the session on another thread
+    meanwhile."""
+    writer = writer.trigger(availableNow=True)
+    if state_partitions is None:
+        query = writer.start()
+    else:
+        if int(state_partitions) < 1:
+            # fail at call time, not with an opaque planner error after the
+            # checkpoint directory exists (same policy as pack_stream seq_len)
+            raise ValueError(f"state_partitions must be >= 1, got {state_partitions}")
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
+        try:
+            query = writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    query.awaitTermination()
+    return query
 
 
 def read_sequence_stream(
@@ -88,9 +90,7 @@ def encode_stream(
         .outputMode("append")
     )
     if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
+        return _drain(spark, writer)
     return writer.trigger(processingTime="10 seconds").start()
 
 
@@ -136,7 +136,7 @@ def running_source_stats_stream(
     Drains with availableNow and appends one row per touched source per
     micro-batch to ``out_dir`` (an auditable compression-progress ledger).
     ``state_partitions`` right-sizes the stateful operator for the
-    low-cardinality ``source`` key (see :func:`_state_partitions_conf`).
+    low-cardinality ``source`` key (see :func:`_drain`).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -149,17 +149,13 @@ def running_source_stats_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _state_partitions_conf(spark, state_partitions):
-        query = (
-            stats.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return query
+    writer = (
+        stats.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    return _drain(spark, writer, state_partitions)
 
 
 RUNNING_QUANTILES_SCHEMA = "source string, n_toks long, p25 int, p50 int, p75 int"
@@ -226,7 +222,7 @@ def running_quantiles_stream(
     actually exercised — the gated parity query uses 1.
 
     ``state_partitions`` right-sizes the stateful operator for the
-    low-cardinality ``source`` key (see :func:`_state_partitions_conf`);
+    low-cardinality ``source`` key (see :func:`_drain`);
     on a real cluster pick roughly max(#distinct sources, executor
     count)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -240,17 +236,13 @@ def running_quantiles_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _state_partitions_conf(spark, state_partitions):
-        query = (
-            quants.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return query
+    writer = (
+        quants.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    return _drain(spark, writer, state_partitions)
 
 
 def encode_table_stream(
@@ -279,9 +271,7 @@ def encode_table_stream(
         .outputMode("append")
     )
     if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
+        return _drain(spark, writer)
     return writer.trigger(processingTime="10 seconds").start()
 
 
@@ -363,16 +353,13 @@ def dedup_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    query = (
+    writer = (
         survivors.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
-    return query
+    return _drain(spark, writer)
 
 
 # ---------------------------------------------------------------------------
@@ -472,7 +459,7 @@ def pack_stream(
     micro-batches of N files (exercises the cross-batch carry).
     ``state_partitions`` right-sizes the stateful operator — there are
     exactly ``n_shards`` state keys, so more partitions than that only
-    add per-micro-batch state commits (see :func:`_state_partitions_conf`).
+    add per-micro-batch state commits (see :func:`_drain`).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -492,14 +479,10 @@ def pack_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _state_partitions_conf(spark, state_partitions):
-        query = (
-            packed.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return query
+    writer = (
+        packed.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    return _drain(spark, writer, state_partitions)

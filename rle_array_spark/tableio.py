@@ -641,7 +641,10 @@ def read_manifest(out_dir: str) -> dict:
 
 def vacuum(out_dir: str, keep_snapshots: int | None = None) -> list[str]:
     """Delete data files referenced by no (kept) snapshot; optionally expire
-    all but the newest ``keep_snapshots`` manifests. Returns deleted paths."""
+    all but the newest ``keep_snapshots`` (>= 1) manifests. Returns deleted
+    paths."""
+    if keep_snapshots is not None and keep_snapshots < 1:
+        raise ValueError(f"keep_snapshots must be >= 1, got {keep_snapshots}")
     snaps = sorted(
         glob.glob(os.path.join(out_dir, "snapshots", "v*.json")),
         key=lambda p: int(os.path.basename(p)[1:-5]),

@@ -169,6 +169,26 @@ def test_vacuum_removes_unreferenced_files(spark, sequences, tmp_path):
     assert verify_roundtrip(sequences, blocks) == 0
 
 
+@pytest.mark.parametrize("keep", [0, -1])
+def test_vacuum_rejects_keep_below_one(tmp_path, keep):
+    """keep_snapshots < 1 raises before any file is touched (0 used to keep
+    every snapshot, -1 to expire the oldest one and its data file)."""
+    import json
+
+    from rle_array_spark.tableio import vacuum
+
+    out = tmp_path / "enc"
+    (out / "snapshots").mkdir(parents=True)
+    (out / "blocks").mkdir()
+    for v in (1, 2):
+        (out / "blocks" / f"part-{v}.parquet").write_bytes(b"x")
+        (out / "snapshots" / f"v{v}.json").write_text(json.dumps({"files": [f"part-{v}.parquet"]}))
+    before = sorted(p.name for p in out.rglob("*"))
+    with pytest.raises(ValueError, match="keep_snapshots"):
+        vacuum(str(out), keep_snapshots=keep)
+    assert sorted(p.name for p in out.rglob("*")) == before
+
+
 def test_crash_leaves_no_visible_snapshot(spark, sequences, tmp_path):
     out = str(tmp_path / "enc")
     with pytest.raises(Exception, match="injected failure"):

@@ -82,3 +82,23 @@ def test_table_writer_quotes_column_names(spark, tmp_path):
     assert {r["status"] for r in encode_table_to_dir(df, cols, out, num_partitions=parts)} == {
         "skipped"
     }
+
+
+def test_table_decode_quotes_column_names(spark, tmp_path):
+    """A snapshot whose array column name holds a space and a backtick
+    decodes to the input rows."""
+    from rle_array_spark.tableframe import decode_table_df
+    from rle_array_spark.tableio import read_table_blocks
+
+    col = "to ks`x"
+    df = _table_df(spark, col)
+    out = str(tmp_path / "odd")
+    encode_table_to_dir(df, [col, "vals"], out, num_partitions=4)
+    decoded = decode_table_df(read_table_blocks(spark, out), {col: "int", "vals": "double"})
+    assert decoded.columns == ["doc_id", "source", col, "vals"]
+
+    def rows(d):
+        return sorted(tuple(r) for r in d.select("doc_id", "source", F.col(f"`{col.replace('`', '``')}`"),
+                                                 "vals").collect())
+
+    assert rows(decoded) == rows(df)

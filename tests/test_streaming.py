@@ -415,3 +415,35 @@ def test_state_partitions_rejects_nonpositive(spark, tmp_path):
                 spark, str(tmp_path / "in"), str(tmp_path / "out"),
                 str(tmp_path / "ckpt"), state_partitions=bad,
             )
+
+
+def test_state_partitions_scoped_to_start(spark, tmp_path, monkeypatch):
+    """The query copies ``spark.sql.shuffle.partitions`` at ``.start()``:
+    a batch query run while the stream drains sees the session's own
+    value, and the stream's first batch still records ``n`` state
+    partitions."""
+    import json
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from rle_array_spark.streaming import running_quantiles_stream
+
+    seen = []
+    wait = StreamingQuery.awaitTermination
+
+    def drain(query, *args):
+        seen.append(spark.sql("SET spark.sql.shuffle.partitions").collect()[0][1])
+        return wait(query, *args)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", drain)
+    _write_shard(str(tmp_path / "in"), 0)
+    ckpt = str(tmp_path / "ckpt")
+    session_value = spark.conf.get("spark.sql.shuffle.partitions")
+    assert session_value != "3"
+    running_quantiles_stream(spark, str(tmp_path / "in"), str(tmp_path / "out"), ckpt,
+                             state_partitions=3)
+    assert seen == [session_value]
+    with open(os.path.join(ckpt, "offsets", "0")) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    assert meta["conf"]["spark.sql.shuffle.partitions"] == "3"
+    assert len([d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()]) == 3
