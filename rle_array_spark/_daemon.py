@@ -18,16 +18,19 @@ Before the daemon imports any pyspark code, this module
 The copy lives in ``$XDG_CACHE_HOME/rle_array_spark`` (``~/.cache`` by
 default), a directory of mode 0700 owned by the user. It is named by a key
 of the archive's path, size, mtime and the interpreter's bytecode tag, and
-is built in a ``.tmp-*`` directory, then published by one rename, so a
-stale or half-built copy is never used. Any error falls back to the
+is built in a ``.tmp-<pid>-*`` directory, then published by one rename, so
+a stale or half-built copy is never used; the next build removes the
+``.tmp-<pid>-*`` entries of builders that died. Any error falls back to the
 archive itself. Remove the directory to clear the cache.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import importlib.machinery as machinery
 import os
+import re
 import shutil
 import site
 import stat
@@ -56,6 +59,59 @@ def private_dir(path: str) -> str:
     return path
 
 
+def alive(pid: int) -> bool:
+    """Whether process ``pid`` runs (a zombie does not)."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except OSError:  # no /proc: os.kill found it
+        return True
+
+
+def claim(path: str) -> bool:
+    """Create ``path`` holding this process's pid (``O_EXCL``); False when
+    a running process holds it. A claim whose process is gone is taken
+    over."""
+    for _ in range(2):
+        try:
+            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o600)
+        except FileExistsError:
+            try:
+                with open(path) as f:
+                    pid = int(f.read())
+            except (OSError, ValueError):  # still being written, or just released
+                return False
+            if alive(pid):
+                return False
+            with contextlib.suppress(OSError):
+                os.unlink(path)
+            continue
+        with os.fdopen(fd, "w") as f:
+            f.write(str(os.getpid()))
+        return True
+    return False
+
+
+def sweep(root: str) -> None:
+    """Remove the ``.tmp-<pid>-*`` entries under ``root`` whose builder
+    process is gone."""
+    for name in os.listdir(root):
+        m = re.match(r"\.tmp-(\d+)-", name)
+        if m and not alive(int(m.group(1))):
+            path = os.path.join(root, name)
+            if os.path.isdir(path) and not os.path.islink(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                with contextlib.suppress(OSError):
+                    os.unlink(path)
+
+
 def copy_key(archive: str) -> str:
     st = os.stat(archive)
     raw = "\0".join([os.path.realpath(archive), str(st.st_size), str(st.st_mtime_ns),
@@ -71,7 +127,8 @@ def compiled_copy(archive: str, root: str | None = None) -> str:
     key = copy_key(archive)
     final = os.path.join(root, f"{os.path.basename(archive)}-{key}")
     if not os.path.isdir(final):
-        tmp = tempfile.mkdtemp(prefix=".tmp-", dir=root)
+        sweep(root)
+        tmp = tempfile.mkdtemp(prefix=f".tmp-{os.getpid()}-", dir=root)
         try:
             with zipfile.ZipFile(archive) as z:
                 z.extractall(tmp)

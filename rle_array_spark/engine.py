@@ -10,6 +10,7 @@ AQE for free (SURVEY.md §4).
 
 from __future__ import annotations
 
+import numbers
 import os
 
 import numpy as np
@@ -18,7 +19,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rle_array_spark import _daemon
+from rle_array_spark import _daemon, _jvmcds
 from rle_array_spark.blocks import (
     TOKENS,
     carried,
@@ -89,11 +90,16 @@ def session(
     byte-compiled copy of Spark's ``pyspark.zip`` and reads each zip
     archive once before it forks a worker, when the worker interpreter can
     import that module (``_daemon.worker_can_import``); Spark's own daemon
-    otherwise."""
+    otherwise.
+
+    Its driver JVM maps Spark's classes from a class-data-sharing archive
+    (``spark.driver.defaultJavaOptions``), built once per JDK and Spark
+    install by a child process on the first session of a machine, when the
+    Spark conf dir holds only templates (``rle_array_spark._jvmcds``)."""
     builder = SparkSession.builder
     if _daemon.worker_can_import():
         builder = builder.config("spark.python.daemon.module", _daemon.__name__)
-    return (
+    builder = (
         builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -128,8 +134,11 @@ def session(
         # On a real cluster this is the usual local-SSD spark.local.dir.
         .config("spark.local.dir", "/dev/shm/spark-local")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
     )
+    with _jvmcds.driver_options() as opts:
+        if opts:
+            builder = builder.config("spark.driver.defaultJavaOptions", opts)
+        return builder.getOrCreate()
 
 
 # ---------------------------------------------------------------------------
@@ -477,6 +486,26 @@ def _encode_batch(
     return emit(TOKENS, c)
 
 
+def _positive_int(x) -> bool:
+    return isinstance(x, numbers.Integral) and not isinstance(x, bool) and x >= 1
+
+
+def check_encode_args(codec: str, chunk_tokens=None, num_partitions=None, codecs=CODECS,
+                      auto_chunks: bool = False) -> None:
+    """Raise ``ValueError`` at the call for an encode argument that the
+    kernels would reject only inside an executor, or silently ignore: a
+    codec outside ``codecs`` and ``auto``, a ``chunk_tokens`` other than
+    None, an int >= 1 (or ``"auto"`` with ``auto_chunks``), a
+    ``num_partitions`` other than None or an int >= 1."""
+    if codec != "auto" and codec not in codecs:
+        raise ValueError(f"unknown codec {codec!r}; expected 'auto' or one of {sorted(codecs)}")
+    if not (chunk_tokens is None or _positive_int(chunk_tokens) or (auto_chunks and chunk_tokens == "auto")):
+        allowed = "None, 'auto'" if auto_chunks else "None"
+        raise ValueError(f"chunk_tokens must be {allowed} or an int >= 1, got {chunk_tokens!r}")
+    if not (num_partitions is None or _positive_int(num_partitions)):
+        raise ValueError(f"num_partitions must be an int >= 1, got {num_partitions!r}")
+
+
 def encode_df(
     df: DataFrame,
     codec: str = "auto",
@@ -503,6 +532,7 @@ def encode_df(
     ``num_partitions`` the encode kernel cuts the chunks itself, so the
     plan has one Python map node and each token crosses into Python once.
     """
+    check_encode_args(codec, chunk_tokens, num_partitions)
     if num_partitions:
         df = salted_repartition(pack_tokens_df(df, chunk_tokens=chunk_tokens), num_partitions)
     cut = None if num_partitions else chunk_tokens  # packed rows arrive already cut

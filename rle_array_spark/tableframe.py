@@ -25,9 +25,14 @@ from pyspark.sql import DataFrame
 from rle_array_spark.blocks import FAMILIES, decode_df, ident, wide_arrays
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
 from rle_array_spark.codecs import CODECS
-from rle_array_spark.engine import _encode_column, _list_to_numpy
+from rle_array_spark.codecs.strings import STRING_CODECS
+from rle_array_spark.codecs.typed import TYPED_CODECS
+from rle_array_spark.engine import _encode_column, _list_to_numpy, check_encode_args
 from rle_array_spark.strings import encode_string_column
 from rle_array_spark.typed import encode_typed_rows
+
+# the codec names a table encode accepts besides "auto": any family's
+TABLE_CODECS = (*CODECS, *TYPED_CODECS, *STRING_CODECS)
 
 
 def _int_column(col, codec: str, threshold: float) -> dict:
@@ -37,12 +42,12 @@ def _int_column(col, codec: str, threshold: float) -> dict:
 
 
 def _typed_column(col, codec: str, threshold: float) -> dict:
-    return encode_typed_rows(col, codec if codec in ("trle", "tdict", "traw") else "auto",
+    return encode_typed_rows(col, codec if codec in TYPED_CODECS else "auto",
                              zone_maps=False)
 
 
 def _string_column(col, codec: str, threshold: float) -> dict:
-    return encode_string_column(col, codec if codec in ("srle", "sdict", "sraw", "sfsst") else "auto")
+    return encode_string_column(col, codec if codec in STRING_CODECS else "auto")
 
 
 # kind → the family's column encoder: an Arrow list column → {field: values};
@@ -79,6 +84,7 @@ def encode_table_df(df: DataFrame, cols: list[str], codec: str = "auto") -> Data
     """(doc_id, source, *array columns) → one wide encoded row per input
     row, each column under its dtype's codec family. Scan-parallel,
     shuffle-free."""
+    check_encode_args(codec, codecs=TABLE_CODECS)
     return _encode_wide(df, cols, codec, DEFAULT_THRESHOLD)
 
 

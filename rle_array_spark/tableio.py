@@ -51,6 +51,7 @@ from rle_array_spark.blocks import TOKENS, ident
 from rle_array_spark.chooser import DEFAULT_THRESHOLD
 from rle_array_spark.engine import (
     _encode_batch,
+    check_encode_args,
     encode_df,
     pack_tokens_df,
     salted_partition_id,
@@ -233,6 +234,7 @@ def encode_to_dir(
       names). Both modes produce byte-identical data files and can resume
       each other's partial runs (sidecar-mode reruns re-encode
       manifest-written partitions at worst — never corrupt them)."""
+    check_encode_args(codec, chunk_tokens, num_partitions, auto_chunks=True)
     _prepare_dir(out_dir, commit_mode)
 
     def key(k: int | None) -> str:
@@ -700,8 +702,9 @@ def encode_table_to_dir(
     for giant-sequence corpora). Lineage totals aggregate across all
     encoded columns (values and encoded bytes; the raw-side totals stay 0).
     An empty partition writes no file."""
-    from rle_array_spark.tableframe import encode_table_df, table_schema
+    from rle_array_spark.tableframe import TABLE_CODECS, encode_table_df, table_schema
 
+    check_encode_args(codec, num_partitions=num_partitions, codecs=TABLE_CODECS)
     _prepare_dir(out_dir, commit_mode)
     wide_ddl, kinds = table_schema(df, cols)
     params_key = (
