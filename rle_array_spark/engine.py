@@ -967,13 +967,69 @@ def _decode_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
     return flat, offsets
 
 
+def _doc_starts(ids: pa.Array) -> np.ndarray:
+    """Row indices where a new document begins in a doc_id-sorted column
+    (row 0 included); two nulls are the same document, as in a groupBy."""
+    cur, prev = ids[1:], ids[:-1]
+    differs = pc.coalesce(pc.not_equal(cur, prev), pc.xor(pc.is_null(cur), pc.is_null(prev)))
+    return np.concatenate(([0], np.flatnonzero(differs.to_numpy(zero_copy_only=False)) + 1))
+
+
+def _stitch_docs(batches):
+    """mapInArrow kernel over block rows sorted by (doc_id, chunk_idx, …):
+    decode each batch once, then emit every document that lies wholly
+    inside it as a list slice of the batch's flat buffer (no copy). Only
+    the batch's last document is carried, as a list of arrays, and
+    concatenated once when the next document starts or the input ends —
+    a document may hold more chunks than one Arrow batch. ``source`` is
+    the document's first row's."""
+    carry = None  # [doc_id, source] (1-row arrays) + token arrays of the open doc
+
+    def flush():
+        doc_id, source, parts = carry
+        tokens = np.concatenate(parts)
+        return pa.RecordBatch.from_arrays(
+            [doc_id, source, _numpy_to_list(tokens, np.array([0, tokens.size]))],
+            names=["doc_id", "source", "tokens"],
+        )
+
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        flat, offsets = _decode_rows(batch)
+        ids = batch.column("doc_id")
+        bounds = np.append(_doc_starts(ids), n)
+        if carry is not None and carry[0][0].as_py() == ids[0].as_py():
+            carry[2].append(flat[offsets[0] : offsets[bounds[1]]])
+            if bounds.size == 2:  # the whole batch continues the open document
+                continue
+            bounds = bounds[1:]
+        if carry is not None:
+            yield flush()
+        last = int(bounds[-2])
+        if bounds.size > 2:
+            whole = bounds[:-1]
+            lo, hi = offsets[whole[0]], offsets[last]
+            yield pa.RecordBatch.from_arrays(
+                [ids.take(whole[:-1]), batch.column("source").take(whole[:-1]),
+                 _numpy_to_list(flat[lo:hi], offsets[whole] - lo)],
+                names=["doc_id", "source", "tokens"],
+            )
+        carry = [ids.slice(last, 1), batch.column("source").slice(last, 1),
+                 [flat[offsets[last] : offsets[n]]]]
+    if carry is not None:
+        yield flush()
+
+
 def decode_df(blocks: DataFrame, reassemble_chunks: bool = False) -> DataFrame:
     """encoded-blocks DataFrame → (doc_id, source, tokens) DataFrame.
 
     ``reassemble_chunks=True`` stitches chunked sequences back together
-    (groupBy doc_id + ordered flatten — the reference's concat semantics,
-    _algorithms.py:62-96, as a relational aggregate). Leave False for
-    unchunked corpora: the default path is shuffle-free."""
+    (the reference's concat semantics, _algorithms.py:62-96): rows sharing
+    a doc_id become one row whose tokens concatenate in (chunk_idx, codec,
+    payload, n_values) order. Leave False for unchunked corpora: the
+    default path is shuffle-free."""
 
     def kernel(batches):
         for batch in batches:
@@ -997,49 +1053,21 @@ def decode_df(blocks: DataFrame, reassemble_chunks: bool = False) -> DataFrame:
             kernel, "doc_id string, source string, chunk_idx int, tokens array<int>"
         ).select("doc_id", "source", "tokens")
 
-    # Reassemble in the ENCODED domain: group the compressed payloads by
-    # doc_id (the exchange ships binary payloads, ~2.5× smaller than raw
-    # array<int>), then decode + concatenate per doc in one kernel AFTER
-    # the shuffle. Never ships a decoded token array through an exchange —
-    # the reference's concat semantics (_algorithms.py:62-96) at the
-    # transport cost of the encoded form.
-    grouped = blocks.groupBy("doc_id").agg(
-        F.expr("first(source) AS source"),
-        F.expr("array_sort(collect_list(struct(chunk_idx, codec, payload, n_values))) AS chunks"),
+    # Reassemble in the ENCODED domain: hash the compressed payloads to
+    # their doc_id's partition (the exchange ships binary payloads, ~2.5×
+    # smaller than raw array<int>) and sort them by document, then decode
+    # and stitch in one kernel AFTER the shuffle. No aggregate buffers the
+    # payloads per document, and no decoded token array crosses an
+    # exchange. DISTRIBUTE BY without a count is repartition(doc_id), so
+    # AQE still coalesces the small exchange; SORT BY sorts within
+    # partitions. As SQL text the plan costs ~48 py4j round trips, the
+    # same chain of Column builders ~86.
+    ordered = blocks.sparkSession.sql(
+        "SELECT doc_id, source, chunk_idx, codec, payload, n_values FROM {blocks} "
+        "DISTRIBUTE BY doc_id SORT BY doc_id, chunk_idx, codec, payload, n_values",
+        blocks=blocks,
     )
-
-    def reassemble_kernel(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            la = batch.column("chunks")
-            if isinstance(la, pa.ChunkedArray):
-                la = la.combine_chunks()
-            list_off = la.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            list_off = list_off - list_off[0]
-            flat_struct = la.flatten()
-            sub = pa.RecordBatch.from_arrays(
-                [
-                    flat_struct.field("codec"),
-                    flat_struct.field("payload"),
-                    flat_struct.field("n_values"),
-                ],
-                names=["codec", "payload", "n_values"],
-            )
-            flat, chunk_off = _decode_rows(sub)
-            doc_off = chunk_off[list_off]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("source"),
-                    _numpy_to_list(flat, doc_off),
-                ],
-                names=["doc_id", "source", "tokens"],
-            )
-
-    return grouped.mapInArrow(reassemble_kernel, DECODED_SCHEMA).select(
-        "doc_id", "source", "tokens"
-    )
+    return ordered.mapInArrow(_stitch_docs, DECODED_SCHEMA)
 
 
 def _stats_batch(batch: pa.RecordBatch, flat: np.ndarray, offsets: np.ndarray) -> pa.RecordBatch:

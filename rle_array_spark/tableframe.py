@@ -29,7 +29,7 @@ from rle_array_spark.codecs.strings import STRING_CODECS
 from rle_array_spark.codecs.typed import TYPED_CODECS
 from rle_array_spark.engine import _encode_column, _list_to_numpy, check_encode_args
 from rle_array_spark.strings import encode_string_column
-from rle_array_spark.typed import encode_typed_rows
+from rle_array_spark.typed import _SPARK_ELEM, encode_typed_rows
 
 # the codec names a table encode accepts besides "auto": any family's
 TABLE_CODECS = (*CODECS, *TYPED_CODECS, *STRING_CODECS)
@@ -59,11 +59,28 @@ def _kind(elem: str) -> str:
     return "int" if elem in ("int", "integer") else "string" if elem == "string" else "typed"
 
 
-def _spark_kind(spark_type: str) -> str:
+# element types (as ``DataFrame.dtypes`` spells them) the typed family
+# round-trips: typed._SPARK_ELEM's, with Spark's names for long/short/byte
+_TYPED_ELEMS = frozenset(
+    {"long": "bigint", "short": "smallint", "byte": "tinyint"}.get(t, t) for t in _SPARK_ELEM.values()
+)
+
+
+def _spark_kind(col: str, spark_type: str) -> str:
+    """The codec family of array column ``col``; ``ValueError`` at the call
+    for a non-array column or an element type no family round-trips
+    (decimal, date, binary, nested arrays, structs, …)."""
     inner = spark_type.strip()
     if not inner.startswith("array<"):
-        raise ValueError(f"encode_table_df needs array columns, got {spark_type}")
-    return _kind(inner[6:-1])
+        raise ValueError(f"encode_table_df needs array columns, got {col!r}: {spark_type}")
+    elem = inner[6:-1]
+    kind = _kind(elem)
+    if kind == "typed" and elem not in _TYPED_ELEMS:
+        raise ValueError(
+            f"encode_table_df cannot encode column {col!r} of type {spark_type}: element "
+            f"types are int, string or one of {', '.join(sorted(_TYPED_ELEMS))}"
+        )
+    return kind
 
 
 def wide_ddl(kinds: dict[str, str]) -> str:
@@ -76,7 +93,7 @@ def wide_ddl(kinds: dict[str, str]) -> str:
 def table_schema(df: DataFrame, cols: list[str]) -> tuple[str, dict[str, str]]:
     """(wide output schema DDL, column → kind map) from the input schema."""
     types = dict(df.dtypes)
-    kinds = {c: _spark_kind(types[c]) for c in cols}
+    kinds = {c: _spark_kind(c, types[c]) for c in cols}
     return wide_ddl(kinds), kinds
 
 

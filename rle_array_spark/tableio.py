@@ -514,13 +514,23 @@ def _commit_snapshot(out_dir: str, meta: dict, params_key: str, lineage_rows: li
     (rename only — no hard links, which fuse mounts of HDFS or object
     stores lack). Each committer re-checks the newest version after
     replacing the pointer and repeats until they agree; the last pointer
-    write is thus always the newest snapshot's."""
+    write is thus always the newest snapshot's.
+
+    Every data file the snapshot names is checked before a version is
+    claimed: one that a ``vacuum`` deleted while this writer ran raises
+    ``FileNotFoundError`` instead of committing a snapshot no reader can
+    read."""
     lineage_rows = sorted(lineage_rows, key=lambda r: r["part_id"])
     files = []
     for r in lineage_rows:
         path = _data_path(out_dir, r["part_id"], r["fingerprint"])
-        if r["n_rows"] > 0 or os.path.exists(path):  # an empty table-writer partition has none
+        if os.path.exists(path):
             files.append(os.path.basename(path))
+        elif r["n_rows"] > 0:  # an empty table-writer partition has no file
+            raise FileNotFoundError(
+                f"partition {r['part_id']}: data file {path} is gone (vacuumed while "
+                "this write ran?); no snapshot committed"
+            )
     snapshots = os.path.join(out_dir, "snapshots")
     version = 1 + _latest_version(out_dir)
     while not _claim(os.path.join(snapshots, f"v{version}.claim")):
@@ -705,8 +715,8 @@ def encode_table_to_dir(
     from rle_array_spark.tableframe import TABLE_CODECS, encode_table_df, table_schema
 
     check_encode_args(codec, num_partitions=num_partitions, codecs=TABLE_CODECS)
+    wide_ddl, kinds = table_schema(df, cols)  # raises on an unsupported column
     _prepare_dir(out_dir, commit_mode)
-    wide_ddl, kinds = table_schema(df, cols)
     params_key = (
         f"table|{codec}|{num_partitions}|{','.join(f'{c}:{kinds[c]}' for c in cols)}"
     )
@@ -745,7 +755,9 @@ def encode_table_to_dir(
 
 
 def _by_doc(rows: DataFrame, num_partitions: int) -> DataFrame:
-    return rows.repartition(num_partitions, "doc_id").sortWithinPartitions("doc_id")
+    # no JVM sort: the write kernel's ``build`` sorts each partition by
+    # doc_id, and the partition fingerprint is a sum, blind to row order
+    return rows.repartition(num_partitions, "doc_id")
 
 
 def _table_rows(df: DataFrame, cols: list[str], num_partitions: int) -> DataFrame:

@@ -5,6 +5,7 @@ runs or any output directory is made, instead of failing in an executor
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -73,3 +74,21 @@ def test_table_encode_takes_every_family_codec(spark, tiny, tmp_path):
                            lambda: encode_table_df(tiny, ["tokens", "xs"], codec="nope"))
     for codec in ("rle", "trle", "sdict"):  # a family-foreign name falls back to auto
         assert encode_table_df(tiny, ["tokens", "xs"], codec=codec).count() == 4
+
+
+@pytest.mark.parametrize("expr, spark_type", [
+    ("array(0.5, 1.5)", "array<decimal(2,1)>"),
+    ("array(date'2020-01-02')", "array<date>"),
+    ("array(X'0102')", "array<binary>"),
+    ("array(array(1, 2))", "array<array<int>>"),
+    ("array(named_struct('a', 1))", "array<struct<a:int>>"),
+])
+def test_table_encode_rejects_unsupported_element_types(spark, tiny, tmp_path, expr, spark_type):
+    """An element type no codec family round-trips raises at the call,
+    naming the column and its type, before the writer makes its dir."""
+    df = tiny.selectExpr("*", f"{expr} AS bad")
+    match = re.escape(f"column 'bad' of type {spark_type}")
+    out = str(tmp_path / "out")
+    _raises_before_any_job(spark, out, match, lambda: encode_table_df(df, ["tokens", "bad"]))
+    _raises_before_any_job(spark, out, match,
+                           lambda: encode_table_to_dir(df, ["xs", "bad"], out))

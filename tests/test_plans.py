@@ -88,22 +88,28 @@ def test_broadcast_join_plan(spark):
 
 def test_chunk_reassembly_shuffles_encoded_payloads(spark, sequences):
     """decode_df(reassemble_chunks=True) must shuffle the ENCODED payloads
-    (binary) grouped by doc_id — never decoded array<int> tokens. The
+    (binary) hashed by doc_id — never decoded array<int> tokens. The
     exchange input carries payload/codec/n_values; `tokens` only exists
-    after the post-shuffle decode kernel."""
+    after the post-shuffle stitch kernel, and no aggregate buffers the
+    payloads per document."""
     from rle_array_spark.engine import decode_df
 
     blocks = encode_df(sequences, codec="auto", chunk_tokens=64)
     plan = explain_str(decode_df(blocks, reassemble_chunks=True), "simple")
     lines = plan.splitlines()
-    exchange_i = next(i for i, l in enumerate(lines) if "Exchange hashpartitioning(doc_id" in l)
-    partial_i = next(i for i, l in enumerate(lines) if "partial_collect_list" in l)
-    reasm_i = next(i for i, l in enumerate(lines) if "reassemble_kernel" in l)
-    # map-side partial collect of the ENCODED struct feeds the exchange…
-    assert partial_i > exchange_i and "payload" in lines[partial_i]
-    assert "tokens" not in lines[partial_i]
-    # …and the decode kernel runs strictly AFTER the shuffle
-    assert reasm_i < exchange_i
+    exchanges = [i for i, l in enumerate(lines) if "Exchange hashpartitioning(doc_id" in l]
+    assert len(exchanges) == 1
+    exchange_i = exchanges[0]
+    stitch_i = next(i for i, l in enumerate(lines) if "_stitch_docs" in l)
+    # the exchange's input is the ENCODED block columns…
+    child = lines[exchange_i + 1]
+    assert all(c in child for c in ("codec", "payload", "n_values"))
+    assert "tokens" not in child
+    # …the decode kernel runs strictly AFTER the shuffle…
+    assert stitch_i < exchange_i
+    # …and no aggregate runs over the payloads
+    assert "collect_list" not in plan and "array_sort" not in plan
+    assert "Aggregate" not in plan
 
 
 def test_take_blocks_plan_is_narrow(spark, sequences):

@@ -447,6 +447,29 @@ def test_commit_without_hard_links(tmp_path, monkeypatch):
     assert sorted(os.listdir(os.path.join(out, "snapshots"))) == ["v2.claim", "v2.json"]
 
 
+def test_commit_refuses_a_vacuumed_file(tmp_path):
+    """A second writer's data files are not committed yet, so a vacuum
+    during its run deletes them. Its commit then raises, naming the
+    partition, and claims no version, instead of committing a snapshot
+    whose files are gone."""
+    out = str(tmp_path / "race")
+    for sub in ("blocks", "snapshots"):
+        os.makedirs(os.path.join(out, sub))
+
+    def written(part_id, fp):
+        with open(tableio._data_path(out, part_id, fp), "wb") as f:
+            f.write(b"x")
+        return {"part_id": part_id, "fingerprint": fp, "n_rows": 3}
+
+    tableio._commit_snapshot(out, {"codec": "a"}, "k", [written(0, "a" * 32)])
+    second = [written(0, "b" * 32), written(1, "c" * 32)]
+    assert len(tableio.vacuum(out)) == 2
+    with pytest.raises(FileNotFoundError, match="partition 0"):
+        tableio._commit_snapshot(out, {"codec": "b"}, "k", second)
+    assert sorted(os.listdir(os.path.join(out, "snapshots"))) == ["v1.claim", "v1.json"]
+    assert tableio.read_manifest(out)["latest"] == 1
+
+
 def test_concurrent_commits_all_survive(tmp_path):
     """Committers racing for the same next version: each snapshot is
     created exclusively, a loser retries at N+1, and the pointer ends on
